@@ -23,36 +23,6 @@ object Scratch {
       println(s"TIMING entry ($n rows)")
       spark.stop(); return
     }
-    if (args.lift(1).contains("rgprofile")) {
-      import org.apache.spark.sql.functions._
-      def t[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[info] RG $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-      val cells = GridSource.lineitemCells(spark, dir)
-        .select(col("x"), col("y"), col("v").cast("long").as("vv"))
-        .where(pmod(col("vv"), lit(4)) === 0)
-        .select(col("x"), col("y"), pmod(col("vv"), lit(3)).as("cls"))
-      val g = t("materialize") {
-        cells.select(col("x").cast("long").as("x"), col("y").cast("long").as("y"),
-          col("cls").cast("long").as("cls"))
-          .withColumn("id", col("y") * 256 + col("x")).localCheckpoint()
-      }
-      val edges = Seq((1, 0), (0, 1)).map { case (dx, dy) =>
-        g.as("a").join(g.as("b"),
-            col("b.x") === col("a.x") + dx && col("b.y") === col("a.y") + dy &&
-              col("b.cls") === col("a.cls"))
-          .select(col("a.id").as("d1"), col("b.id").as("d2"))
-      }.reduce(_ union _)
-      t("edges count")(println("[info] RG n_edges " + edges.count()))
-      val comp = t("cc")(graft.pipeline.Dedup.connectedComponents(
-        edges, g.select(col("id").as("doc_id"))).localCheckpoint())
-      t("final join")(println("[info] RG rows " +
-        g.join(comp, g("id") === comp("doc_id")).count()))
-      spark.stop(); return
-    }
     if (args.lift(1).contains("stress")) {
       // 16x-unioned lineitem (~10M rows at sf0.1) through the core
       // raster path: rasterize -> focal mean -> zonal-style flatten
@@ -137,61 +107,6 @@ object Scratch {
           java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
           println(s"PLAN $n -> $p")
         } catch { case e: Throwable => println(s"PLAN $n FAILED: ${e.getMessage}") }
-      }
-      spark.stop(); return
-    }
-    if (args.lift(1).contains("cdprofile")) {
-      import org.apache.spark.sql.functions._
-      // per-job timing: submitted->end wall plus job count per phase
-      val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]()
-      var jobCount = 0
-      var jobWall = 0L
-      val durs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.put(js.jobId, (System.nanoTime(), js.stageInfos.size))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val v = jobs.remove(je.jobId)
-          if (v != null) {
-            jobCount += 1; jobWall += System.nanoTime() - v._1
-            durs.add(f"${(System.nanoTime() - v._1) / 1e6}%.0f/${v._2}")
-          }
-        }
-      })
-      def t[A](label: String)(f: => A): A = {
-        jobCount = 0; jobWall = 0L; durs.clear()
-        val t0 = System.nanoTime(); val r = f
-        Thread.sleep(200) // let listener events drain
-        import scala.jdk.CollectionConverters._
-        println(f"TIMING $label ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"jobs=$jobCount jobwall=${jobWall / 1e9}%.2f s " +
-          s"[ms/stages: ${durs.asScala.mkString(" ")}]")
-        r
-      }
-      (1 to 2).foreach { i =>
-        val fr0 = t(s"build+normalize_$i") {
-          val l = GridSource.lineitemLayer(spark, dir).normalize(1.0, 10.0)
-          val p = l.copy(df = l.df.localCheckpoint())
-          p.df.write.format("noop").mode("overwrite").save(); p
-        }
-        val pts = GridSource.supplierPoints(spark, dir)
-        val dist = t(s"costDistanceTiled_$i") {
-          val d = raster.Distance.costDistanceTiled(fr0, pts,
-            maxCost = SparkEntry.CostDistanceMaxCost)
-          d.df.write.format("noop").mode("overwrite").save(); d
-        }
-        t(s"backtrack_dist_$i") {
-          raster.Distance.costPath(fr0, pts,
-            maxCost = SparkEntry.CostDistanceMaxCost, maxDriverCells = 0,
-            distance = Some(dist))
-            .write.format("noop").mode("overwrite").save()
-        }
-        t(s"backtrack_driver_$i") {
-          raster.Distance.costPath(fr0, pts,
-            maxCost = SparkEntry.CostDistanceMaxCost,
-            distance = Some(dist))
-            .write.format("noop").mode("overwrite").save()
-        }
       }
       spark.stop(); return
     }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -34,6 +35,19 @@ final case class ClassifyMinDistExpr(child: Expression, cids: Array[Int],
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(ArrayType(DoubleType)))
+
+  /** A null cell would read as 0.0 and classify as a real value, so
+    * band tiles that can hold nulls are refused at analysis (NoData is
+    * NaN in this engine, never null). */
+  override def checkInputDataTypes(): TypeCheckResult = super.checkInputDataTypes() match {
+    case TypeCheckResult.TypeCheckSuccess => child.dataType match {
+      case ArrayType(ArrayType(_, true), _) => TypeCheckResult.TypeCheckFailure(
+        "classify_mindist: band tiles must not contain nulls (containsNull = false); " +
+          "a null cell would classify as 0.0")
+      case _ => TypeCheckResult.TypeCheckSuccess
+    }
+    case failure => failure
+  }
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 

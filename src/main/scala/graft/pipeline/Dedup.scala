@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
+import graft.{Fixpoint, LongBlock}
+
 /** Per-doc SimHash accumulator: folds each token hash into a single
   * fixed-width buffer of per-bit signed counts, so ONE array crosses
   * the exchange per (doc x upstream-partition) instead of `bits`
@@ -986,48 +988,49 @@ object Dedup {
     * converges in O(log n) rounds regardless of component diameter,
     * unlike min-label propagation whose round count follows the
     * longest path (a 1M-doc duplicate chain would need 1M rounds).
-    * Each round is two groupBy/join exchanges on LONG keys;
-    * intermediate edge sets are eagerly localCheckpoint'd (CLAUDE.md
-    * iterative-loop rule) so the lineage doesn't stack per round.
+    * Each round runs on the [[graft.Fixpoint]] kernel as ONE job:
+    * the edge set is one sorted, distinct block of (u, v) longs per
+    * partition (keyed by u), large-star and small-star are primitive
+    * per-partition passes between three raw-long re-keys, and
+    * convergence is an exact comparison of each partition's old and
+    * new edge block, counted in the checkpoint's own job.
     *
     * At the fixpoint every component is a star centered on its
     * minimum node, so the result is canonical and deterministic no
     * matter how the rounds interleaved.
     *
-    * Small-graph fast path: when the deduped edge set fits the
+    * Small-graph fast path: when the pair rows fit the
     * `maxDriverEdges` guard (default 2^22 pairs ~ 64 MB), the
     * components are solved with an in-memory union-find and the
     * labels broadcast-joined back — one collect instead of O(log n)
-    * iterative rounds, each of which costs fixed job overhead that
-    * dwarfs the data at small scale. The guard keeps the 100 TB
-    * story: a web-scale duplicate graph overflows the threshold and
-    * takes the distributed loop (same labels either way — both
-    * fixpoints are min-id-per-component). The decontamination
+    * iterative rounds, each of which costs a job, its stages and a
+    * checkpoint that dwarf the data at small scale. The guard keeps the
+    * 100 TB story: a web-scale duplicate graph overflows the threshold
+    * and takes the distributed loop (same labels either way — both
+    * fixpoints are min-id-per-component). The guard counts pair rows
+    * as given, duplicates included (both paths tolerate duplicates;
+    * the distributed one drops them when it builds its blocks), so a
+    * duplicate-heavy input reaches the distributed loop a little
+    * earlier than its distinct edge count would. The decontamination
     * broadcast guard is the precedent.
     *
-    * @param pairs    edges as (d1, d2) — any near-dup pair output
+    * @param pairs    edges as (d1, d2) — any near-dup pair output;
+    *                 self-pairs are ignored
     * @param vertices (doc_id) universe; isolated docs come back as
     *                 their own singleton component
-    * @param edgesDistinct caller guarantees `pairs` carries no
-    *                 duplicates and no self-loops, so the entry dedup
-    *                 shuffle is skipped (r21; duplicate edges would
-    *                 only cost work, never change the fixpoint — the
-    *                 guarantee just keeps the guard count honest)
     * @return (doc_id, component) with component = min doc_id reachable
     */
   def connectedComponents(pairs: DataFrame, vertices: DataFrame,
                           maxIter: Int = 50,
-                          maxDriverEdges: Long = 1L << 22,
-                          edgesDistinct: Boolean = false): DataFrame = {
+                          maxDriverEdges: Long = 1L << 22): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    def dedup(e: DataFrame) = e.where(col("u") =!= col("v")).distinct()
-
-    val e0 = pairs.select(
-      col("d1").cast("long").as("u"), col("d2").cast("long").as("v"))
-    val e00 = (if (edgesDistinct) e0 else dedup(e0))
+    val e00 = pairs.select(
+        col("d1").cast("long").as("u"), col("d2").cast("long").as("v"))
+      .where(col("u") =!= col("v"))
       .localCheckpoint()
-    if (e00.count() <= maxDriverEdges) {
+    val nPairs = e00.count()
+    if (nPairs <= maxDriverEdges) {
       // union-find with path halving, union by MIN root so every
       // root is its component's minimum id — identical labels to the
       // distributed fixpoint
@@ -1059,69 +1062,62 @@ object Dedup {
         .select(col("doc_id"), coalesce(col("_comp"), col("doc_id")).as("component"))
     }
 
-    // Materialize an edge set and compute its (count, hash-sum)
-    // signature in the SAME job: accumulators ride the eager
-    // localCheckpoint's materialization pass, so each round costs one
-    // action instead of a checkpoint job plus a separate aggregate
-    // scan. Task retries can only perturb the accumulator (screen)
-    // values, never the edges: a spurious signature match is still
-    // confirmed by the exact except() below, a spurious mismatch just
-    // runs one more round.
-    def checkpointWithSig(edges: DataFrame): (DataFrame, (Long, Long)) = {
-      val cnt = spark.sparkContext.longAccumulator
-      val hs = spark.sparkContext.longAccumulator
-      val out = edges.as[(Long, Long)].mapPartitions { it =>
-        it.map { case (u, v) =>
-          cnt.add(1)
-          var x = u * 0x9E3779B97F4A7C15L + v // asymmetric: (u,v) != (v,u)
-          x ^= x >>> 33; x *= 0xFF51AFD7ED558CCDL
-          x ^= x >>> 33; x *= 0xC4CEB9FE1A85EC53L
-          x ^= x >>> 33
-          hs.add(x) // wrapping order-free sum — a screen, not a proof
-          (u, v)
+    val part = Fixpoint.partitioner(spark.sparkContext, nPairs)
+    val e0 = Fixpoint.map(Fixpoint.fromDF(e00, part))(LongBlock.sortedDistinct)
+    val edges = Fixpoint.loop("cc", maxIter,
+        s"connectedComponents did not converge in $maxIter large/small-star " +
+        "rounds — result would be a partial edge set, not components; raise maxIter")(
+        Seq(e0)) { (s, r) =>
+      val e = s.head
+      // large-star: every neighbor bigger than x re-points at m(x), the
+      // minimum of x's closed neighborhood. The reverse edges join each
+      // node's out-edges in its partition (one re-key); the (y, m(x))
+      // rows are keyed by y, the big end of the small-star's directed
+      // edges (y > x >= m(x)), for the second re-key.
+      val rev = Fixpoint.shuffle(Fixpoint.map(e)(b => LongBlock(b.v1, b.keys)), part)
+      val ls = Fixpoint.shuffle(Fixpoint.zip(e, rev) { (out, in) =>
+        val adj = LongBlock.concat(Iterator(out, in))
+        val mn = LongBlock.reduce(adj, LongBlock.Agg.Min)
+        val ix = mn.index
+        val b = new LongBlock.Builder(1, adj.size)
+        var i = 0
+        while (i < adj.size) {
+          val x = adj.keys(i)
+          if (adj.v1(i) > x) b.add(adj.v1(i), math.min(x, mn.v1(ix(x))))
+          i += 1
         }
-      }.toDF("u", "v").localCheckpoint()
-      (out, (cnt.value, hs.value))
-    }
-    var (e, prev) = checkpointWithSig(e00)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      // large-star: every neighbor bigger than u re-points at the
-      // minimum of u's closed neighborhood
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy("u").agg(min("v").as("_mn"))
-        .select(col("u"), least(col("_mn"), col("u")).as("m"))
-      // intermediate edge sets carry duplicates (the min aggregations
-      // and joins are duplicate-tolerant; ls rows are already strictly
-      // u > v by construction) — only the round's RESULT is deduped,
-      // saving two distinct-shuffles per round
-      val ls = sym.join(lsMin, "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-      // small-star on big->small directed edges: u and all its smaller
-      // neighbors attach to the smallest of them
-      val dir = ls.select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val ssMin = dir.groupBy("u").agg(min("v").as("m"))
-      val (ss, cur) = checkpointWithSig(dedup(dir.join(ssMin, "u")
-        .select(explode(array(
-          struct(col("u").as("c"), col("m")),
-          struct(col("v").as("c"), col("m")))).as("e"))
-        .select(col("e.c").as("u"), col("e.m").as("v"))))
-      // signature (count + order-free hash sum) is the cheap screen; a
-      // match is confirmed with an exact SET EQUALITY — both except
-      // directions, because the screen's counts are accumulator-based
-      // and a task retry could inflate them (the old exact-aggregate
-      // count justified one direction; the accumulator does not)
-      converged = cur == prev && ss.except(e).isEmpty && e.except(ss).isEmpty
-      prev = cur
-      e = ss
-      it += 1
-    }
-    require(converged || it < maxIter,
-      s"connectedComponents did not converge in $maxIter large/small-star " +
-      "rounds — result would be a partial edge set, not components; raise maxIter")
-    val roots = e.groupBy(col("u").as("doc_id")).agg(min("v").as("_comp"))
+        b.result()
+      }, part)
+      // small-star on the big->small edges (y, m): y and all its
+      // smaller neighbors attach to the smallest of them, mm(y); the
+      // (m, mm) rows re-key to m, the self-loops drop
+      val ss = Fixpoint.shuffle(Fixpoint.map(ls) { d =>
+        val mm = LongBlock.reduce(d, LongBlock.Agg.Min)
+        val ix = mm.index
+        val b = new LongBlock.Builder(1, d.size + mm.size)
+        var i = 0
+        while (i < mm.size) { b.add(mm.keys(i), mm.v1(i)); i += 1 }
+        i = 0
+        while (i < d.size) {
+          val m = mm.v1(ix(d.keys(i)))
+          if (d.v1(i) != m) b.add(d.v1(i), m)
+          i += 1
+        }
+        b.result()
+      }, part)
+      // the round's result, deduped; an exact per-partition comparison
+      // with the previous edge set counts the partitions that changed
+      Seq(Fixpoint.zip(e, ss) { (old, nw) =>
+        val next = LongBlock.sortedDistinct(nw)
+        if (!java.util.Arrays.equals(old.keys, next.keys) ||
+            !java.util.Arrays.equals(old.v1, next.v1)) r.changed.add(1)
+        next
+      })
+    }.head
+    // at the fixpoint every edge points a node at its component root
+    val roots = Fixpoint.rows(Fixpoint.map(edges)(LongBlock.reduce(_, LongBlock.Agg.Min)))(
+        (b, i) => (b.keys(i), b.v1(i)))
+      .toDF("doc_id", "_comp")
     vertices.select(col("doc_id").cast("long").as("doc_id"))
       .join(roots, Seq("doc_id"), "left")
       .select(col("doc_id"),

@@ -718,7 +718,7 @@ object Similarity {
     // d * 2^20 + idx is lexicographically (d ASC, cid ASC) — exactly
     // the old struct min — and min(long) stays in HashAggregate with
     // map-side partials. Both packing bounds fail LOUDLY: idx >= 2^20
-    // (codebook too large) and d >= 2^43 (packed would overflow; the
+    // (codebook too large) and d >= 2^42 (packed would overflow; the
     // quantized-int contract keeps real distances orders below it).
     val wIdx = org.apache.spark.sql.expressions.Window
       .partitionBy("s").orderBy("cid")

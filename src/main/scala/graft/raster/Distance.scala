@@ -4,7 +4,9 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
+import graft.{Fixpoint, LongBlock}
 import graft.core.LayoutDefinition
 
 /** Distance rasters.
@@ -310,16 +312,14 @@ object Distance {
   }
 
   /** The distributed [[costPath]] backtrack (over-guard regime):
-    *  1. next-hop forest — every reachable cell with d > 0 points to
+    *  1. dest = the (d desc, id asc) argmax, one limit(1);
+    *  2. next-hop forest — every reachable cell with d > 0 points to
     *     the (d_n + step·f_cell, id)-argmin of its 8 present
-    *     neighbors, computed by one shifted self-join + min(struct)
-    *     (coordinate-keyed, so no linear-id aliasing); source cells
+    *     neighbors, from one re-key of neighbor offers (in-grid
+    *     coordinates only, so no linear-id aliasing); source cells
     *     (d = 0) have no out-edge and terminate chains;
-    *  2. dest = the (d desc, id asc) argmax, one limit(1);
     *  3. the dest chain extracted by pointer DOUBLING with hop
-    *     accumulation — the binary-counter invariant: after round k
-    *     the frontier holds every chain node at < 2^(k+1) hops, the
-    *     jump table holds 2^(k+1)-hop ancestors.
+    *     accumulation (two doubling steps per round, see below).
     * The per-step argmin states the EXACT driver-walk comparison
     * ((key, nid) lexicographic min over the same IEEE key doubles),
     * so the emitted path is row-identical to the collected walk. */
@@ -328,120 +328,119 @@ object Distance {
     val spark = cells.sparkSession
     import spark.implicits._
     val Sqrt2 = math.sqrt(2.0)
-    // cells (x, y, d, f, id) arrive PINNED from the caller — every
-    // consumer below (8 shift branches, dest, closing join) scans the
-    // checkpointed RDD
-    val offs = for { dy <- -1 to 1; dx <- -1 to 1 if dx != 0 || dy != 0 } yield (dx, dy)
-    val nbrs = offs.map { case (dx, dy) =>
-      val step = if (dx == 0 || dy == 0) 1.0 else Sqrt2
-      cells.select((col("x") - dx).as("x"), (col("y") - dy).as("y"),
-        col("d").as("nd"), col("id").as("nid"), lit(step).as("step"))
-    }.reduce(_ unionAll _)
-    // ONE shuffle: the join keys (x, y) determine u = y*gridCols + x
-    // bijectively, so aggregating on (x, y) reuses the join's own
-    // exchange (r21: the old groupBy(u) re-shuffled the joined rows)
-    val next = cells.where(col("d") > 0.0)
-      .join(nbrs, Seq("x", "y"))
-      .groupBy("x", "y")
-      .agg(min(struct((col("nd") + col("step") * col("f")).as("key"),
-        col("nid").as("nid"))).as("cand"))
-      .select((col("y") * gridCols + col("x")).as("u"), col("cand.nid").as("anc"))
+    // cells (x, y, d, f, id) arrive PINNED from the caller — dest and
+    // the cell blocks both scan the checkpointed RDD
     // dest is ONE row — collect it so round 1's frontier is a local
     // relation (zero-job scans) instead of a checkpointed frame
     val destRow = cells.orderBy(col("d").desc, col("id").asc).limit(1)
       .select(col("id")).as[Long].take(1)
     if (destRow.isEmpty)
       return Seq.empty[(Long, Long, Long, Long)].toDF("seq", "x", "y", "v_u")
-    // r21 (guide §8 — the Pregel shape, same as costDistanceTiled's
-    // loop): frontier and jump live as KEYED RDDs under one sticky
-    // HashPartitioner, so the per-round frontier probe is a NARROW
-    // co-partitioned join (zero shuffle on both sides), the grown
-    // frontier is a partitioner-aware union (narrow), and only the
-    // doubling re-key of the jump table shuffles. Each round is one
-    // job with no SQL planning/codegen. Per-step values are the same
-    // (anc, seq + len) longs the old DataFrame joins produced.
-    // partitions derived from the KNOWN reach size (~24 B/row, target
-    // ~1M rows / ~24 MB per partition): a 50k-row disk runs 1-task
-    // stages instead of 32, a 100 TB disk still gets one partition per
-    // ~24 MB — scale-adaptive, not tuned to either local mode or the
-    // cluster (guide §2.2/§2.5)
-    val part = new org.apache.spark.HashPartitioner(
-      math.min(1L << 20, (nReach >> 20) + 1L).toInt)
-    var jump: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
-      next.as[(Long, Long)].rdd
-        .map { case (u, anc) => (u, (anc, 1L)) }
-        .partitionBy(part)
-    jump.localCheckpoint()
-    var frontier: org.apache.spark.rdd.RDD[(Long, Long)] =
-      spark.sparkContext.parallelize(Seq((destRow.head, 0L)), 1).partitionBy(part)
-    frontier.localCheckpoint()
-    var frontierRows = 1L
-    var done = false
-    var rounds = 0
-    while (!done && rounds < 48) { // 2^48 hops: unreachable backstop
-      // TWO doubling steps ride each materialization. Invariant:
-      // entering with frontier = chain nodes at < 2^k hops and jump =
-      // exact 2^k jumps, step A adds the nodes at [2^k, 2^{k+1}) and
-      // step B — probing with the squared table — those at [2^{k+1},
-      // 2^{k+2}): each such node factors uniquely through its ancestor
-      // 2^{k+1} hops below, which step A just completed. Added nodes
-      // have distinct hop counts, so the unions need no dedup, and
-      // emptiness via accumulator is exact (an empty frame counts 0
-      // under any retry; inflation only pads frontierRows, at worst
-      // triggering the exact cycle re-count below). The chain is
-      // contiguous, so no nodes past an empty step B exist: done =
-      // step B empty.
-      val acc1 = spark.sparkContext.longAccumulator(s"graft_cp_add_$rounds")
-      val acc2 = spark.sparkContext.longAccumulator(s"graft_cp_add_${rounds + 1}")
-      val added1 = frontier.join(jump, part) // narrow: co-partitioned
-        .map { case (_, (seq, (anc, len))) => acc1.add(1); (anc, seq + len) }
-        .partitionBy(part)
-      val f2 = frontier.union(added1) // partitioner-aware: narrow
-      // J_{k+1} = J_k o J_k: re-key by ancestor (one shuffle), compose
-      // narrow, re-key back to the node; cached for step B AND the
-      // next iteration
-      val jump2 = jump
-        .map { case (u, (anc, len)) => (anc, (u, len)) }
-        .partitionBy(part)
-        .join(jump, part) // narrow: both sides co-partitioned
-        .map { case (_, ((u, len), (anc2, len2))) => (u, (anc2, len + len2)) }
-        .partitionBy(part)
-      jump2.localCheckpoint()
-      val added2 = f2.join(jump2, part) // narrow
-        .map { case (_, (seq, (anc, len))) => acc2.add(1); (anc, seq + len) }
-        .partitionBy(part)
-      val grown = f2.union(added2) // narrow
-      grown.localCheckpoint()
-      grown.count() // eager: runs both steps and fills the accumulators
-      done = acc2.value == 0
-      frontierRows += acc1.value + acc2.value
-      frontier = grown
-      // the next iteration's frontier spans < 2^{k+2} hops, so it
-      // needs 2^{k+2} jumps: square AGAIN (lazy — never materialized
-      // when this was the last iteration)
-      val jump4 = jump2
-        .map { case (u, (anc, len)) => (anc, (u, len)) }
-        .partitionBy(part)
-        .join(jump2, part)
-        .map { case (_, ((u, len), (anc2, len2))) => (u, (anc2, len + len2)) }
-        .partitionBy(part)
-      jump4.localCheckpoint()
-      jump = jump4
-      if (frontierRows > nReach) {
-        // a simple path visits each reachable cell at most once — more
-        // nodes means a zero-friction cycle in the next-hop chain.
-        // Accumulator inflation could fake this, so confirm with one
-        // exact count before failing loudly (the driver walk's guard).
-        val exact = frontier.count()
-        require(exact <= nReach,
-          s"cost-path backtrack exceeded the $nReach reachable cells — " +
-            "zero-friction cycle in the next-hop chain")
-        frontierRows = exact
+    // The backtrack runs on the Fixpoint kernel: cells (id -> raw bits
+    // of d and f), frontier (node -> seq) and jump (node -> (ancestor,
+    // hops)) are co-partitioned blocks, so the frontier probe is a
+    // narrow zip, the grown frontier a narrow concatenation, and only
+    // the re-keys shuffle.
+    val part = Fixpoint.partitioner(spark.sparkContext, nReach)
+    val cellB = Fixpoint.fromDF(cells.select(col("id"), col("d"), col("f")), part).localCheckpoint()
+    val offs = (for { dy <- -1 to 1; dx <- -1 to 1 if dx != 0 || dy != 0 } yield (dx, dy)).toArray
+    // next-hop forest: every cell n offers its d to each in-grid
+    // neighbor u = n - (dx, dy), tagged with the offset's index (one
+    // re-key to u); a reachable u with d > 0 keeps the (d_n +
+    // step·f_u, n)-argmin over the offers it got
+    val offers = Fixpoint.shuffle(Fixpoint.map(cellB) { b =>
+      val out = new LongBlock.Builder(2, b.size * 8)
+      var i = 0
+      while (i < b.size) {
+        val (nx, ny) = (b.keys(i) % gridCols, b.keys(i) / gridCols)
+        var k = 0
+        while (k < offs.length) {
+          val (ux, uy) = (nx - offs(k)._1, ny - offs(k)._2)
+          if (ux >= 0 && ux < gridCols && uy >= 0) out.add(uy * gridCols + ux, k, b.v1(i))
+          k += 1
+        }
+        i += 1
       }
-      rounds += 2
+      out.result()
+    }, part)
+    val jump1 = Fixpoint.zip(cellB, offers) { (c, o) =>
+      val ix = c.index
+      val bestKey = new Array[Double](c.size)
+      val bestN = Array.fill(c.size)(-1L)
+      var j = 0
+      while (j < o.size) {
+        val p = ix(o.keys(j))
+        if (p >= 0 && java.lang.Double.longBitsToDouble(c.v1(p)) > 0.0) {
+          val (dx, dy) = offs(o.v1(j).toInt)
+          val step = if (dx == 0 || dy == 0) 1.0 else Sqrt2
+          val key = java.lang.Double.longBitsToDouble(o.v2(j)) +
+            step * java.lang.Double.longBitsToDouble(c.v2(p))
+          val n = o.keys(j) + dy * gridCols + dx
+          if (bestN(p) < 0 || key < bestKey(p) || (key == bestKey(p) && n < bestN(p))) {
+            bestKey(p) = key; bestN(p) = n
+          }
+        }
+        j += 1
+      }
+      val out = new LongBlock.Builder(2, c.size)
+      var p = 0
+      while (p < c.size) { if (bestN(p) >= 0) out.add(c.keys(p), bestN(p), 1L); p += 1 }
+      out.result()
     }
-    frontier.toDF("node", "seq")
-      .join(cells, col("node") === cells("id"))
+    val frontier0 = Fixpoint.shuffle(
+      spark.sparkContext.parallelize(Seq(LongBlock(Array(destRow.head), Array(0L))), 1), part)
+    // rows added to the frontier over all rounds (task retries only
+    // inflate it, so an over-count is confirmed exactly below)
+    val added = spark.sparkContext.longAccumulator("graft_cp_added")
+    val cycle = s"cost-path backtrack exceeded the $nReach reachable cells — " +
+      "zero-friction cycle in the next-hop chain"
+    // frontier nodes one jump further, at seq + hops (counted in `acc`)
+    def advance(frontier: Fixpoint.Blocks, jump: Fixpoint.Blocks,
+                acc: LongAccumulator*): Fixpoint.Blocks =
+      Fixpoint.shuffle(Fixpoint.zip(frontier, jump) { (f, j) =>
+        val ix = j.index
+        val out = new LongBlock.Builder(1, f.size)
+        var i = 0
+        while (i < f.size) {
+          val p = ix(f.keys(i))
+          if (p >= 0) out.add(j.v1(p), f.v1(i) + j.v2(p))
+          i += 1
+        }
+        val b = out.result()
+        acc.foreach(_.add(b.size))
+        b
+      }, part)
+    def grow(frontier: Fixpoint.Blocks, more: Fixpoint.Blocks): Fixpoint.Blocks =
+      Fixpoint.zip(frontier, more)((f, m) => LongBlock.concat(Iterator(f, m)))
+    // TWO doubling steps per round. Invariant: entering round k with
+    // frontier = chain nodes at < 2^(2k) hops and the exact 2^(2k)
+    // jump table, step A adds the nodes at [2^(2k), 2^(2k+1)) and step
+    // B — probing with the squared table — those at [2^(2k+1),
+    // 2^(2k+2)): each such node factors uniquely through its ancestor
+    // 2^(2k+1) hops below, which step A just completed. Added nodes
+    // have distinct hop counts, so the concatenations need no dedup.
+    // The chain is contiguous, so no nodes past an empty step B exist:
+    // the round's change count is step B's rows. State is (frontier,
+    // squared table); the next round squares that table again first
+    // (never when this round was the last). 24 rounds span 2^48 hops.
+    val chain = Fixpoint.loop("cp", 24, cycle)(Seq(frontier0, jump1)) { (s, r) =>
+      val Seq(frontier, half) = s
+      // a simple path visits each reachable cell at most once — more
+      // nodes means a zero-friction cycle in the next-hop chain
+      if (1L + added.value > nReach) require(Fixpoint.count(frontier) <= nReach, cycle)
+      val jump = if (r.index == 0) half else r.pin(Fixpoint.pointerJump(half, part))
+      val f2 = grow(frontier, advance(frontier, jump, added))
+      val jump2 = Fixpoint.pointerJump(jump, part)
+      Seq(grow(f2, advance(f2, jump2, added, r.changed)), jump2)
+    }
+    chain(1).unpersist(blocking = false)
+    // the chain's cells, read from the cell blocks (a narrow zip)
+    Fixpoint.rows(Fixpoint.zip(chain.head, cellB) { (f, c) =>
+      val ix = c.index
+      LongBlock(f.v1, f.keys, f.keys.map(n => c.v1(ix(n))))
+    })((b, i) => (b.keys(i), b.v1(i) % gridCols, b.v1(i) / gridCols,
+      java.lang.Double.longBitsToDouble(b.v2(i))))
+      .toDF("seq", "x", "y", "d")
       .select(col("seq"), col("x"), col("y"),
         // micro-quantized BIGINT closing (the CLAUDE.md r16 rule:
         // never emit round(x, k) DOUBLE columns — integer rounding of

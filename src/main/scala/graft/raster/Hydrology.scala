@@ -2,7 +2,9 @@ package graft.raster
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+import graft.{Fixpoint, LongBlock}
 import org.apache.spark.sql.functions._
 
 /** Hydrology operators over elevation grids — the geotrellis
@@ -123,11 +125,11 @@ object Hydrology {
     * Scale shape (r19): BINARY-LIFTING ancestor counts — each round
     * folds "descendants within 2^k hops" one doubling step up the
     * exact 2^k-jump table (see the inline derivation), so a depth-D
-    * drainage channel resolves in ceil(log2 D) rounds of two keyed
-    * equi-joins each, not D rounds (the watershed/flowLength
+    * drainage channel resolves in ceil(log2 D) rounds of one summed
+    * re-key plus a pointer jump each, not D rounds (the watershed/flowLength
     * pointer-doubling discipline, carrying partial COUNTS; this was
-    * the repo's last O(depth) loop). Each round localCheckpoints
-    * (CLAUDE.md iterative rule); `maxSteps` fails loudly rather than
+    * the repo's last O(depth) loop). Each round is one job of the
+    * [[graft.Fixpoint]] kernel; `maxSteps` fails loudly rather than
     * looping — at POWER-OF-TWO granularity on the distributed path: a
     * longest path in (maxSteps, 2^ceil(log2 maxSteps+1)) succeeds
     * silently (the result is still exact; only the bound is coarse),
@@ -135,8 +137,9 @@ object Hydrology {
     * Callers needing the strict contract at scale should pass the
     * next power of two. Small grids
     * take a guarded driver walk instead (one collect of the <=
-    * `maxDriverEdges` out-edges beats per-round job overhead; the
-    * connectedComponents fast path is the precedent).
+    * `maxDriverEdges` out-edges beats a job, its stages and a
+    * checkpoint per round; the connectedComponents fast path is the
+    * precedent).
     */
   def flowAccumulation(cells: DataFrame, gridCols: Long, gridRows: Long,
                        maxSteps: Int = 0,
@@ -149,14 +152,7 @@ object Hydrology {
     val maxSteps0 = if (maxSteps > 0) maxSteps
       else math.min(gridCols * gridRows, Int.MaxValue.toLong).toInt
     val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    // (from, to) one edge per non-pit cell
-    val edge = dirs.where(col("dir") =!= 0)
-      .select((col("y") * gridCols + col("x")).as("from"),
-        Dirs.map { case (dx, dy, code) =>
-          when(col("dir") === code,
-            (col("y") + dy) * gridCols + (col("x") + dx))
-        }.reduce(coalesce(_, _)).as("to"))
-      .localCheckpoint()
+    val edge = d8Edges(dirs, gridCols)
     if (edge.count() <= maxDriverEdges) {
       val next = new scala.collection.mutable.HashMap[Long, Long]()
       edge.as[(Long, Long)].collect().foreach { case (f, t) => next(f) = t }
@@ -190,84 +186,97 @@ object Hydrology {
     // remaining path is shorter — saturation simply drops the pair).
     // J empties after ceil(log2(maxDepth+1)) rounds and C is then the
     // full accumulation: a continental 10^5-cell drainage channel
-    // resolves in ~17 rounds, not 10^5 (the watershed/flowLength
-    // pointer-doubling discipline, carrying partial COUNTS). maxSteps
-    // keeps its loud-failure contract at power-of-two granularity: J
-    // still nonempty once the span passed maxSteps0 means some path
-    // is longer than maxSteps0.
-    // cnt state is kept as UNMERGED checkpointed parts (C_0, up_1,
-    // up_2, …): the up-join consumes their union and its reduce sums
-    // across parts, which is algebraically the merged C_k — so the
-    // full n-row count table never re-groups per round (only the
-    // shrinking per-round contributions checkpoint; ≤ ceil(log2 D)
-    // parts ever exist). One final reduceByKey merges everything.
-    // Row counts ride each checkpoint's own materialization pass as
-    // accumulators (r20): emptiness via accumulator is EXACT — an
-    // empty frame counts 0 under any retry, a nonempty one counts > 0.
-    //
-    // r21 (guide §8 — the Pregel shape, see streamOrder): the loop
-    // runs on KEYED RDDs under one sticky HashPartitioner — the
-    // up-join and the compose side of the squaring are NARROW
-    // co-partitioned joins, the cnt parts union partitioner-aware, and
-    // BOTH per-round checkpoints materialize in ONE count job (their
-    // partitioner-aware union), with no per-round SQL planning.
-    val part = new org.apache.spark.HashPartitioner(math.max(1,
-      math.min(spark.sparkContext.defaultParallelism.toLong,
-        gridCols * gridRows / 65536L + 1L)).toInt)
-    val jumpAcc0 = spark.sparkContext.longAccumulator("graft_fa_jump0")
-    var jump: org.apache.spark.rdd.RDD[(Long, Long)] =
-      edge.as[(Long, Long)].rdd.partitionBy(part)
-        .mapValues { a => jumpAcc0.add(1); a }
-    jump.localCheckpoint()
-    jump.count()
-    var jumpEmpty = jumpAcc0.value == 0
-    val cnt0 = jump.map { case (_, a) => (a, 1L) }.reduceByKey(part, _ + _)
-    cnt0.localCheckpoint()
-    val cntParts =
-      scala.collection.mutable.ListBuffer[org.apache.spark.rdd.RDD[(Long, Long)]](cnt0)
-    var span = 1L
-    var round = 0
-    while (!jumpEmpty) {
-      require(round < 64 && span <= maxSteps0,
-        s"flowAccumulation: paths longer than $maxSteps0 steps — raise maxSteps " +
-        "(or the flow graph has a cycle, which strict-descent D8 cannot produce)")
-      val accU = spark.sparkContext.longAccumulator(s"graft_fa_up_$round")
-      val accJ = spark.sparkContext.longAccumulator(s"graft_fa_jump_${round + 1}")
-      val cntU = cntParts.reduce(_ union _) // partitioner-aware: narrow
-      val up = jump.join(cntU, part) // narrow: co-partitioned
-        .map { case (_, (a, cnt)) => (a, cnt) }
-        .reduceByKey(part, _ + _) // map-side combine (the old groupBy sum)
-        .mapValues { v => accU.add(1); v }
-      up.localCheckpoint()
-      val j2 = jump.map { case (v, a) => (a, v) }
-        .partitionBy(part)
-        .join(jump, part) // narrow: co-partitioned
-        .map { case (_, (v, a2)) => (v, a2) }
-        .partitionBy(part)
-        .mapValues { a => accJ.add(1); a }
-      j2.localCheckpoint()
-      up.union(j2).count() // ONE job materializes both checkpoints
-      if (accU.value != 0) cntParts += up
-      jump = j2
-      jumpEmpty = accJ.value == 0
-      span *= 2
-      round += 1
-    }
-    val acc = cntParts.reduce(_ union _).reduceByKey(part, _ + _)
-      .toDF("id", "cnt")
-    dirs.join(acc, (col("y") * gridCols + col("x")) === acc("id"), "left")
-      .select(col("x"), col("y"), coalesce(col("cnt"), lit(0L)).cast("long").as("acc"))
+    // resolves in ~17 rounds, not 10^5. maxSteps keeps its
+    // loud-failure contract at power-of-two granularity: round k runs
+    // only while the span 2^k is within maxSteps0, so J still nonempty
+    // past it means some path is longer than maxSteps0.
+    // The loop runs on the Fixpoint kernel: C is one primitive count
+    // column per partition covering every cell, the up-sums are one
+    // summed re-key, J_{k+1} is the kernel's pointer jump, and both
+    // materialize in the round's one job.
+    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
+    val d8 = d8Blocks(dirs, gridCols, part, withStep = false)
+    val jump0 = Fixpoint.map(d8)(outEdges)
+    val kids = Fixpoint.shuffle(Fixpoint.map(jump0)(j => LongBlock(j.v1, Array.fill(j.size)(1L))),
+      part, Some(LongBlock.Agg.Sum))
+    val cnt0 = Fixpoint.zip(d8, kids)((c, k) => plus(LongBlock(c.keys, new Array[Long](c.size)), k))
+    val maxRounds = math.min(64, 32 - Integer.numberOfLeadingZeros(maxSteps0))
+    val state =
+      if (Fixpoint.materialize(Seq(jump0, cnt0))(0) == 0) Seq(jump0, cnt0)
+      else Fixpoint.loop("fa", maxRounds,
+          s"flowAccumulation: paths longer than $maxSteps0 steps — raise maxSteps " +
+          "(or the flow graph has a cycle, which strict-descent D8 cannot produce)")(
+          Seq(jump0, cnt0)) { (s, r) =>
+        val Seq(jump, c) = s
+        val up = Fixpoint.shuffle(Fixpoint.zip(jump, c) { (j, cb) =>
+          val ix = cb.index
+          val out = new LongBlock.Builder(1, j.size)
+          var i = 0
+          while (i < j.size) {
+            val n = cb.v1(ix(j.keys(i)))
+            if (n != 0) out.add(j.v1(i), n)
+            i += 1
+          }
+          out.result()
+        }, part, Some(LongBlock.Agg.Sum))
+        Seq(Fixpoint.pointerJump(jump, part, Some(r.changed)), Fixpoint.zip(c, up)(plus))
+      }
+    state.head.unpersist(blocking = false) // the exhausted jump table
+    cellsOut(spark, state(1), gridCols, "acc")((b, i) => b.v1(i))
   }
+
+  /** D8 out-edge target column — null for pits. */
+  private def d8Target(gridCols: Long): Column =
+    Dirs.map { case (dx, dy, code) =>
+      when(col("dir") === code, (col("y") + dy) * gridCols + (col("x") + dx))
+    }.reduce(coalesce(_, _))
 
   /** (from, to) linear-id out-edges of the D8 graph — one per non-pit
     * cell (shared by accumulation / watershed / stream order). */
   private def d8Edges(dirs: DataFrame, gridCols: Long): DataFrame =
     dirs.where(col("dir") =!= 0)
-      .select((col("y") * gridCols + col("x")).as("from"),
-        Dirs.map { case (dx, dy, code) =>
-          when(col("dir") === code,
-            (col("y") + dy) * gridCols + (col("x") + dx))
-        }.reduce(coalesce(_, _)).as("to"))
+      .select((col("y") * gridCols + col("x")).as("from"), d8Target(gridCols).as("to"))
+
+  /** D8 successor blocks of every cell, keyed by linear id: v1 = the
+    * out-edge target (the cell itself for pits) and, `withStep`, v2 =
+    * the step's micro-cell length (0 for pits; see [[flowLength]]). */
+  private def d8Blocks(dirs: DataFrame, gridCols: Long, part: org.apache.spark.HashPartitioner,
+                       withStep: Boolean): Fixpoint.Blocks = {
+    val id = col("y") * gridCols + col("x")
+    Fixpoint.fromDF(dirs.select(Seq(id, coalesce(d8Target(gridCols), id)) ++
+      (if (withStep) Seq(coalesce(d8Step, lit(0L))) else Nil): _*), part)
+  }
+
+  /** D8 step length in micro-cells — 1e6 cardinal, round(sqrt(2) *
+    * 1e6) diagonal, null for pits. */
+  private val d8Step: Column = Dirs.map { case (dx, dy, code) =>
+    when(col("dir") === code, lit(if (dx != 0 && dy != 0) 1414214L else 1000000L))
+  }.reduce(coalesce(_, _))
+
+  /** The non-pit rows of a successor block, as (cell -> target). */
+  private def outEdges(b: LongBlock): LongBlock = {
+    val out = new LongBlock.Builder(1, b.size)
+    var i = 0
+    while (i < b.size) { if (b.v1(i) != b.keys(i)) out.add(b.keys(i), b.v1(i)); i += 1 }
+    out.result()
+  }
+
+  /** `base` with `add`'s v1 summed into the rows of the same key. */
+  private def plus(base: LongBlock, add: LongBlock): LongBlock = {
+    val ix = add.index
+    LongBlock(base.keys, Array.tabulate(base.size) { i =>
+      val p = ix(base.keys(i))
+      if (p >= 0) base.v1(i) + add.v1(p) else base.v1(i)
+    })
+  }
+
+  /** (x, y, `name`) of every cell a block keys by linear id. */
+  private def cellsOut(spark: SparkSession, b: Fixpoint.Blocks, gridCols: Long, name: String)(
+      value: (LongBlock, Int) => Long): DataFrame = {
+    import spark.implicits._
+    Fixpoint.rows(b)((x, i) => (x.keys(i) % gridCols, x.keys(i) / gridCols, value(x, i)))
+      .toDF("x", "y", name)
+  }
 
   /** Watershed labeling (ESRI Basin semantics): every cell takes the
     * linear id of the PIT its D8 flow path terminates in; pits label
@@ -279,9 +288,9 @@ object Hydrology {
     * ceil(log2 D) rounds, not D (flowAccumulation walks rounds = depth
     * because it must VISIT every cell on the way; a basin label only
     * needs the endpoint, which is exactly what doubling shortcuts).
-    * Each round is one equi-join + localCheckpoint; convergence is a
-    * count on the checkpointed result (a pointer is final when its
-    * target is final). Small graphs take the guarded driver walk with
+    * Each round is one pointer jump of the [[graft.Fixpoint]] kernel
+    * in one job; convergence is the count of moved pointers (a pointer
+    * is final when its target is final). Small graphs take the guarded driver walk with
     * path memoization (flowAccumulation precedent).
     */
   def watershed(cells: DataFrame, gridCols: Long, gridRows: Long,
@@ -289,7 +298,7 @@ object Hydrology {
     val spark = cells.sparkSession
     import spark.implicits._
     val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val edge = d8Edges(dirs, gridCols).localCheckpoint()
+    val edge = d8Edges(dirs, gridCols)
     val id = col("y") * gridCols + col("x")
     if (edge.count() <= maxDriverEdges) {
       val next = new mutable.HashMap[Long, Long]()
@@ -313,45 +322,16 @@ object Hydrology {
           coalesce(col("basin"), id).cast("long").as("basin"))
     }
     // succ(c) = out-edge target, or self for pits — total function, so
-    // doubling composes cleanly.
-    // r21 (guide §8 — the Pregel shape): the doubling runs on a KEYED
-    // RDD under a sticky HashPartitioner; each round re-keys the table
-    // by its pointer (the one shuffle), composes through a NARROW
-    // co-partitioned join, and re-keys back. One job per round, no
-    // per-round SQL planning/codegen; the changed-pointer probe rides
-    // the materialization as an accumulator exactly as before.
-    val part = new org.apache.spark.HashPartitioner(math.max(1,
-      math.min(spark.sparkContext.defaultParallelism.toLong,
-        gridCols * gridRows / 65536L + 1L)).toInt)
-    var succ: org.apache.spark.rdd.RDD[(Long, Long)] =
-      dirs.join(edge, id === edge("from"), "left")
-        .select(id.as("id"), coalesce(col("to"), id).as("nxt"))
-        .as[(Long, Long)].rdd.partitionBy(part)
-    succ.localCheckpoint()
-    var round = 0
-    var done = false
-    while (!done) {
-      require(round < 64, "watershed: pointer doubling exceeded 64 rounds — " +
-        "the flow graph has a cycle, which strict-descent D8 cannot produce")
-      // changed-pointer count rides the checkpoint materialization as
-      // an accumulator (r20): retries only inflate -> at worst one
-      // extra (idempotent) round; zero is a real fixpoint.
-      val chgAcc = spark.sparkContext.longAccumulator(s"graft_ws_chg_$round")
-      val next = succ.map { case (i, n) => (n, i) }
-        .partitionBy(part)
-        .join(succ, part) // narrow: co-partitioned
-        .map { case (n, (i, n2)) => if (n2 != n) chgAcc.add(1); (i, n2) }
-        .partitionBy(part)
-      next.localCheckpoint()
-      next.count() // eager: runs the round and fills the accumulator
-      val prev = succ
-      succ = next
-      prev.unpersist(blocking = false)
-      done = chgAcc.value == 0
-      round += 1
-    }
-    dirs.join(succ.toDF("id", "nxt"), id === col("id"))
-      .select(col("x"), col("y"), col("nxt").cast("long").as("basin"))
+    // doubling composes cleanly. Each round is the Fixpoint kernel's
+    // pointer jump (re-key by pointer, compose, re-key back) in one
+    // job; the changed-pointer count rides that job.
+    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
+    val succ = d8Blocks(dirs, gridCols, part, withStep = false)
+    val basin = Fixpoint.loop("ws", 64, "watershed: pointer doubling exceeded 64 rounds — " +
+        "the flow graph has a cycle, which strict-descent D8 cannot produce")(Seq(succ)) {
+      (s, r) => Seq(Fixpoint.pointerJump(s.head, part, Some(r.changed)))
+    }.head
+    cellsOut(spark, basin, gridCols, "basin")((b, i) => b.v1(i))
   }
 
   /** Downstream flow length (ESRI FlowLength, downstream direction):
@@ -366,26 +346,17 @@ object Hydrology {
     * Scale shape: pointer doubling ACCUMULATING distance — state
     * (id, nxt, dq) with dq = distance from id to nxt; each round
     * dq += dq(nxt), nxt = nxt² — a depth-D path resolves in log2 D
-    * joins (the [[watershed]] discipline, carrying a sum instead of
+    * rounds (the [[watershed]] discipline, carrying a sum instead of
     * just the endpoint). Guarded driver walk with suffix-sum
     * memoization below `maxDriverEdges`. */
   def flowLength(cells: DataFrame, gridCols: Long, gridRows: Long,
                  maxDriverEdges: Long = 1L << 22): DataFrame = {
     val spark = cells.sparkSession
     import spark.implicits._
-    val StepQ = 1000000L; val DiagQ = 1414214L // round(sqrt(2) * 1e6)
     val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val id = col("y") * gridCols + col("x")
-    val wq = Dirs.map { case (dx, dy, code) =>
-      when(col("dir") === code, lit(if (dx != 0 && dy != 0) DiagQ else StepQ))
-    }.reduce(coalesce(_, _))
     val edge = dirs.where(col("dir") =!= 0)
-      .select(id.as("from"),
-        Dirs.map { case (dx, dy, code) =>
-          when(col("dir") === code, (col("y") + dy) * gridCols + (col("x") + dx))
-        }.reduce(coalesce(_, _)).as("to"),
-        wq.as("wq"))
-      .localCheckpoint()
+      .select((col("y") * gridCols + col("x")).as("from"), d8Target(gridCols).as("to"),
+        d8Step.as("wq"))
     if (edge.count() <= maxDriverEdges) {
       val next = new mutable.HashMap[Long, (Long, Long)]() // from -> (to, wq)
       edge.as[(Long, Long, Long)].collect().foreach { case (f, t, w) => next(f) = (t, w) }
@@ -400,50 +371,20 @@ object Hydrology {
         var d = dist.getOrElse(cur, 0L)
         path.foreach { c => d += next(c)._2; dist(c) = d }
       }
+      val id = col("y") * gridCols + col("x")
       val lab = broadcast(dist.toSeq.toDF("id", "dq"))
       return dirs.join(lab, id === lab("id"), "left")
         .select(col("x"), col("y"), coalesce(col("dq"), lit(0L)).cast("long").as("dist_q"))
     }
-    // r21: distance-accumulating pointer doubling on KEYED RDDs (guide
-    // §8 — see watershed): re-key by pointer, compose + sum through a
-    // narrow co-partitioned join, re-key back; one job per round.
-    val part = new org.apache.spark.HashPartitioner(math.max(1,
-      math.min(spark.sparkContext.defaultParallelism.toLong,
-        gridCols * gridRows / 65536L + 1L)).toInt)
-    var succ: org.apache.spark.rdd.RDD[(Long, (Long, Long))] =
-      dirs.join(edge, id === edge("from"), "left")
-        .select(id.as("id"), coalesce(col("to"), id).as("nxt"),
-          coalesce(col("wq"), lit(0L)).as("dq"))
-        .as[(Long, Long, Long)].rdd
-        .map { case (i, n, d) => (i, (n, d)) }
-        .partitionBy(part)
-    succ.localCheckpoint()
-    var round = 0
-    var done = false
-    while (!done) {
-      require(round < 64, "flowLength: pointer doubling exceeded 64 rounds — " +
-        "the flow graph has a cycle, which strict-descent D8 cannot produce")
-      // changed-pointer count rides the checkpoint materialization
-      // (r20, see watershed)
-      val chgAcc = spark.sparkContext.longAccumulator(s"graft_fl_chg_$round")
-      val next = succ.map { case (i, (n, d)) => (n, (i, d)) }
-        .partitionBy(part)
-        .join(succ, part) // narrow: co-partitioned
-        .map { case (n, ((i, d), (n2, d2))) =>
-          if (n2 != n) chgAcc.add(1); (i, (n2, d + d2)) }
-        .partitionBy(part)
-      next.localCheckpoint()
-      next.count() // eager: runs the round and fills the accumulator
-      val prev = succ
-      succ = next
-      prev.unpersist(blocking = false)
-      done = chgAcc.value == 0
-      round += 1
-    }
-    dirs.join(
-        succ.map { case (i, (_, d)) => (i, d) }.toDF("id", "dq"),
-        id === col("id"))
-      .select(col("x"), col("y"), col("dq").cast("long").as("dist_q"))
+    // distance-accumulating pointer doubling: the watershed loop with
+    // the step length as the kernel's summed payload
+    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
+    val succ = d8Blocks(dirs, gridCols, part, withStep = true)
+    val dist = Fixpoint.loop("fl", 64, "flowLength: pointer doubling exceeded 64 rounds — " +
+        "the flow graph has a cycle, which strict-descent D8 cannot produce")(Seq(succ)) {
+      (s, r) => Seq(Fixpoint.pointerJump(s.head, part, Some(r.changed)))
+    }.head
+    cellsOut(spark, dist, gridCols, "dist_q")((b, i) => b.v2(i))
   }
 
   /** Strahler stream order over the full D8 drainage forest (Strahler
@@ -452,12 +393,11 @@ object Hydrology {
     * 1; a cell whose upstream max order k is contributed by >= 2
     * neighbors gets k + 1, otherwise k.
     *
-    * Scale shape: monotone fixpoint — each round joins current orders
-    * onto the out-edges and rebuilds per-cell (max order, count at
-    * max) with a two-level aggregate (groupBy (cell, ord) count, then
-    * max-struct per cell — both map-side combine). Orders only grow
-    * and are bounded by log2(cells), so round count = drainage-tree
-    * DEPTH, with per-round convergence read off sum(ord) (monotone).
+    * Scale shape: monotone fixpoint — each round looks current orders
+    * up along the out-edges and rebuilds per-cell (max order, count at
+    * max) with one combined re-key. Orders only grow and are bounded
+    * by log2(cells), so round count = drainage-tree DEPTH, with
+    * per-round convergence read off the count of changed orders.
     * The guarded driver fast path computes the same fixpoint in one
     * topological pass (flowAccumulation precedent).
     */
@@ -467,7 +407,7 @@ object Hydrology {
     val spark = cells.sparkSession
     import spark.implicits._
     val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val edge = d8Edges(dirs, gridCols).localCheckpoint()
+    val edge = d8Edges(dirs, gridCols)
     val id = col("y") * gridCols + col("x")
     if (edge.count() <= maxDriverEdges) {
       val next = new mutable.HashMap[Long, Long]()
@@ -505,63 +445,41 @@ object Hydrology {
     // depth bound: strict descent never revisits, so cells is safe
     val maxRounds0 = if (maxRounds > 0) maxRounds
       else math.min(gridCols * gridRows, Int.MaxValue.toLong).toInt
-    // r21 (guide §8 — the Pregel shape, the costDistanceTiled
-    // discipline): the fixpoint runs on KEYED RDDs under one sticky
-    // HashPartitioner — edge(from) and ord(id) are co-partitioned, so
-    // the per-round upstream join is NARROW, the (max ord, count at
-    // max) rebuild is ONE aggregateByKey shuffle with map-side combine
-    // (algebraically the old two-level groupBy: max ord, then the
-    // contributor count at that max), and the update join is narrow
-    // again. One job per round, no per-round SQL planning/codegen.
-    // Convergence rides the materialization as an accumulator exactly
-    // as before (retries only inflate: spurious nonzero = one extra
-    // idempotent round, zero = real fixpoint).
-    val part = new org.apache.spark.HashPartitioner(math.max(1,
-      math.min(spark.sparkContext.defaultParallelism.toLong,
-        gridCols * gridRows / 65536L + 1L)).toInt)
-    val edgeRdd = edge.as[(Long, Long)].rdd.partitionBy(part)
-    edgeRdd.localCheckpoint()
-    var ord: org.apache.spark.rdd.RDD[(Long, Long)] =
-      dirs.select(id.as("id")).as[Long].rdd.map((_, 1L)).partitionBy(part)
-    ord.localCheckpoint()
-    // one fixpoint round: rebuild (max order, contributors at max) per
-    // target — same result as the old groupBy(id, ord).count +
-    // max(struct(ord, k)) pair (max of (ord, k) with k unique per ord
-    // IS the (max ord, its k)) — then apply the Strahler update
-    def soRound(cur: org.apache.spark.rdd.RDD[(Long, Long)],
-                chgAcc: org.apache.spark.util.LongAccumulator) = {
-      val up = edgeRdd.join(cur, part) // narrow: co-partitioned
-        .map { case (_, (to, o)) => (to, o) }
-      val mk = up.aggregateByKey((0L, 0L), part)(
-        { case ((m, k), o) =>
-          if (o > m) (o, 1L) else if (o == m) (m, k + 1L) else (m, k) },
-        { case ((m1, k1), (m2, k2)) =>
-          if (m1 > m2) (m1, k1) else if (m2 > m1) (m2, k2) else (m1, k1 + k2) })
-      cur.leftOuterJoin(mk, part) // narrow: co-partitioned
-        .mapValues { case (o, mkOpt) =>
-          val n = mkOpt.map { case (m, k) => if (k >= 2L) m + 1L else m }
-            .getOrElse(1L)
-          if (n != o) chgAcc.add(1)
-          n
-        }
-    }
-    var round = 0
-    var done = false
-    while (!done) {
-      require(round <= maxRounds0,
-        s"streamOrder: fixpoint not reached in $maxRounds0 rounds — raise maxRounds")
-      val chgAcc = spark.sparkContext.longAccumulator(s"graft_so_chg_$round")
-      val next = soRound(ord, chgAcc)
-      next.localCheckpoint()
-      next.count() // eager: runs the round and fills the accumulator
-      val prev = ord
-      ord = next
-      prev.unpersist(blocking = false)
-      done = chgAcc.value == 0
-      round += 1
-    }
-    dirs.join(ord.toDF("id", "ord"), id === col("id"))
-      .select(col("x"), col("y"), col("ord").cast("long").as("ord"))
+    // The fixpoint on the Fixpoint kernel: out-edges (keyed by source)
+    // and orders (keyed by cell) are co-partitioned blocks, so the
+    // upstream lookup is a narrow zip; (max order, contributors at
+    // max) per target is ONE MaxCount re-key, combined map-side; the
+    // Strahler update is a narrow zip again. One job per round; the
+    // changed-order count rides it.
+    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
+    val d8 = d8Blocks(dirs, gridCols, part, withStep = false)
+    val edges = Fixpoint.map(d8)(outEdges).localCheckpoint()
+    val ord0 = Fixpoint.map(d8)(b => LongBlock(b.keys, Array.fill(b.size)(1L)))
+    val ord = Fixpoint.loop("so", maxRounds0.toLong + 1L,
+        s"streamOrder: fixpoint not reached in $maxRounds0 rounds — raise maxRounds")(Seq(ord0)) {
+      (s, r) =>
+        val mk = Fixpoint.shuffle(Fixpoint.zip(edges, s.head) { (e, o) =>
+          val ix = o.index
+          val out = new LongBlock.Builder(2, e.size)
+          var i = 0
+          while (i < e.size) { out.add(e.v1(i), o.v1(ix(e.keys(i))), 1L); i += 1 }
+          out.result()
+        }, part, Some(LongBlock.Agg.MaxCount))
+        Seq(Fixpoint.zip(s.head, mk) { (o, m) =>
+          val ix = m.index
+          var changed = 0L
+          val next = Array.tabulate(o.size) { i =>
+            val p = ix(o.keys(i))
+            val n = if (p < 0) 1L else if (m.v2(p) >= 2L) m.v1(p) + 1L else m.v1(p)
+            if (n != o.v1(i)) changed += 1
+            n
+          }
+          r.changed.add(changed)
+          LongBlock(o.keys, next)
+        })
+    }.head
+    edges.unpersist(blocking = false)
+    cellsOut(spark, ord, gridCols, "ord")((b, i) => b.v1(i))
   }
 
   /** ArcGIS SnapPourPoint: move each pour point to the cell with the

@@ -71,10 +71,7 @@ object RegionGroup {
           Seq("x", "y", "cls"))
         .select(col("d1"), col("d2"))
       val comp = graft.pipeline.Dedup.connectedComponents(
-        edges, g.select(col("id").as("doc_id")),
-        // adjacency pairs are unique by construction (one claim per
-        // (cell, offset)) and d1 != d2 always — skip the dedup shuffle
-        edgesDistinct = true)
+        edges, g.select(col("id").as("doc_id")))
       return g.join(comp, g("id") === comp("doc_id"))
         .select(col("x"), col("y"), col("cls"), col("component").as("region"))
     }
@@ -142,12 +139,12 @@ object RegionGroup {
       .select(col("x"), col("y"), col("cls"), col("root").as("d2"))
     val edges = claims.join(borders, Seq("x", "y", "cls"))
       .select(col("d1"), col("d2"))
+    // several border cell pairs between the same two roots emit the
+    // same (d1, d2) edge; connectedComponents tolerates duplicates and
+    // its guard counts them as given (the two roots always differ:
+    // distinct tiles have disjoint cell-id sets)
     val comp = graft.pipeline.Dedup.connectedComponents(
-      edges, local.select(col("root").as("doc_id")).distinct(),
-      // cross-tile pairs are unique by construction (one claim per
-      // (cell, offset)) and the two roots always differ (distinct
-      // tiles have disjoint cell-id sets) — skip the dedup shuffle
-      edgesDistinct = true)
+      edges, local.select(col("root").as("doc_id")).distinct())
     local.join(comp, local("root") === comp("doc_id"))
       .select(col("x"), col("y"), col("cls"), col("component").as("region"))
   }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.graft.{BandsPackExpr, BandsUnpackExpr, GraftExtensions, LongDotExpr, TilePackExpr, TileStatsExpr, TileUnpackExpr}
+import org.apache.spark.sql.graft.{BandsPackExpr, BandsUnpackExpr, ClassifyMinDistExpr, GraftExtensions, LongDotExpr, TilePackExpr, TileStatsExpr, TileUnpackExpr}
 
 import graft.SparkSpec
 import graft.core.CellType
@@ -16,6 +16,18 @@ class FunctionsSpec extends SparkSpec {
     assert(rows(0).getDouble(0) == 4.0 && rows(0).getLong(1) == 2L)
     assert(rows(0).getDouble(2) == 1.0 && rows(0).getDouble(3) == 3.0)
     assert(rows(1).getLong(1) == 0L && rows(1).getDouble(2).isNaN)
+  }
+
+  test("ClassifyMinDistExpr refuses band tiles that can hold a null cell") {
+    // one 2-cell band; signatures 0:(0) and 1:(10)
+    def classify(df: org.apache.spark.sql.DataFrame) =
+      df.select(ClassifyMinDistExpr.classifyMinDist($"bands", Array(0, 1), Array(0.0, 10.0), 1, 2))
+    val ok = Seq(Seq(Seq(1.0, 9.0))).toDF("bands")
+    assert(classify(ok).as[Seq[Double]].head() == Seq(0.0, 1.0))
+    // a null cell would read as 0.0 and classify as class 0
+    val withNull = Seq(Seq(Seq(Some(9.0), None))).toDF("bands")
+    val e = intercept[org.apache.spark.sql.AnalysisException](classify(withNull).collect())
+    assert(e.getMessage.contains("must not contain nulls"))
   }
 
   test("LongDotExpr fused dot product") {

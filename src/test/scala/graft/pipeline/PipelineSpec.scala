@@ -449,6 +449,31 @@ class PipelineSpec extends SparkSpec {
     assert(loop == got)
   }
 
+  test("connected components: distributed loop equals union-find on 90,000 pairs (two partitions)") {
+    // seeded random graph near the giant-component threshold: 160k
+    // vertices, 90k pairs with duplicates, both orientations and
+    // self-pairs
+    val rnd = new scala.util.Random(17)
+    val pairs = Seq.fill(90000) {
+      val u = rnd.nextInt(160000).toLong
+      (u, if (rnd.nextInt(50) == 0) u else rnd.nextInt(160000).toLong)
+    }
+    val dupd = pairs ++ pairs.take(500).map(_.swap) ++ pairs.take(500)
+    assert(graft.Fixpoint.partitioner(spark.sparkContext, dupd.size).numPartitions == 2)
+    val edges = dupd.toDF("d1", "d2")
+    val verts = (0L until 160000L).toDF("doc_id")
+    val byDriver = Dedup.connectedComponents(edges, verts).as[(Long, Long)].collect().toMap
+    val byLoop = Dedup.connectedComponents(edges, verts, maxDriverEdges = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(byLoop == byDriver && byDriver.size == 160000)
+    // a reference union-find over the raw pairs
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else { val r = find(p); parent(x) = r; r } }
+    dupd.foreach { case (u, v) => val (a, b) = (find(u), find(v)); if (a != b) parent(math.max(a, b)) = math.min(a, b) }
+    assert(byDriver.forall { case (d, c) => c == find(d) })
+    assert(byDriver.values.groupBy(identity).values.map(_.size).max > 1000)
+  }
+
   test("connected components over minhash pairs clusters the dup family") {
     val comp = Dedup.connectedComponents(
       Dedup.minhashPairs(docs, k = 16, bands = 4, minEstSim = 0.5)

@@ -148,4 +148,22 @@ class DistanceSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("half-cell-aligned"))
   }
+
+  test("costPath: distributed backtrack equals the driver walk on 81,920 cells (two partitions)") {
+    // 320 x 256 cells in 64-px tiles: every cell is reachable, so the
+    // backtrack's blocks split over two partitions in local[2]
+    val big = LayoutDefinition(Extent(0, 0, 320, 256), TileLayout(5, 4, 64, 64))
+    assert(graft.Fixpoint.partitioner(spark.sparkContext, 320L * 256L).numPartitions == 2)
+    val cells = for (x <- 0L until 320L; y <- 0L until 256L)
+      yield (x, y, 1.0 + ((x * 7 + y * 13) % 5))
+    val friction = RasterLayer.fromCells(cells.toDF("x", "y", "v"), big)
+    val sources = Seq((0L, 0.5, 0.5)).toDF("pid", "px", "py")
+    val dist = Distance.costDistanceTiled(friction, sources)
+    val driver = Distance.costPath(friction, sources, distance = Some(dist))
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val loop = Distance.costPath(friction, sources, maxDriverCells = 0, distance = Some(dist))
+      .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(loop == driver && driver.length > 300)
+    assert(driver.last._2 == 0L && driver.last._3 == 0L && driver.last._4 == 0L)
+  }
 }

@@ -1,6 +1,8 @@
 package graft.raster
 
-import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+
+import graft.{Fixpoint, SparkSpec}
 
 class HydrologySpec extends SparkSpec {
   import spark.implicits._
@@ -194,5 +196,45 @@ class HydrologySpec extends SparkSpec {
     // and the snapped cell really is the window argmax
     val win = for (x <- 0L to 2L; y <- 0L to 2L) yield accMap((x, y))
     assert(win.max == sacc)
+  }
+
+  /** 320 x 256 = 81,920 cells — over 65,536, so the distributed loops
+    * run on two partitions in the local[2] test session: a tilted
+    * terrain whose hash noise bends and merges the long flow paths
+    * toward the low edges (and leaves some interior pits). */
+  private val (bigCols, bigRows) = (320L, 256L)
+  private lazy val big = (for (x <- 0L until bigCols; y <- 0L until bigRows)
+    yield (x, y, 1.0 * x + 0.7 * y + ((x * 73 + y * 151 + 7) % 97) / 60.0)).toDF("x", "y", "v")
+
+  /** Driver walk and distributed loop outputs of one operator on `big`. */
+  private def bothPaths(f: Long => DataFrame): (Set[(Long, Long, Long)], Set[(Long, Long, Long)]) = {
+    assert(Fixpoint.partitioner(spark.sparkContext, bigCols * bigRows).numPartitions == 2)
+    val driver = f(1L << 22).as[(Long, Long, Long)].collect().toSet
+    val loop = f(0L).as[(Long, Long, Long)].collect().toSet
+    assert(driver.size == bigCols * bigRows)
+    (driver, loop)
+  }
+
+  test("flow accumulation: distributed loop equals the driver walk on 81,920 cells (two partitions)") {
+    val (driver, loop) = bothPaths(m => Hydrology.flowAccumulation(big, bigCols, bigRows, maxDriverEdges = m))
+    assert(loop == driver)
+    assert(driver.map(_._3).max > 100L) // long channels: several doubling rounds
+  }
+
+  test("watershed: distributed loop equals the driver walk on 81,920 cells (two partitions)") {
+    val (driver, loop) = bothPaths(m => Hydrology.watershed(big, bigCols, bigRows, maxDriverEdges = m))
+    assert(loop == driver)
+    assert(driver.map(_._3).size > 10) // many basins
+  }
+
+  test("flow length: distributed loop equals the driver walk on 81,920 cells (two partitions)") {
+    val (driver, loop) = bothPaths(m => Hydrology.flowLength(big, bigCols, bigRows, maxDriverEdges = m))
+    assert(loop == driver)
+  }
+
+  test("strahler: distributed loop equals the driver pass on 81,920 cells (two partitions)") {
+    val (driver, loop) = bothPaths(m => Hydrology.streamOrder(big, bigCols, bigRows, maxDriverEdges = m))
+    assert(loop == driver)
+    assert(driver.map(_._3).max >= 3L)
   }
 }
