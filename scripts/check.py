@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: run Verify output
 parquet vs oracle_sql.json in DuckDB, compare sorted frames."""
-import json, sys, glob, os
+import json, sys, glob, os, time
 import duckdb
 import pandas as pd
 
@@ -39,7 +39,9 @@ for name, sql in sorted(oracle.items()):
                   ", ".join(f"{c}: spark {gt[c]} vs oracle {wt[c]}" for c in dd))
             fails += 1; continue
         got = grel.df()
+        t0 = time.perf_counter()
         want = wrel.df()
+        osec = time.perf_counter() - t0
     except Exception as e:
         print(f"FAIL {name}: {e}"); fails += 1; continue
     got = got.reindex(sorted(got.columns), axis=1)
@@ -52,13 +54,13 @@ for name, sql in sorted(oracle.items()):
         print(f"FAIL {name}: rows {len(got)} vs {len(want)}"); fails += 1; continue
     try:
         pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
-        print(f"PASS {name} ({len(got)} rows)")
+        print(f"PASS {name} ({len(got)} rows, oracle {osec:.2f} s)")
     except AssertionError as e:
         # retry with tolerance to show severity
         try:
             pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-9, rtol=1e-12)
-            print(f"WARN {name}: matches only with 1e-9 tolerance"); fails += 1
+            print(f"WARN {name}: matches only with 1e-9 tolerance (oracle {osec:.2f} s)"); fails += 1
         except AssertionError:
-            print(f"FAIL {name}: values differ\n{str(e)[:500]}"); fails += 1
+            print(f"FAIL {name}: values differ (oracle {osec:.2f} s)\n{str(e)[:500]}"); fails += 1
 print(f"\n{len(oracle) - fails}/{len(oracle)} pass")
 sys.exit(1 if fails else 0)

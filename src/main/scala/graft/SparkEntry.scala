@@ -3787,6 +3787,14 @@ object SparkEntry {
   private lazy val minhashSimExpr: String =
     (0 until 16).map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)").mkString(" + ")
 
+  /** Declares every CTE of a chain (each `name AS (` at a line start,
+    * after an optional `WITH`) `AS MATERIALIZED`. DuckDB inlines CTEs
+    * otherwise, so a chain whose CTEs are each read twice by the next
+    * (the unrolled LPA rounds) re-expands exponentially: q_modularity
+    * ran for minutes, not seconds. Same rows either way. */
+  private def materialized(ctes: String): String =
+    ctes.replaceAll("(?m)^((?:WITH )?\\w+) AS \\(", "$1 AS MATERIALIZED (")
+
   /** Minhash-LSH duplicate components (doc_id, component) — shared
     * verbatim by q_dedup_clusters and (as a subquery) q_dedup_keep. */
   private lazy val dedupComponentsSql: String =
@@ -7291,7 +7299,7 @@ object SparkEntry {
              |l$i AS (SELECT p.a, coalesce(m.lbl, p.lbl) AS lbl
              |        FROM l${i - 1} p LEFT JOIN m$i m USING (a))""".stripMargin
         }.mkString(",\n")
-        s"""WITH $minhashCtes,
+        materialized(s"""WITH $minhashCtes,
            |pairs AS (
            |  SELECT d1, d2
            |  FROM cand JOIN sig sa ON cand.d1 = sa.doc_id JOIN sig sb ON cand.d2 = sb.doc_id
@@ -7299,7 +7307,7 @@ object SparkEntry {
            |sym AS (SELECT d1 AS u, d2 AS v FROM pairs UNION SELECT d2, d1 FROM pairs),
            |l0 AS (SELECT doc_id AS a, doc_id AS lbl FROM documents),
            |$roundCtes
-           |SELECT a AS doc_id, lbl AS label FROM l4""".stripMargin
+           |SELECT a AS doc_id, lbl AS label FROM l4""".stripMargin)
       },
 
       // W1 over doc-length histograms: exact-integer CDF cross
@@ -7375,7 +7383,7 @@ object SparkEntry {
              |l$i AS (SELECT p.a, coalesce(m.lbl, p.lbl) AS lbl
              |        FROM l${i - 1} p LEFT JOIN m$i m USING (a))""".stripMargin
         }.mkString(",\n")
-        s"""WITH $minhashCtes,
+        materialized(s"""WITH $minhashCtes,
            |pairs AS (
            |  SELECT d1, d2
            |  FROM cand JOIN sig sa ON cand.d1 = sa.doc_id JOIN sig sb ON cand.d2 = sb.doc_id
@@ -7393,7 +7401,7 @@ object SparkEntry {
            |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM pairs)
            |SELECT max(mm.m) AS m,
            |       CAST(sum(4 * mm.m * coalesce(ecs.ec, 0) - dcs.d * dcs.d) AS BIGINT) AS q4m2
-           |FROM dcs CROSS JOIN mm LEFT JOIN ecs ON ecs.lbl = dcs.lbl""".stripMargin
+           |FROM dcs CROSS JOIN mm LEFT JOIN ecs ON ecs.lbl = dcs.lbl""".stripMargin)
       },
 
       // 3 unrolled damped-PageRank rounds over the shared pair CTEs:

@@ -73,7 +73,8 @@ object GraftExtensions {
         litInt(args(2), "bands_unpack"))),
     // text-pipeline hot-path kernels (r20): portable md5-prefix hash,
     // tokenizer, and fused k-shingle hasher — value-identical to the
-    // lower()/regexp/md5/conv chains they replace
+    // lower()/regexp/md5/conv chains they replace — plus the per-doc
+    // MinHash signature built on the shingle hasher
     ("md5_prefix60",
       new ExpressionInfo(classOf[Md5Prefix60Expr].getName, "md5_prefix60"),
       (args: Seq[Expression]) => Md5Prefix60Expr(args.head)),
@@ -82,7 +83,11 @@ object GraftExtensions {
       (args: Seq[Expression]) => TokenizeExpr(args.head)),
     ("shingle_hashes",
       new ExpressionInfo(classOf[ShingleHash60Expr].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => ShingleHash60Expr(args(0), litInt(args(1), "shingle_hashes"))))
+      (args: Seq[Expression]) => ShingleHash60Expr(args(0), litInt(args(1), "shingle_hashes"))),
+    ("minhash_sig",
+      new ExpressionInfo(classOf[MinhashSigExpr].getName, "minhash_sig"),
+      (args: Seq[Expression]) => MinhashSigExpr(args(0), litInt(args(1), "minhash_sig"),
+        litInt(args(2), "minhash_sig"))))
 
   private def litString(e: Expression, fn: String): String =
     if (e.foldable && e.dataType == org.apache.spark.sql.types.StringType)
@@ -94,7 +99,7 @@ object GraftExtensions {
     if (e.foldable && e.dataType == org.apache.spark.sql.types.IntegerType)
       e.eval().asInstanceOf[Int]
     else throw new IllegalArgumentException(
-      s"$fn requires a literal integer band count, got $e")
+      s"$fn requires a literal integer argument, got $e")
 
   /** Register on an already-created session (tests, REPL). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

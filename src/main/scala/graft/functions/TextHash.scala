@@ -2,7 +2,9 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
@@ -86,9 +88,12 @@ object GraftText {
     * incrementally). Returns an empty array when fewer than k tokens
     * (callers guard on size >= k; sequence(1, n-k+1) would fabricate
     * descending indices there). */
-  def shingleHashes(toks: ArrayData, k: Int): ArrayData = {
+  def shingleHashes(toks: ArrayData, k: Int): ArrayData =
+    new GenericArrayData(shingleHashArray(toks, k))
+
+  private def shingleHashArray(toks: ArrayData, k: Int): Array[Long] = {
     val n = toks.numElements()
-    if (n < k) return new GenericArrayData(Array.emptyLongArray)
+    if (n < k) return Array.emptyLongArray
     val tb = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) { tb(i) = toks.getUTF8String(i).getBytes; i += 1 }
@@ -103,7 +108,47 @@ object GraftText {
       out(i) = first60(md.digest())
       i += 1
     }
-    new GenericArrayData(out)
+    out
+  }
+
+  /** MinHash modulus (the Mersenne prime 2^31 - 1). */
+  val MinhashP = 2147483647L
+
+  /** Deterministic (a_i, b_i) of hash function i (0-based) — the one
+    * definition both the kernel and the DuckDB oracles read. */
+  def minhashA(i: Int): Long = 1103515245L * (i + 1) % MinhashP
+  def minhashB(i: Int): Long = 12345L * (i + 1) % MinhashP
+
+  /** The k-long MinHash signature of one document's tokens:
+    * m_i = min over its shingleK-shingles of ((h % P)·a_i + b_i) % P,
+    * h the 60-bit shingle hash of [[shingleHashes]]. Value-identical
+    * to exploding the shingle hashes, taking their distinct set and
+    * min-aggregating per document — a repeated shingle cannot change
+    * a min, so no distinct step is needed. Every operand stays below
+    * 2^62 (h % P and a_i are under 2^31), so no product overflows.
+    * Null when the doc has fewer than shingleK tokens (no shingle, no
+    * signature). */
+  def minhashSig(toks: ArrayData, shingleK: Int, k: Int): ArrayData = {
+    val xs = shingleHashArray(toks, shingleK)
+    if (xs.isEmpty) return null
+    var j = 0
+    while (j < xs.length) { xs(j) %= MinhashP; j += 1 }
+    val m = new Array[Long](k)
+    var i = 0
+    while (i < k) {
+      val a = minhashA(i)
+      val b = minhashB(i)
+      var mi = Long.MaxValue
+      j = 0
+      while (j < xs.length) {
+        val v = (xs(j) * a + b) % MinhashP
+        if (v < mi) mi = v
+        j += 1
+      }
+      m(i) = mi
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(m)
   }
 }
 
@@ -179,4 +224,37 @@ final case class ShingleHash60Expr(child: Expression, k: Int)
 object ShingleHash60Expr {
   def shingleHashes(toks: Column, k: Int): Column =
     ExpressionUtils.column(ShingleHash60Expr(ExpressionUtils.expression(toks), k))
+}
+
+/** `minhash_sig(toks, shingleK, k)` — a document's k-long MinHash
+  * signature as one codegen'd call (see [[GraftText.minhashSig]]);
+  * shingleK and k are configuration literals, not data. Null for docs
+  * under shingleK tokens. */
+final case class MinhashSigExpr(child: Expression, shingleK: Int, k: Int)
+    extends UnaryExpression with ExpectsInputTypes {
+  require(shingleK >= 1 && k >= 1, s"minhash_sig shingleK=$shingleK k=$k must be >= 1")
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
+  override def prettyName: String = "minhash_sig"
+
+  override protected def nullSafeEval(input: Any): Any =
+    GraftText.minhashSig(input.asInstanceOf[ArrayData], shingleK, k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${c.isNull} ? null :
+        org.apache.spark.sql.graft.GraftText.minhashSig(${c.value}, $shingleK, $k);
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): MinhashSigExpr =
+    copy(child = newChild)
+}
+
+object MinhashSigExpr {
+  def minhashSig(toks: Column, shingleK: Int, k: Int): Column =
+    ExpressionUtils.column(MinhashSigExpr(ExpressionUtils.expression(toks), shingleK, k))
 }

@@ -45,9 +45,10 @@ final class SimHashAgg(bits: Int) extends Aggregator[Long, Array[Long], Long] {
   *   keys, not strings); hot shingles are the skew risk, handled by
   *   the `maxDocFreq` cap (ON by default) that drops boilerplate
   *   shingles before the self-join.
-  * - minhash LSH: k=16 hashes as 16 min() aggregates in ONE groupBy
-  *   (no explode-by-k), banded into 4 buckets; only bucket
-  *   collisions become candidate pairs.
+  * - minhash LSH: the k=16-component signature is computed inside
+  *   each document's row by one native kernel (no shingle shuffle),
+  *   banded into 4 buckets; only bucket collisions become candidate
+  *   pairs, scored from the signatures the band rows carry.
   * - simhash: 60-bit signature, hamming<=3 via pigeonhole banding
   *   (Manku/Jain/Sarma, WWW'07): 4 bands of 15 bits — hamming<=3
   *   guarantees at least one band matches exactly, so candidates
@@ -56,11 +57,16 @@ final class SimHashAgg(bits: Int) extends Aggregator[Long, Array[Long], Long] {
   * - cosine: label-blocked exact pairs over integer-quantized
   *   embeddings (deterministic integer dot products).
   *
-  * Shared intermediates (shingle sets, signatures) are materialized
-  * once with an eager localCheckpoint: a lazy .cache() inside a
-  * single job lets every downstream branch race to recompute the
-  * full shingle pipeline before the cache is populated (measured
-  * ~6x overcompute in r1's minhash).
+  * Shared intermediates (shingle sets) are materialized once with an
+  * eager localCheckpoint: a lazy .cache() inside a single job lets
+  * every downstream branch race to recompute the full shingle
+  * pipeline before the cache is populated (measured ~6x overcompute
+  * in r1's minhash).
+  *
+  * Key contract: `doc_id` is the key of `documents` (one row per id).
+  * The per-row kernels rely on it — a signature is one row's value,
+  * not a merge of every row sharing an id — and so does the streaming
+  * twin's claim to equal the batch path.
   */
 object Dedup {
 
@@ -236,8 +242,10 @@ object Dedup {
     * BEFORE the distinct keeps every downstream exchange on 8-byte
     * keys instead of ~30-byte strings; 60-bit space makes collisions
     * negligible (and the oracle hashes identically, so both engines
-    * agree even on a collision). Materialized eagerly — jaccard and
-    * minhash each consume it from several join branches. */
+    * agree even on a collision). Materialized eagerly — jaccard,
+    * contamination and minhashEval's exact side each consume it from
+    * several join branches. MinHash signatures do not read it: the
+    * signature kernel hashes the shingles inside each row. */
   def hashedShingles(docs: DataFrame, k: Int = 5): DataFrame = {
     // r20: fused native tokenize + k-shingle hash kernels — identical
     // values to the regexp/transform/concat_ws/md5-hex chain, one
@@ -433,30 +441,58 @@ object Dedup {
         x => x.getField("seg")), " ").as("text"))
   }
 
-  val MinhashP = 2147483647L // 2^31 - 1
+  val MinhashP: Long = org.apache.spark.sql.graft.GraftText.MinhashP
 
   /** Default LSH bucket-size cap (see [[minhashPairs]]). */
   val MinhashMaxBucket = 1000L
   val SimhashMaxBucket = 1000L
-  /** Deterministic (a_i, b_i) parameters for the k hash functions. */
+  /** Deterministic (a_i, b_i) parameters for the k hash functions
+    * (the signature kernel's own, read by the oracles). */
   def minhashParams(k: Int): Seq[(Long, Long)] =
-    (1 to k).map(i => (1103515245L * i % MinhashP, 12345L * i % MinhashP))
+    (0 until k).map(i => (org.apache.spark.sql.graft.GraftText.minhashA(i),
+      org.apache.spark.sql.graft.GraftText.minhashB(i)))
 
-  /** MinHash signatures: k min() aggregates in one groupBy — no
-    * explode-by-k, full map-side combine. Output: doc_id, m0..m{k-1}. */
+  /** (doc_id, sig): each doc's k-long MinHash signature array, computed
+    * in its own row by the native kernel — one scan, no shuffle. Docs
+    * under `shingleK` tokens have no signature and no row. */
+  private def signatures(docs: DataFrame, k: Int, shingleK: Int = 5): DataFrame =
+    docs.select(col("doc_id"), org.apache.spark.sql.graft.MinhashSigExpr.minhashSig(
+        org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text")), shingleK, k)
+        .as("sig"))
+      .where(col("sig").isNotNull)
+
+  /** MinHash signatures: (doc_id, m0..m{k-1}), one scan (see
+    * [[signatures]]). */
   def minhashSignatures(docs: DataFrame, k: Int = 16, shingleK: Int = 5): DataFrame =
-    minhashSignaturesFrom(hashedShingles(docs, shingleK), k)
+    signatures(docs, k, shingleK)
+      .select(col("doc_id") +: (0 until k).map(i => col("sig").getItem(i).as(s"m$i")): _*)
 
-  /** Signature aggregate over an ALREADY-materialized (doc_id, h)
-    * shingle set — the entry point when the caller pins the shingle
-    * scan for reuse (minhashEval's exact side reads it too). */
-  private[pipeline] def minhashSignaturesFrom(sh: DataFrame, k: Int): DataFrame = {
-    val hx = sh.select(col("doc_id"), (col("h") % MinhashP).as("x"))
-    val aggs = minhashParams(k).zipWithIndex.map { case ((a, b), i) =>
-      min((col("x") * a + b) % MinhashP).as(s"m$i")
-    }
-    hx.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+  /** One band row per (doc, band) from ONE explode: bkey is band b's
+    * `k / bands`-long slice of the signature, and every row keeps the
+    * frame's other columns (the signature included), so candidates are
+    * scored without a join back to the signature table. The slice
+    * equals another exactly when the oracle's concat_ws('_', ...) keys
+    * do (non-negative components, fixed count). */
+  private def bandRows(sig: DataFrame, k: Int, bands: Int): DataFrame = {
+    val rows = k / bands
+    sig.select(col("*"), posexplode(array((0 until bands).map(b =>
+        slice(col("sig"), b * rows + 1, rows)): _*)).as(Seq("band", "bkey")))
   }
+
+  /** `_hot` flags band rows whose (band, bkey) bucket holds more than
+    * `maxBucket` rows — the window twin of the oracle's
+    * `count(*) > cap` anti-join. Its exchange on (band, bkey) is the
+    * one the candidate join then reuses. */
+  private def flagHot(banded: DataFrame, maxBucket: Option[Long]): DataFrame =
+    maxBucket.fold(banded.withColumn("_hot", lit(false))) { cap =>
+      banded.withColumn("_hot", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("band", "bkey")) > cap)
+    }
+
+  /** Matching components / k of two carried signature arrays. */
+  private def estSim(a: Column, b: Column, k: Int): Column =
+    (0 until k).map(i => when(a.getItem(i) === b.getItem(i), 1).otherwise(0))
+      .reduce(_ + _).cast("double") / k
 
   /** LSH candidate pairs: bands of `rows` signature components; docs
     * colliding in any band pair up; est_sim = matching components / k.
@@ -470,37 +506,22 @@ object Dedup {
   def minhashPairs(docs: DataFrame, k: Int = 16, bands: Int = 4,
                    minEstSim: Double = 0.5,
                    maxBucket: Option[Long] = Some(MinhashMaxBucket)): DataFrame =
-    minhashPairsFrom(minhashSignatures(docs, k).localCheckpoint(),
-      k, bands, minEstSim, maxBucket)
+    minhashPairsFrom(signatures(docs, k), k, bands, minEstSim, maxBucket)
 
-  /** Pair scoring over ALREADY-pinned signatures (callers that reuse
-    * the signature table — minhashEval — enter here). `sig` must be
-    * materialized: banding and both score joins re-read it. */
-  private[pipeline] def minhashPairsFrom(sig: DataFrame, k: Int, bands: Int,
-                                         minEstSim: Double,
-                                         maxBucket: Option[Long]): DataFrame = {
-    val rows = k / bands
-    val bandDfs = (0 until bands).map { b =>
-      val cols = (b * rows until (b + 1) * rows).map(i => col(s"m$i"))
-      sig.select(col("doc_id"), lit(b).as("band"), concat_ws("_", cols: _*).as("bkey"))
-    }
-    val all = bandDfs.reduce(_ unionByName _)
-    val banded = maxBucket.fold(all) { cap =>
-      val hot = all.groupBy("band", "bkey").agg(count(lit(1)).as("_n"))
-        .where(col("_n") > cap).select(col("band"), col("bkey"))
-      all.join(hot, Seq("band", "bkey"), "left_anti")
-    }
-    val cand = banded.as("a").join(banded.as("b"), Seq("band", "bkey"))
+  /** Pair scoring over a (doc_id, sig) signature table. One exchange
+    * keyed on (band, bkey) counts the buckets and feeds both sides of
+    * the candidate join; a pair colliding in several bands scores the
+    * same each time, so one distinct on the scored rows dedupes it. */
+  private def minhashPairsFrom(sig: DataFrame, k: Int, bands: Int,
+                               minEstSim: Double,
+                               maxBucket: Option[Long]): DataFrame = {
+    val banded = flagHot(bandRows(sig, k, bands), maxBucket).where(!col("_hot"))
+    banded.as("a").join(banded.as("b"), Seq("band", "bkey"))
       .where(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
-      .distinct()
-    val simExpr = (0 until k).map(i =>
-      when(col(s"sa.m$i") === col(s"sb.m$i"), 1).otherwise(0)).reduce(_ + _)
-    cand
-      .join(sig.as("sa"), col("d1") === col("sa.doc_id"))
-      .join(sig.as("sb"), col("d2") === col("sb.doc_id"))
-      .select(col("d1"), col("d2"), (simExpr.cast("double") / k).as("est_sim"))
+      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+        estSim(col("a.sig"), col("b.sig"), k).as("est_sim"))
       .where(col("est_sim") >= minEstSim)
+      .distinct()
   }
 
   /** INCREMENTAL dedup — the 100 TB ingest shape: new (delta) docs
@@ -523,8 +544,7 @@ object Dedup {
                        k: Int = 16, bands: Int = 4,
                        minEstSim: Double = 0.5,
                        maxBucket: Option[Long] = Some(MinhashMaxBucket)): DataFrame = {
-    val sig = minhashSignatures(docs, k).localCheckpoint()
-    incrementalFromSigs(sig.where(!deltaExpr), sig.where(deltaExpr),
+    incrementalFromSigs(signatures(docs, k).withColumn("is_delta", deltaExpr),
       k, bands, minEstSim, maxBucket)
   }
 
@@ -548,51 +568,46 @@ object Dedup {
                               minEstSim: Double = 0.5,
                               maxBucket: Option[Long] = Some(MinhashMaxBucket)): DataFrame = {
     val baseSig = graft.catalog.Catalog.readTable(delta.sparkSession, uri, name)
-    incrementalFromSigs(baseSig, minhashSignatures(delta, k).localCheckpoint(),
+      .select(col("doc_id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+    incrementalFromSigs(baseSig.withColumn("is_delta", lit(false))
+        .unionByName(signatures(delta, k).withColumn("is_delta", lit(true))),
       k, bands, minEstSim, maxBucket)
   }
 
-  /** Shared core of the incremental ingest gate: base and delta
-    * SIGNATURE tables in (doc_id, m0..m{k-1}), the per-delta-doc
-    * report out. The hot-bucket cap applies to the COMBINED banded
-    * index (base + delta), matching the one-scan path exactly. */
-  private def incrementalFromSigs(baseSig: DataFrame, deltaSig: DataFrame,
-                                  k: Int, bands: Int, minEstSim: Double,
+  /** Shared core of the incremental ingest gate: one (doc_id, sig,
+    * is_delta) signature table of base and delta docs in, the
+    * per-delta-doc report out. The hot-bucket cap counts the COMBINED
+    * banded index (base + delta), matching the one-scan path exactly; a
+    * delta band in a hot bucket finds no base partner because every
+    * base row of that bucket is dropped. Both sides read the one
+    * window exchange, so no pin is needed. */
+  private def incrementalFromSigs(flagged: DataFrame, k: Int, bands: Int,
+                                  minEstSim: Double,
                                   maxBucket: Option[Long]): DataFrame = {
-    val sigCols = col("doc_id") +: (0 until k).map(i => col(s"m$i"))
-    val flagged = baseSig.select(sigCols: _*).withColumn("is_delta", lit(false))
-      .unionByName(deltaSig.select(sigCols: _*).withColumn("is_delta", lit(true)))
-      .localCheckpoint()
-    val rows = k / bands
-    val bandDfs = (0 until bands).map { b =>
-      val cols = (b * rows until (b + 1) * rows).map(i => col(s"m$i"))
-      flagged.select(col("doc_id"), col("is_delta"),
-        lit(b).as("band"), concat_ws("_", cols: _*).as("bkey"))
-    }
-    val all = bandDfs.reduce(_ unionByName _)
-    val banded = maxBucket.fold(all) { cap =>
-      val hot = all.groupBy("band", "bkey").agg(count(lit(1)).as("_n"))
-        .where(col("_n") > cap).select(col("band"), col("bkey"))
-      all.join(hot, Seq("band", "bkey"), "left_anti")
-    }
-    val cand = banded.where(col("is_delta")).as("a")
-      .join(banded.where(!col("is_delta")).as("b"), Seq("band", "bkey"))
-      .select(col("a.doc_id").as("delta_id"), col("b.doc_id").as("base_id"))
-      .distinct()
-    val simExpr = (0 until k).map(i =>
-      when(col(s"sa.m$i") === col(s"sb.m$i"), 1).otherwise(0)).reduce(_ + _)
-    val matches = cand
-      .join(flagged.as("sa"), col("delta_id") === col("sa.doc_id"))
-      .join(flagged.as("sb"), col("base_id") === col("sb.doc_id"))
-      .where((simExpr.cast("double") / k) >= minEstSim)
-      .groupBy(col("delta_id"))
-      .agg(count(lit(1)).as("n_matches"), min(col("base_id")).as("match_id"))
-    flagged.where(col("is_delta")).select(col("doc_id"))
-      .join(matches.withColumnRenamed("delta_id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        coalesce(col("match_id"), lit(-1L)).as("match_id"))
+    val banded = flagHot(bandRows(flagged, k, bands), maxBucket)
+    deltaReport(banded.where(col("is_delta")),
+      banded.where(!col("is_delta") && !col("_hot")), k, minEstSim)
   }
+
+  /** Per-delta-doc ingest report from delta band rows LEFT-joined to
+    * the base index's band rows on (band, bkey), both carrying their
+    * signatures: (doc_id, n_matches, match_id), −1 when clean. The left
+    * join keeps every delta doc, matched or not, and a base doc
+    * colliding in several bands counts once (collect_set). */
+  private def deltaReport(deltaBands: DataFrame, baseBands: DataFrame, k: Int,
+                          minEstSim: Double): DataFrame =
+    deltaBands.select(col("doc_id"), col("sig"), col("band"), col("bkey"))
+      .join(baseBands.select(col("doc_id").as("base_id"), col("sig").as("base_sig"),
+        col("band"), col("bkey")), Seq("band", "bkey"), "left")
+      .select(col("doc_id"),
+        when(col("base_id").isNotNull &&
+             estSim(col("sig"), col("base_sig"), k) >= minEstSim,
+          col("base_id")).as("hit"))
+      .groupBy("doc_id")
+      .agg(collect_set(col("hit")).as("hits"))
+      .select(col("doc_id"),
+        size(col("hits")).cast("long").as("n_matches"),
+        coalesce(array_min(col("hits")), lit(-1L)).as("match_id"))
 
   /** STREAMING twin of [[incrementalDedup]] — the ingest gate run ON
     * the arriving stream: `delta` is a STREAMING (doc_id, text)
@@ -603,14 +618,13 @@ object Dedup {
     * in one micro-batch and emits its final row there
     * (IncrementalDedupStreamSpec proves batch equality).
     *
-    * Shape: the delta side is STATELESS — signatures are row-local
-    * HOF folds (min over the doc's shingle hashes per hash function —
-    * identical values to the batch explode+groupBy path), bands
-    * explode to 4 rows, and candidates come from a stream-static LEFT
-    * join against the base banded index (left keeps clean docs
-    * alive). The only stateful op is the closing per-doc collect_set.
-    * Docs under `shingleK` tokens are dropped (the batch twin has no
-    * signature for them either). `maxBucket` caps the BASE index's
+    * Shape: the delta side is STATELESS — signatures come from the
+    * same row-local kernel as the batch path, bands explode to 4 rows,
+    * and candidates come from a stream-static LEFT join against the
+    * base banded index (the batch path's [[deltaReport]]; left keeps
+    * clean docs alive). The only stateful op is the closing per-doc
+    * collect_set. Docs under 5 tokens are dropped (the batch twin has
+    * no signature for them either). `maxBucket` caps the BASE index's
     * hot buckets (the batch cap covers base+delta; a capped-out
     * bucket differs only when the delta batch itself tips a bucket
     * over — document, don't chase). */
@@ -618,56 +632,10 @@ object Dedup {
                              k: Int = 16, bands: Int = 4,
                              minEstSim: Double = 0.5,
                              maxBucket: Option[Long] = Some(MinhashMaxBucket)): DataFrame = {
-    val rows = k / bands
-    // static side: banded index carrying the full signature per member
-    val baseSig = minhashSignatures(base, k).localCheckpoint()
-    val baseBanded0 = (0 until bands).map { b =>
-      val cols = (b * rows until (b + 1) * rows).map(i => col(s"m$i"))
-      baseSig.select(col("doc_id").as("base_id"), lit(b).as("band"),
-        concat_ws("_", cols: _*).as("bkey"),
-        array((0 until k).map(i => col(s"m$i")): _*).as("base_sig"))
-    }.reduce(_ unionByName _)
-    val baseBanded = maxBucket.fold(baseBanded0) { cap =>
-      val hot = baseBanded0.groupBy("band", "bkey").agg(count(lit(1)).as("_n"))
-        .where(col("_n") > cap).select(col("band"), col("bkey"))
-      baseBanded0.join(hot, Seq("band", "bkey"), "left_anti")
-    }
-    // delta side: row-local signature (min over shingle hashes per
-    // hash function — no shuffle, stream-safe); r20: the fused native
-    // tokenize + shingle-hash kernels, value-identical to the
-    // regexp/concat_ws/md5-hex chain
-    val toks = org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text"))
-    val hashes = transform(
-      org.apache.spark.sql.graft.ShingleHash60Expr.shingleHashes(col("toks"), 5),
-      h => pmod(h, lit(MinhashP)))
-    val sigArr = array(minhashParams(k).map { case (a, b) =>
-      array_min(transform(col("hx"), x => (x * a + b) % MinhashP))
-    }: _*)
-    val dsig = delta
-      .select(col("doc_id"), toks.as("toks"))
-      .where(size(col("toks")) >= 5)
-      .select(col("doc_id"), hashes.as("hx"))
-      .select(col("doc_id"), sigArr.as("sig"))
-    val banded = dsig.select(col("doc_id"), col("sig"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat_ws("_", (b * rows until (b + 1) * rows)
-            .map(i => col("sig").getItem(i)): _*).as("bkey"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("sig"),
-        col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    val est = zip_with(col("sig"), col("base_sig"),
-      (x, y) => when(x === y, 1).otherwise(0))
-    val scored = banded.join(baseBanded, Seq("band", "bkey"), "left")
-      .select(col("doc_id"),
-        when(col("base_id").isNotNull &&
-             aggregate(est, lit(0), (acc, v) => acc + v).cast("double") / k >= minEstSim,
-          col("base_id")).as("hit"))
-    scored.groupBy("doc_id")
-      .agg(collect_set(col("hit")).as("hits"))
-      .select(col("doc_id"),
-        size(col("hits")).cast("long").as("n_matches"),
-        coalesce(array_min(col("hits")), lit(-1L)).as("match_id"))
+    // static side, pinned: every micro-batch probes it
+    val baseBands = flagHot(bandRows(signatures(base, k), k, bands), maxBucket)
+      .where(!col("_hot")).localCheckpoint()
+    deltaReport(bandRows(signatures(delta, k), k, bands), baseBands, k, minEstSim)
   }
 
   /** MinHash estimator EVALUATION: every LSH candidate pair with (a)
@@ -683,11 +651,11 @@ object Dedup {
     * All counts exact Longs; jac_u = round(inter·10⁶/union). */
   def minhashEval(docs: DataFrame, k: Int = 16, bands: Int = 4,
                   shingleK: Int = 5): DataFrame = {
-    // ONE shingle scan feeds both the signatures and the exact side
-    // (the r14 multi-branch pinning rule: lazy plans re-run the
-    // tokenize+hash scan per consuming branch)
-    val sh = hashedShingles(docs, shingleK).localCheckpoint()
-    val est = minhashPairsFrom(minhashSignaturesFrom(sh, k).localCheckpoint(),
+    // the pinned shingle set feeds the exact side (sizes and both
+    // intersection joins); the signatures come from their own
+    // shuffle-free scan
+    val sh = hashedShingles(docs, shingleK)
+    val est = minhashPairsFrom(signatures(docs, k, shingleK),
         k, bands, minEstSim = 0.0, maxBucket = Some(MinhashMaxBucket))
       .select(col("d1"), col("d2"),
         round(col("est_sim") * k).cast("long").as("est_matches"))

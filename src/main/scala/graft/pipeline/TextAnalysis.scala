@@ -1212,68 +1212,61 @@ object TextAnalysis {
     * pattern), so outputs are order-free integers:
     * (doc_id, n_scored, score_q).
     *
-    * Scale: three count tables from one tokenize pass (map-side
-    * combined groupBys — the count-collection step Brants et al.
-    * distribute exactly this way), per-doc lead() windows bounded by
-    * doc length, then equi-joins on the gram keys. */
+    * Scale: each doc is tokenized once, on its side of the parity
+    * split, and every token row takes its two successors from the
+    * doc's own token array (no window sort). The three count tables
+    * are ONE map-side-combined aggregate keyed (a, b, c) — the
+    * count-collection step Brants et al. distribute exactly this way
+    * — probed by one lookup join. */
   def stupidBackoff(docs: DataFrame, alpha: Double = 0.5): DataFrame = {
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("pos")
-    val toks = docs.select(col("doc_id"),
-        posexplode(org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text"))))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("w"))
-      .localCheckpoint() // feeds the train counts AND the scoring side
-    val train = toks.where(pmod(col("doc_id"), lit(2)) === 0)
-    def grams(df: DataFrame): DataFrame = df
-      .withColumn("w2", lead("w", 1).over(byDoc))
-      .withColumn("w3", lead("w", 2).over(byDoc))
-    val tg = grams(train).localCheckpoint() // c2 and c3 both read it
-    val c1 = train.groupBy(col("w").as("u")).agg(count(lit(1)).as("c1"))
-    val c2 = tg.where(col("w2").isNotNull)
-      .groupBy(col("w").as("a"), col("w2").as("b")).agg(count(lit(1)).as("c2"))
-    val c3 = tg.where(col("w3").isNotNull)
-      .groupBy(col("w").as("a"), col("w2").as("b"), col("w3").as("c"))
-      .agg(count(lit(1)).as("c3"))
-    val n = train.agg(count(lit(1)).as("ntr"))
-    // r21 (guide §2.4/§3): the five differently-keyed left joins
-    // (c3, c2 twice, c1 twice — each its own exchange pair) fold into
-    // ONE lookup join: the count tables union into a single table
-    // keyed (kind, a, b, c) — "" pads unused arity slots (tokens are
-    // nonempty [a-z0-9]+ runs, so "" never collides) — and each scored
-    // trigram explodes into its five probe keys tagged with the slot
-    // they fill. A probe matches at most one lookup row (the counts
-    // are keyed aggregates), so the per-(doc, pos) pivot below is
-    // value-identical to the old joined row, nulls included (left
-    // join miss == absent probe hit == null slot).
+    // (doc_id, pos, w, w2, w3) of one parity side: w2/w3 are the next
+    // two tokens of the same doc, null past its end
+    def grams(parity: Int): DataFrame = docs
+      .where(pmod(col("doc_id"), lit(2)) === parity)
+      .select(col("doc_id"),
+        org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text")).as("t"))
+      .select(col("doc_id"), col("t"), posexplode(col("t")).as(Seq("pos", "w")))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("w"),
+        get(col("t"), col("pos") + 1).as("w2"), get(col("t"), col("pos") + 2).as("w3"))
+    // r21 (guide §2.4/§3): the count tables share ONE lookup table
+    // keyed (a, b, c) — "" pads unused arity slots, and since tokens
+    // are nonempty [a-z0-9]+ runs, the padding alone tells a unigram
+    // (a, "", "") from a bigram (a, b, "") from a trigram — and each
+    // scored trigram explodes into its five probe keys, numbered by
+    // the slot they fill. A probe matches at most one lookup row (the
+    // counts are keyed aggregates), so the per-(doc, pos) pivot below
+    // is value-identical to five separate left joins, nulls included
+    // (left join miss == absent probe hit == null slot). Every train
+    // token emits its unigram, bigram and trigram keys; a key running
+    // past the doc's end is null and drops.
     val e = lit("")
-    val lut = c3.select(lit(3).as("kind"), col("a"), col("b"), col("c"),
-        col("c3").as("cnt"))
-      .unionByName(c2.select(lit(2).as("kind"), col("a"), col("b"),
-        e.as("c"), col("c2").as("cnt")))
-      .unionByName(c1.select(lit(1).as("kind"), col("u").as("a"), e.as("b"),
-        e.as("c"), col("c1").as("cnt")))
-    val probes = grams(toks.where(pmod(col("doc_id"), lit(2)) === 1))
-      .where(col("w3").isNotNull) // lead(w,2) defined => lead(w,1) is too
-      .select(col("doc_id"), col("pos"), explode(array(
-        struct(lit(3).as("kind"), col("w").as("a"), col("w2").as("b"),
-          col("w3").as("c"), lit("c3").as("slot")),
-        struct(lit(2).as("kind"), col("w").as("a"), col("w2").as("b"),
-          e.as("c"), lit("c2ctx").as("slot")),
-        struct(lit(2).as("kind"), col("w2").as("a"), col("w3").as("b"),
-          e.as("c"), lit("c2bo").as("slot")),
-        struct(lit(1).as("kind"), col("w2").as("a"), e.as("b"),
-          e.as("c"), lit("c1w2").as("slot")),
-        struct(lit(1).as("kind"), col("w3").as("a"), e.as("b"),
-          e.as("c"), lit("c1w3").as("slot")))).as("p"))
-      .select(col("doc_id"), col("pos"), col("p.kind").as("kind"),
-        col("p.a").as("a"), col("p.b").as("b"), col("p.c").as("c"),
-        col("p.slot").as("slot"))
-    def slot(name: String) = max(when(col("slot") === name, col("cnt")))
-    val scored = probes.join(lut, Seq("kind", "a", "b", "c"), "left")
+    def key(a: Column, b: Column, c: Column): Column =
+      struct(a.as("a"), b.as("b"), c.as("c"))
+    val lut = grams(0)
+      .select(explode(array(key(col("w"), e, e), key(col("w"), col("w2"), e),
+        key(col("w"), col("w2"), col("w3")))).as("g"))
+      .where(col("g.b").isNotNull && col("g.c").isNotNull)
+      .groupBy(col("g.a").as("a"), col("g.b").as("b"), col("g.c").as("c"))
+      .agg(count(lit(1)).as("cnt"))
+    // N = train tokens = the unigram counts' sum; the same aggregate
+    // subtree, so its exchange is reused, not recomputed
+    val n = lut.where(col("b") === "")
+      .agg(coalesce(sum(col("cnt")), lit(0L)).as("ntr"))
+    // slots: 0 = c3(w w2 w3), 1 = c2(w w2), 2 = c2(w2 w3), 3 = c1(w2),
+    // 4 = c1(w3)
+    val probes = grams(1)
+      .where(col("w3").isNotNull) // w3 defined => w2 is too
+      .select(col("doc_id"), col("pos"), posexplode(array(
+        key(col("w"), col("w2"), col("w3")), key(col("w"), col("w2"), e),
+        key(col("w2"), col("w3"), e), key(col("w2"), e, e),
+        key(col("w3"), e, e))).as(Seq("slot", "p")))
+      .select(col("doc_id"), col("pos"), col("slot"),
+        col("p.a").as("a"), col("p.b").as("b"), col("p.c").as("c"))
+    def slot(i: Int) = max(when(col("slot") === i, col("cnt")))
+    val scored = probes.join(lut, Seq("a", "b", "c"), "left")
       .groupBy("doc_id", "pos")
-      .agg(slot("c3").as("c3"), slot("c2ctx").as("c2ctx"),
-        slot("c2bo").as("c2bo"), slot("c1w2").as("c1w2"),
-        slot("c1w3").as("c1w3"))
+      .agg(slot(0).as("c3"), slot(1).as("c2ctx"), slot(2).as("c2bo"),
+        slot(3).as("c1w2"), slot(4).as("c1w3"))
       .crossJoin(broadcast(n))
     val s = when(col("c3").isNotNull,
         col("c3").cast("double") / col("c2ctx").cast("double"))

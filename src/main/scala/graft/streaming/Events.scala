@@ -445,8 +445,8 @@ object Events {
   final case class BucketState(docs: List[(Long, Seq[Long])])
 
   /** Streaming MinHash near-dup detection — the streaming twin of
-    * pipeline.Dedup.minhashPairs. Per-doc signatures are computed with
-    * pure column HOFs (shingle -> hash -> k mins), so the only stateful
+    * pipeline.Dedup.minhashPairs. Per-doc signatures come from the same
+    * row-local kernel as the batch path, so the only stateful
     * stage is the per-LSH-bucket match: each bucket keys a
     * flatMapGroupsWithState whose state holds the signatures seen in
     * that bucket inside the watermark horizon. A new doc that matches
@@ -464,30 +464,19 @@ object Events {
                        shingleK: Int = 5, minEstSim: Double = 0.5,
                        maxStatePerBucket: Int = 1000,
                        tsCol: String = "ts"): Dataset[NearDup] = {
-    import graft.pipeline.Dedup
     val spark = docs.sparkSession
     import spark.implicits._
     val rows = k / bands
-    val p = Dedup.MinhashP
-
-    val toks = org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text"))
-    val shingles = transform(
-      sequence(lit(1), size(col("_toks")) - (shingleK - 1)),
-      i => concat_ws(" ", slice(col("_toks"), i, lit(shingleK))))
-    val hashes = transform(col("_sh"),
-      s => org.apache.spark.sql.graft.Md5Prefix60Expr.md5Prefix60(s) % p)
-    val sig = array(Dedup.minhashParams(k).map { case (a, b) =>
-      array_min(transform(col("_hx"), x => (x * a + b) % p))
-    }: _*)
+    // the batch path's row-local signature kernel (null under
+    // shingleK tokens)
+    val sig = org.apache.spark.sql.graft.MinhashSigExpr.minhashSig(
+      org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text")), shingleK, k)
 
     docs
       .withColumn("ets", timestamp_micros(expr(s"$tsCol div 1000")))
       .withWatermark("ets", "1 hour")
-      .withColumn("_toks", toks)
-      .where(size(col("_toks")) >= shingleK)
-      .withColumn("_sh", shingles)
-      .withColumn("_hx", hashes)
       .withColumn("_sig", sig)
+      .where(col("_sig").isNotNull)
       .select(col("doc_id").as[Long], col("_sig").as[Seq[Long]],
         explode(array((0 until bands).map { b =>
           concat_ws("_", lit(b) +: (b * rows until (b + 1) * rows)

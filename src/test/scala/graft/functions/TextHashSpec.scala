@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{Md5Prefix60Expr, ShingleHash60Expr, TokenizeExpr}
+import org.apache.spark.sql.graft.{Md5Prefix60Expr, MinhashSigExpr, ShingleHash60Expr, TokenizeExpr}
 
 import graft.SparkSpec
+import graft.pipeline.Dedup
 
 /** The r20 native text kernels must be VALUE-IDENTICAL to the Spark
   * expression chains they replaced — the whole optimization contract
@@ -95,5 +96,46 @@ class TextHashSpec extends SparkSpec {
         TokenizeExpr.tokenizeLower(col("text")), 3).as("sh")).collect()
     assert(viaSql.map(_.toString).sorted.toSeq ==
       viaCol.map(_.toString).sorted.toSeq)
+  }
+
+  test("minhashSig == explode + distinct + groupBy min over the shingle hashes") {
+    val extra = Seq(
+      "a b c d e a b c d e a b c d e a b c d e", // every shingle repeats
+      "one two three four five",                 // exactly 5 tokens
+      "too short doc",                           // 3 tokens: no row at shingleK 5
+      "München straße İstanbul café naïve один два three")
+    val docs = (rows ++ extra).zipWithIndex.map(_.swap).toDF("id", "text")
+    val k = 16
+    for (shingleK <- Seq(3, 5)) {
+      val toks = TokenizeExpr.tokenizeLower(col("text"))
+      val mins = Dedup.minhashParams(k).map { case (a, b) =>
+        min((col("x") * a + b) % Dedup.MinhashP) }
+      val old = docs.select(col("id"), toks.as("toks"))
+        .where(size(col("toks")) >= shingleK)
+        .select(col("id"),
+          explode(ShingleHash60Expr.shingleHashes(col("toks"), shingleK)).as("h"))
+        .distinct()
+        .select(col("id"), (col("h") % Dedup.MinhashP).as("x"))
+        .groupBy("id").agg(mins.head, mins.tail: _*)
+        .collect().map(r => r.getInt(0) -> (1 to k).map(r.getLong)).toMap
+      val got = docs
+        .select(col("id"), MinhashSigExpr.minhashSig(toks, shingleK, k).as("sig"))
+        .where(col("sig").isNotNull)
+        .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+      assert(got == old, s"shingleK=$shingleK")
+      val ids = extra.indices.map(_ + rows.size)
+      assert(got.contains(ids(0)) && got.contains(ids(1)) && got.contains(ids(3)))
+      // three tokens: a signature at shingleK 3, no row at shingleK 5
+      assert(got.contains(ids(2)) == (shingleK == 3))
+    }
+    // the SQL registration builds the same kernel
+    docs.createOrReplaceTempView("minhash_docs")
+    val viaSql = spark.sql(
+      "SELECT id, minhash_sig(tokenize_lower(text), 5, 16) AS sig FROM minhash_docs")
+      .collect().map(_.toString).sorted.toSeq
+    val viaCol = docs.select(col("id"),
+      MinhashSigExpr.minhashSig(TokenizeExpr.tokenizeLower(col("text")), 5, 16).as("sig"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(viaSql == viaCol)
   }
 }

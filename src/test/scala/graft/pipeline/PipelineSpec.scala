@@ -138,6 +138,58 @@ class PipelineSpec extends SparkSpec {
     assert(pairs.contains((1L, 2L)))
   }
 
+  test("minhashPairs: a bucket over maxBucket drops, as the oracle's count(*) > cap rule") {
+    val txtA = "the quick brown fox jumps over the lazy dog and then runs far away home"
+    val txtB = "completely different content about spark dataframes and shuffle exchanges"
+    val d = Seq((1L, txtA), (2L, txtA), (3L, txtA), (4L, txtB), (5L, txtB))
+      .toDF("doc_id", "text")
+    def pairs(cap: Option[Long]) = Dedup.minhashPairs(d, maxBucket = cap)
+      .as[(Long, Long, Double)].collect().toSet
+    // the three identical docs fill every band bucket with 3 > 2 rows
+    assert(pairs(Some(2L)) == Set((4L, 5L, 1.0)))
+    assert(pairs(Some(3L)) == Set((1L, 2L, 1.0), (1L, 3L, 1.0), (2L, 3L, 1.0), (4L, 5L, 1.0)))
+    assert(pairs(None) == pairs(Some(3L)))
+  }
+
+  /** Stupid backoff by hand: counts from the even docs, one score per
+    * trigram of each odd doc, quantized like the engine (HALF_UP). */
+  private def backoffRef(d: Seq[(Long, String)]): Set[(Long, Long, Long)] = {
+    def toks(s: String) = "[a-z0-9]+".r.findAllIn(s.toLowerCase).toSeq
+    val train = d.filter(_._1 % 2 == 0).map(r => toks(r._2))
+    def counts(n: Int) = train.flatMap(_.sliding(n).filter(_.size == n))
+      .groupBy(identity).map { case (g, v) => g -> v.size.toLong }
+    val (c1, c2, c3) = (counts(1), counts(2), counts(3))
+    val ntr = train.map(_.size).sum.toDouble
+    d.filter(_._1 % 2 == 1).flatMap { case (id, text) =>
+      val ts = toks(text)
+      if (ts.size < 3) None
+      else {
+        val qs = ts.sliding(3).map { g =>
+          val s = c3.get(g).map(_.toDouble / c2(g.take(2)))
+            .orElse(c2.get(g.drop(1)).map(c => 0.5 * (c.toDouble / c1(g.slice(1, 2)))))
+            .orElse(c1.get(g.drop(2)).map(c => 0.25 * (c / ntr)))
+            .getOrElse(0.0)
+          BigDecimal(s * 1000000.0).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        }.toSeq
+        Some((id, qs.size.toLong, qs.sum))
+      }
+    }.toSet
+  }
+
+  test("stupidBackoff: short docs, repeated tokens and an empty train side match by hand") {
+    val corpora = Seq(
+      Seq((2L, "a a a a"), (4L, "a b"), (6L, "b"), (8L, "a b a b c"),
+        (1L, "a"), (3L, "a b"), (5L, "a b c"), (7L, "a a a a b"), (9L, "c c c b a")),
+      // odd ids only: nothing to train on, every trigram scores 0
+      Seq((1L, "a b c d"), (3L, "x y z"), (5L, "x y")))
+    for (c <- corpora) {
+      val got = TextAnalysis.stupidBackoff(c.toDF("doc_id", "text"))
+        .as[(Long, Long, Long)].collect().toSet
+      assert(got == backoffRef(c), c.toString)
+    }
+    assert(backoffRef(corpora(1)) == Set((1L, 2L, 0L), (3L, 1L, 0L)))
+  }
+
   test("pipelineReport: staged funnel counts by hand (gopher, quality, dedup)") {
     // good: 60 plain words with stopwords -> passes everything
     val good = Seq.fill(12)("the quick brown fox jumps").mkString(" ")
