@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds.
   *
   * Forces full computation with a noop-sink write — a bare count()
@@ -11,20 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // RDD-land shuffles (the r21 Pregel fixpoint loops) serialize per
-      // record through spark.serializer; the JavaSerializer default
-      // costs ~10x Kryo per row at any scale (SQL exchanges are
-      // unaffected - they use UnsafeRow)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // JIT/codegen warmup so the first measured query isn't charged for
     // session bring-up (driver compares per-query numbers). One warmup
     // per major code path: q_rasterize covers the raster

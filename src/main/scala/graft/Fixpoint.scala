@@ -251,7 +251,10 @@ object LongIndex {
   * benchmark run of the keyed-RDD loops this replaces spent about half
   * of their executor samples in `SizeEstimator`, under RDD `join`
   * (CoGroupedRDD), the checkpoint blocks of `(Long, Long)` tuples and
-  * the `reduceByKey`/`aggregateByKey` combiners. */
+  * the `reduceByKey`/`aggregateByKey` combiners. Every step's input
+  * enters through [[input]], which the guarded driver fast paths read
+  * too; [[loop]] also drives the tile-state rounds of
+  * `Distance.costDistanceTiled`, whose state is not blocks. */
 object Fixpoint {
   type Blocks = RDD[LongBlock]
 
@@ -268,24 +271,51 @@ object Fixpoint {
     if (m < 0) m + n else m
   }
 
-  /** Blocks keyed by the first column of `df` (1-3 columns; DOUBLE
-    * columns keep their raw IEEE bits, the others are cast to long). */
-  def fromDF(df: DataFrame, part: HashPartitioner): Blocks = {
+  /** The one entry of every loop step: one block per partition of `df`
+    * in place (no re-key), keyed by its first column (1-3 columns;
+    * DOUBLE columns keep their raw IEEE bits, the others are cast to
+    * long), localCheckpointed, with their exact row count, all in ONE
+    * job. Guards compare the count; the distributed path re-keys the
+    * blocks with [[shuffle]], and driver fast paths [[collect]] them. */
+  def input(df: DataFrame): (Blocks, Long) = {
     val w = df.columns.length - 1
-    require(w >= 0 && w <= 2, "fromDF: 1-3 columns")
+    require(w >= 0 && w <= 2, "input: 1-3 columns")
     val bits = df.schema.fields.map(_.dataType == DoubleType)
     val rows = df.select(df.columns.toSeq.zip(bits).map { case (c, b) =>
       if (b) df(c) else df(c).cast("long") }: _*).queryExecution.toRdd
     def get(r: InternalRow, i: Int): Long =
       if (bits(i)) java.lang.Double.doubleToRawLongBits(r.getDouble(i)) else r.getLong(i)
-    shuffle(rows.mapPartitions { it =>
+    val in = rows.mapPartitions { it =>
       val b = new LongBlock.Builder(w)
       it.foreach { r =>
         b.add(get(r, 0), if (w >= 1) get(r, 1) else 0L, if (w >= 2) get(r, 2) else 0L)
       }
       Iterator.single(b.result())
-    }, part)
+    }.localCheckpoint()
+    (in, count(in))
   }
+
+  /** A driver fast path's view of pinned [[input]] blocks: every row in
+    * one block, in partition order ([[all]], one collect), and [[emit]],
+    * which puts a result column aligned with those rows back onto the
+    * pinned blocks by broadcast (no join). */
+  final class Collected private[Fixpoint] (in: Blocks) {
+    private val parts = in.collect()
+    val all: LongBlock = LongBlock.concat(parts.iterator)
+
+    /** `in`'s keys with v1 = `col` (one value per row of [[all]]). */
+    def emit(col: Array[Long]): Blocks = {
+      require(col.length == all.size, "emit: one value per collected row")
+      val offs = parts.scanLeft(0)(_ + _.size)
+      val bc = in.context.broadcast(Array.tabulate(parts.length) { p =>
+        java.util.Arrays.copyOfRange(col, offs(p), offs(p + 1)) })
+      in.mapPartitionsWithIndex((p, it) => it.map(b => LongBlock(b.keys, bc.value(p))),
+        preservesPartitioning = true)
+    }
+  }
+
+  /** Collects `in` for a driver fast path (one job). */
+  def collect(in: Blocks): Collected = new Collected(in)
 
   def map(b: Blocks)(f: LongBlock => LongBlock): Blocks =
     b.mapPartitions(it => Iterator.single(f(LongBlock.concat(it))), preservesPartitioning = true)
@@ -364,26 +394,18 @@ object Fixpoint {
   def rows[T: ClassTag](b: Blocks)(f: (LongBlock, Int) => T): RDD[T] =
     b.mapPartitions(_.flatMap(x => Iterator.range(0, x.size).map(f(x, _))))
 
-  /** Exact row count (one job). */
+  /** Exact row count (one job; it also completes a pending
+    * localCheckpoint of `b`). */
   def count(b: Blocks): Long = b.map(_.size.toLong).fold(0L)(_ + _)
-
-  /** Eagerly localCheckpoints `state` in ONE job; returns the exact
-    * row count of each RDD (one block per partition each). */
-  def materialize(state: Seq[Blocks]): Array[Long] = {
-    state.foreach(_.localCheckpoint())
-    val sc = state.head.context
-    sc.runJob(sc.union(state), (it: Iterator[LongBlock]) => it.map(_.size.toLong).toArray)
-      .reduce((x, y) => x.zip(y).map { case (p, q) => p + q })
-  }
 
   /** One round of a [[loop]]: its index, the change counter the step
     * fills (tasks may capture the round), and [[pin]] for intermediates
     * the step consumes twice. */
   final class Round private[Fixpoint] (val index: Int, val changed: LongAccumulator)
       extends Serializable {
-    @transient private[Fixpoint] val pinned = mutable.ArrayBuffer.empty[Blocks]
+    @transient private[Fixpoint] val pinned = mutable.ArrayBuffer.empty[RDD[_]]
     /** Checkpointed with this round's state and released after it. */
-    def pin(b: Blocks): Blocks = { b.localCheckpoint(); pinned += b; b }
+    def pin[R <: RDD[_]](b: R): R = { b.localCheckpoint(); pinned += b; b }
   }
 
   /** Runs `step` from `init` until a round changes nothing. Each
@@ -391,10 +413,12 @@ object Fixpoint {
     * job that also fills the round's `changed` accumulator (task
     * retries only inflate it: a spurious nonzero costs one idempotent
     * round, zero is a true fixpoint); then the superseded state and the
-    * round's pins are unpersisted. More than `maxRounds` rounds fail
-    * with `capMsg`. Returns the final state. */
-  def loop(what: String, maxRounds: Long, capMsg: => String)(init: Seq[Blocks])(
-      step: (Seq[Blocks], Round) => Seq[Blocks]): Seq[Blocks] = {
+    * round's pins are unpersisted, and after the first round also
+    * `release` (the input blocks `init` was built from). More than
+    * `maxRounds` rounds fail with `capMsg`. Returns the final state. */
+  def loop[T: ClassTag](what: String, maxRounds: Long, capMsg: => String,
+                        release: Seq[RDD[_]] = Nil)(init: Seq[RDD[T]])(
+      step: (Seq[RDD[T]], Round) => Seq[RDD[T]]): Seq[RDD[T]] = {
     val sc = init.head.context
     init.foreach(b => if (b.getStorageLevel == StorageLevel.NONE) b.localCheckpoint())
     var state = init
@@ -404,9 +428,10 @@ object Fixpoint {
       require(r < maxRounds, capMsg)
       val round = new Round(r, sc.longAccumulator(s"graft_${what}_$r"))
       val next = step(state, round)
-      materialize(next)
-      (state ++ round.pinned).filterNot(b => next.exists(_ eq b))
-        .foreach(_.unpersist(blocking = false))
+      next.foreach(_.localCheckpoint())
+      sc.runJob(sc.union(next), (it: Iterator[T]) => it.foreach(_ => ()))
+      (state ++ round.pinned ++ (if (r == 0) release else Nil))
+        .filterNot(b => next.exists(_ eq b)).foreach(_.unpersist(blocking = false))
       state = next
       done = round.changed.value == 0
       r += 1

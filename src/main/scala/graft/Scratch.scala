@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling entry (not part of the driver contract):
   * `runMain graft.Scratch <sfDir> [query ...]` times the named
   * SparkEntry queries (twice each when EXPLAIN=1 also prints plans).
@@ -9,14 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Scratch {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("AQE", "true"))
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
+    spark.conf.set("spark.sql.adaptive.enabled", sys.env.getOrElse("AQE", "true"))
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     if (args.lift(1).contains("entry")) {
       val n = SparkEntry.entry(spark).count()

@@ -967,17 +967,19 @@ object Dedup {
     * minimum node, so the result is canonical and deterministic no
     * matter how the rounds interleaved.
     *
-    * Small-graph fast path: when the pair rows fit the
-    * `maxDriverEdges` guard (default 2^22 pairs ~ 64 MB), the
-    * components are solved with an in-memory union-find and the
-    * labels broadcast-joined back — one collect instead of O(log n)
-    * iterative rounds, each of which costs a job, its stages and a
-    * checkpoint that dwarf the data at small scale. The guard keeps the
-    * 100 TB story: a web-scale duplicate graph overflows the threshold
-    * and takes the distributed loop (same labels either way — both
-    * fixpoints are min-id-per-component). The guard counts pair rows
-    * as given, duplicates included (both paths tolerate duplicates;
-    * the distributed one drops them when it builds its blocks), so a
+    * The pairs enter as pinned blocks with their exact count
+    * ([[graft.Fixpoint.input]], one job). Small-graph fast path: when
+    * that count fits the `maxDriverEdges` guard (default 2^22 pairs ~
+    * 64 MB), the collected blocks are solved with an in-memory
+    * union-find and the labels broadcast-joined onto `vertices` — one
+    * collect instead of O(log n) iterative rounds, each of which costs
+    * a job, its stages and a checkpoint that dwarf the data at small
+    * scale. The guard keeps the 100 TB story: a web-scale duplicate
+    * graph overflows the threshold and takes the distributed loop
+    * (same labels either way — both fixpoints are
+    * min-id-per-component). The count is of non-self pair rows as
+    * given, duplicates included (both paths tolerate duplicates; the
+    * distributed one drops them when it re-keys the blocks), so a
     * duplicate-heavy input reaches the distributed loop a little
     * earlier than its distinct edge count would. The decontamination
     * broadcast guard is the precedent.
@@ -993,11 +995,9 @@ object Dedup {
                           maxDriverEdges: Long = 1L << 22): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val e00 = pairs.select(
+    val (in, nPairs) = Fixpoint.input(pairs.select(
         col("d1").cast("long").as("u"), col("d2").cast("long").as("v"))
-      .where(col("u") =!= col("v"))
-      .localCheckpoint()
-    val nPairs = e00.count()
+      .where(col("u") =!= col("v")))
     if (nPairs <= maxDriverEdges) {
       // union-find with path halving, union by MIN root so every
       // root is its component's minimum id — identical labels to the
@@ -1012,13 +1012,15 @@ object Dedup {
         }
         x
       }
-      // one collect (guard-bounded ~64 MB), not toLocalIterator —
-      // the latter schedules one job PER PARTITION
-      e00.as[(Long, Long)].collect().foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
+      val e = Fixpoint.collect(in).all
+      in.unpersist(blocking = false)
+      var i = 0
+      while (i < e.size) {
+        val (ru, rv) = (find(e.keys(i)), find(e.v1(i)))
         if (ru != rv) {
           if (ru < rv) parent(rv) = ru else parent(ru) = rv
         }
+        i += 1
       }
       val labels = parent.keys.toSeq.map(x => (x, find(x))).filter(p => p._1 != p._2)
       if (labels.isEmpty)
@@ -1031,11 +1033,11 @@ object Dedup {
     }
 
     val part = Fixpoint.partitioner(spark.sparkContext, nPairs)
-    val e0 = Fixpoint.map(Fixpoint.fromDF(e00, part))(LongBlock.sortedDistinct)
+    val e0 = Fixpoint.map(Fixpoint.shuffle(in, part))(LongBlock.sortedDistinct)
     val edges = Fixpoint.loop("cc", maxIter,
         s"connectedComponents did not converge in $maxIter large/small-star " +
-        "rounds — result would be a partial edge set, not components; raise maxIter")(
-        Seq(e0)) { (s, r) =>
+        "rounds — result would be a partial edge set, not components; raise maxIter",
+        release = Seq(in))(Seq(e0)) { (s, r) =>
       val e = s.head
       // large-star: every neighbor bigger than x re-points at m(x), the
       // minimum of x's closed neighborhood. The reverse edges join each
@@ -1043,8 +1045,8 @@ object Dedup {
       // rows are keyed by y, the big end of the small-star's directed
       // edges (y > x >= m(x)), for the second re-key.
       val rev = Fixpoint.shuffle(Fixpoint.map(e)(b => LongBlock(b.v1, b.keys)), part)
-      val ls = Fixpoint.shuffle(Fixpoint.zip(e, rev) { (out, in) =>
-        val adj = LongBlock.concat(Iterator(out, in))
+      val ls = Fixpoint.shuffle(Fixpoint.zip(e, rev) { (out, back) =>
+        val adj = LongBlock.concat(Iterator(out, back))
         val mn = LongBlock.reduce(adj, LongBlock.Agg.Min)
         val ix = mn.index
         val b = new LongBlock.Builder(1, adj.size)

@@ -222,7 +222,6 @@ object Distance {
     *         the accumulated cost at each path cell micro-quantized
     *         (round(d*1e5) as BIGINT — the portable closing) */
   def costPath(friction: RasterLayer, sources: DataFrame,
-               maxRounds: Int = 64,
                maxCost: Double = Double.PositiveInfinity,
                maxDriverCells: Long = 1L << 22,
                distance: Option[RasterLayer] = None): DataFrame = {
@@ -235,84 +234,95 @@ object Distance {
     // reuse a caller-supplied cost-distance layer (e.g. when the same
     // analysis also materializes costDistanceTiled) instead of paying
     // the whole fixpoint a second time
-    val dist = distance.getOrElse(costDistanceTiled(fr, sources, maxRounds, maxCost))
+    val dist = distance.getOrElse(costDistanceTiled(fr, sources, maxCost))
     val tl = fr.meta.layout.tileLayout
     val (tc, tr) = (tl.tileCols, tl.tileRows)
     val gridCols = tl.totalCols
-    // tile-aligned join + per-tile zip (r20): dist and friction tiles
-    // are co-keyed on (col, row), so joining TILES and exploding once
-    // replaces the old per-cell double explode + cell-keyed shuffle —
-    // same (x, y, d, f) rows (toCells' exact coordinate arithmetic)
-    val reachDf = dist.df.select(col("col").as("_tc"), col("row").as("_tr"),
-        col("tile").as("_d"))
+    // The reachable set enters as pinned blocks (linear id -> raw bits
+    // of d and f) with its exact size, in one job; the guard compares
+    // that size, so an over-guard disk routes to the distributed
+    // backtrack before anything reaches the driver. Tile-aligned join
+    // + per-tile zip (r20): dist and friction tiles are co-keyed on
+    // (col, row), so joining TILES and exploding once replaces a
+    // per-cell double explode + cell-keyed shuffle.
+    val (cells, nReach) = Fixpoint.input(dist.df.select(col("col").as("_tc"),
+        col("row").as("_tr"), col("tile").as("_d"))
       .join(fr.df.select(col("col").as("_tc"), col("row").as("_tr"),
         col("tile").as("_f")), Seq("_tc", "_tr"))
       .select(col("_tc"), col("_tr"),
         posexplode(arrays_zip(col("_d"), col("_f"))).as(Seq("off", "z")))
       .where(!isnan(col("z._d")) && !isnan(col("z._f")))
-      .select(
-        (col("_tc").cast("long") * tc + col("off") % tc).as("x"),
-        (col("_tr").cast("long") * tr + floor(col("off") / tc).cast("long")).as("y"),
-        col("z._d").as("d"), col("z._f").as("f"))
-      // linear id computed before the pin so the distributed backtrack
-      // consumes the SAME checkpointed rows (r21: it re-checkpointed a
-      // projection of this frame before — one extra materialization)
-      .withColumn("id", col("y") * gridCols + col("x"))
-      .localCheckpoint() // one compute: counted for the guard, then collected
-    // guard BEFORE materializing on the driver — count() keeps the
-    // reachable set distributed, so an over-guard disk routes to the
-    // distributed backtrack instead of OOMing the driver collect.
-    val nReach = reachDf.count()
-    if (nReach > maxDriverCells) return costPathDistributed(reachDf, gridCols, nReach)
-    val reach = reachDf.select(col("x"), col("y"), col("d"), col("f"))
-      .as[(Long, Long, Double, Double)].collect()
-    val byId = reach.map { case (x, y, d, f) => (y * gridCols + x) -> (x, y, d, f) }.toMap
-    if (byId.isEmpty)
-      return Seq.empty[(Long, Long, Long, Long)].toDF("seq", "x", "y", "v_u")
-    // dest: farthest reachable cell, ties to the smallest id
-    var cur = reach.map { case (x, y, d, _) => (d, y * gridCols + x) }
-      .reduce { (a, b) => if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b }._2
+      .select(((col("_tr").cast("long") * tr + floor(col("off") / tc).cast("long")) * gridCols +
+          col("_tc").cast("long") * tc + col("off") % tc).as("id"),
+        col("z._d"), col("z._f")))
+    if (nReach > maxDriverCells) return costPathDistributed(spark, cells, gridCols, nReach)
+    val all = Fixpoint.collect(cells).all
+    cells.unpersist(blocking = false)
+    val ix = all.index
+    def d(p: Int): Double = java.lang.Double.longBitsToDouble(all.v1(p))
     val Sqrt2 = math.sqrt(2.0)
-    val path = mutable.ListBuffer.empty[(Long, Long, Long, Double)]
+    val path = mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
+    val dest = farthest(all)
+    var cur = if (dest.size == 0) -1 else ix(dest.keys(0))
     var seq = 0L
-    var steps = 0
-    while ({
-      val (x, y, d, _) = byId(cur)
-      path += ((seq, x, y, d))
+    while (cur >= 0) {
+      val (x, y) = (all.keys(cur) % gridCols, all.keys(cur) / gridCols)
+      path += ((seq, x, y, d(cur)))
       // a simple path visits each reachable cell at most once; more
       // steps means the argmin chain cycled on a zero-friction
       // plateau — fail LOUDLY instead of silently truncating (the
       // old fixed 100000 cap returned a cut path with no error)
-      require(steps <= nReach,
+      require(seq <= nReach,
         s"cost-path backtrack exceeded the $nReach reachable cells — " +
           "zero-friction cycle in the next-hop chain")
-      d > 0
-    }) {
-      val (x, y, _, f) = byId(cur)
-      var best = (Double.PositiveInfinity, Long.MaxValue)
-      for (dy <- -1 to 1; dx <- -1 to 1 if dx != 0 || dy != 0) {
-        val nid = (y + dy) * gridCols + (x + dx)
-        byId.get(nid).foreach { case (nx, ny, nd, _) =>
-          if (nx == x + dx && ny == y + dy) { // no linear-id aliasing
-            val step = if (dx == 0 || dy == 0) 1.0 else Sqrt2
-            val key = nd + step * f
-            if (key < best._1 || (key == best._1 && nid < best._2)) best = (key, nid)
+      if (d(cur) > 0) {
+        val f = java.lang.Double.longBitsToDouble(all.v2(cur))
+        var bestKey = Double.PositiveInfinity
+        var bestId = Long.MaxValue
+        var next = -1
+        for (dy <- -1 to 1; dx <- -1 to 1 if dx != 0 || dy != 0) {
+          val (nx, ny) = (x + dx, y + dy)
+          // in-grid coordinates only, so no linear-id aliasing
+          val p = if (nx >= 0 && nx < gridCols && ny >= 0) ix(ny * gridCols + nx) else -1
+          if (p >= 0) {
+            val key = d(p) + (if (dx == 0 || dy == 0) 1.0 else Sqrt2) * f
+            if (key < bestKey || (key == bestKey && all.keys(p) < bestId)) {
+              bestKey = key; bestId = all.keys(p); next = p
+            }
           }
         }
-      }
-      cur = best._2
-      seq += 1; steps += 1
+        require(next >= 0, s"cost-path backtrack: cell ($x, $y) has no reachable neighbor")
+        cur = next
+      } else cur = -1
+      seq += 1
     }
-    path.toSeq.toDF("seq", "x", "y", "d")
-      .select(col("seq"), col("x"), col("y"),
-        // micro-quantized BIGINT closing (the CLAUDE.md r16 rule:
-        // never emit round(x, k) DOUBLE columns — integer rounding of
-        // the identical IEEE chain is engine-portable)
-        round(col("d") * 100000.0).cast("long").as("v_u"))
+    pathOut(path.toSeq.toDF("seq", "x", "y", "d"))
   }
 
-  /** The distributed [[costPath]] backtrack (over-guard regime):
-    *  1. dest = the (d desc, id asc) argmax, one limit(1);
+  /** The (d desc, id asc)-argmax row of a reach block — the farthest
+    * reachable cell — as a one-row block (empty for an empty block). */
+  private def farthest(b: LongBlock): LongBlock = {
+    def d(i: Int) = java.lang.Double.longBitsToDouble(b.v1(i))
+    var best = -1
+    var i = 0
+    while (i < b.size) {
+      if (best < 0 || d(i) > d(best) || (d(i) == d(best) && b.keys(i) < b.keys(best))) best = i
+      i += 1
+    }
+    if (best < 0) LongBlock.Empty
+    else LongBlock(Array(b.keys(best)), Array(b.v1(best)), Array(b.v2(best)))
+  }
+
+  /** (seq, x, y, v_u) of (seq, x, y, d) path rows: the accumulated cost
+    * micro-quantized — the BIGINT closing of the CLAUDE.md r16 rule
+    * (never emit round(x, k) DOUBLE columns; integer rounding of the
+    * identical IEEE chain is engine-portable). */
+  private def pathOut(path: DataFrame): DataFrame =
+    path.select(col("seq"), col("x"), col("y"), round(col("d") * 100000.0).cast("long").as("v_u"))
+
+  /** The distributed [[costPath]] backtrack (over-guard regime) over
+    * the pinned reach blocks `in`:
+    *  1. dest = the (d desc, id asc) argmax of the blocks' argmaxes;
     *  2. next-hop forest — every reachable cell with d > 0 points to
     *     the (d_n + step·f_cell, id)-argmin of its 8 present
     *     neighbors, from one re-key of neighbor offers (in-grid
@@ -323,26 +333,22 @@ object Distance {
     * The per-step argmin states the EXACT driver-walk comparison
     * ((key, nid) lexicographic min over the same IEEE key doubles),
     * so the emitted path is row-identical to the collected walk. */
-  private def costPathDistributed(cells: DataFrame, gridCols: Long,
+  private def costPathDistributed(spark: SparkSession, in: Fixpoint.Blocks, gridCols: Long,
                                   nReach: Long): DataFrame = {
-    val spark = cells.sparkSession
     import spark.implicits._
     val Sqrt2 = math.sqrt(2.0)
-    // cells (x, y, d, f, id) arrive PINNED from the caller — dest and
-    // the cell blocks both scan the checkpointed RDD
-    // dest is ONE row — collect it so round 1's frontier is a local
-    // relation (zero-job scans) instead of a checkpointed frame
-    val destRow = cells.orderBy(col("d").desc, col("id").asc).limit(1)
-      .select(col("id")).as[Long].take(1)
-    if (destRow.isEmpty)
-      return Seq.empty[(Long, Long, Long, Long)].toDF("seq", "x", "y", "v_u")
+    val dest = farthest(LongBlock.concat(in.map(farthest).collect().iterator))
+    if (dest.size == 0) {
+      in.unpersist(blocking = false)
+      return pathOut(Seq.empty[(Long, Long, Long, Double)].toDF("seq", "x", "y", "d"))
+    }
     // The backtrack runs on the Fixpoint kernel: cells (id -> raw bits
     // of d and f), frontier (node -> seq) and jump (node -> (ancestor,
     // hops)) are co-partitioned blocks, so the frontier probe is a
     // narrow zip, the grown frontier a narrow concatenation, and only
     // the re-keys shuffle.
     val part = Fixpoint.partitioner(spark.sparkContext, nReach)
-    val cellB = Fixpoint.fromDF(cells.select(col("id"), col("d"), col("f")), part).localCheckpoint()
+    val cellB = Fixpoint.shuffle(in, part).localCheckpoint()
     val offs = (for { dy <- -1 to 1; dx <- -1 to 1 if dx != 0 || dy != 0 } yield (dx, dy)).toArray
     // next-hop forest: every cell n offers its d to each in-grid
     // neighbor u = n - (dx, dy), tagged with the offset's index (one
@@ -388,7 +394,7 @@ object Distance {
       out.result()
     }
     val frontier0 = Fixpoint.shuffle(
-      spark.sparkContext.parallelize(Seq(LongBlock(Array(destRow.head), Array(0L))), 1), part)
+      spark.sparkContext.parallelize(Seq(LongBlock(dest.keys, Array(0L))), 1), part)
     // rows added to the frontier over all rounds (task retries only
     // inflate it, so an over-count is confirmed exactly below)
     val added = spark.sparkContext.longAccumulator("graft_cp_added")
@@ -423,7 +429,8 @@ object Distance {
     // the round's change count is step B's rows. State is (frontier,
     // squared table); the next round squares that table again first
     // (never when this round was the last). 24 rounds span 2^48 hops.
-    val chain = Fixpoint.loop("cp", 24, cycle)(Seq(frontier0, jump1)) { (s, r) =>
+    val chain = Fixpoint.loop("cp", 24, cycle, release = Seq(in))(Seq(frontier0, jump1)) {
+        (s, r) =>
       val Seq(frontier, half) = s
       // a simple path visits each reachable cell at most once — more
       // nodes means a zero-friction cycle in the next-hop chain
@@ -435,17 +442,12 @@ object Distance {
     }
     chain(1).unpersist(blocking = false)
     // the chain's cells, read from the cell blocks (a narrow zip)
-    Fixpoint.rows(Fixpoint.zip(chain.head, cellB) { (f, c) =>
+    pathOut(Fixpoint.rows(Fixpoint.zip(chain.head, cellB) { (f, c) =>
       val ix = c.index
       LongBlock(f.v1, f.keys, f.keys.map(n => c.v1(ix(n))))
     })((b, i) => (b.keys(i), b.v1(i) % gridCols, b.v1(i) / gridCols,
       java.lang.Double.longBitsToDouble(b.v2(i))))
-      .toDF("seq", "x", "y", "d")
-      .select(col("seq"), col("x"), col("y"),
-        // micro-quantized BIGINT closing (the CLAUDE.md r16 rule:
-        // never emit round(x, k) DOUBLE columns — integer rounding of
-        // the identical IEEE chain is engine-portable)
-        round(col("d") * 100000.0).cast("long").as("v_u"))
+      .toDF("seq", "x", "y", "d"))
   }
 
   /** ArcGIS Corridor: per-cell SUM of two accumulative-cost surfaces
@@ -464,7 +466,6 @@ object Distance {
   }
 
   def costDistanceTiled(friction: RasterLayer, sources: DataFrame,
-                        maxRounds: Int = 64,
                         maxCost: Double = Double.PositiveInfinity): RasterLayer = {
     val spark = friction.spark
     import spark.implicits._
@@ -554,7 +555,7 @@ object Distance {
     val nParts = math.max(1,
       math.min(spark.sparkContext.defaultParallelism.toLong, lc.toLong * lr).toInt)
     val part = new org.apache.spark.HashPartitioner(nParts)
-    var rdd = state.as[(Int, Int, Seq[Double], Seq[Double])].rdd
+    val init = state.as[(Int, Int, Seq[Double], Seq[Double])].rdd
       .map { case (c, r, frS, distS) =>
         val fr = frS.toArray; val dist = distS.toArray
         val seeds = dist.indices.filter(o => !dist(o).isNaN)
@@ -564,14 +565,16 @@ object Distance {
         ((c, r), (fr, dist, dirty))
       }
       .partitionBy(part)
-    rdd.localCheckpoint()
-    rdd.count()
 
-    var round = 0
-    var active = true
-    while (active && round < maxRounds) {
-      val improvedAcc = spark.sparkContext.longAccumulator(s"graft_cd_improved_$round")
-      val halo = rdd.flatMap { case ((c, r), (_, dist, dirty)) =>
+    // Rounds run on the Fixpoint round driver (one job each, the
+    // improved-tile count riding it). Each round settles every cell
+    // whose shortest path crosses one more tile border, and a shortest
+    // path crosses at most one border per cell step: more rounds than
+    // cells means the contract broke.
+    val maxRounds = lc.toLong * lr * tc * tr
+    val rdd = Fixpoint.loop("cd", maxRounds, s"costDistanceTiled: no fixpoint in " +
+        s"$maxRounds rounds (one per cell)")(Seq(init)) { (s, round) =>
+      val halo = s.head.flatMap { case ((c, r), (_, dist, dirty)) =>
         if (!dirty) Iterator.empty
         else {
           val out = mutable.ArrayBuffer.empty[((Int, Int), (Int, Double, Double))]
@@ -613,7 +616,7 @@ object Distance {
       // state side is co-partitioned -> narrow; halo rows targeting a
       // missing tile drop out (the old left_outer join kept state rows
       // only, same effect)
-      val next = rdd.cogroup(halo, part)
+      Seq(s.head.cogroup(halo, part)
         .flatMapValues { case (states, cands) =>
           states.headOption.iterator.map { case (fr, distOld, _) =>
             val dist = distOld.clone() // cached blocks are shared: never mutate
@@ -626,19 +629,12 @@ object Distance {
               }
             }
             val dirty =
-              if (seeds.nonEmpty) { localDijkstra(fr, dist, seeds); improvedAcc.add(1); true }
+              if (seeds.nonEmpty) { localDijkstra(fr, dist, seeds); round.changed.add(1); true }
               else false
             (fr, dist, dirty)
           }
-        }
-      next.localCheckpoint()
-      next.count() // eager: runs the round and fills the accumulator
-      val prev = rdd
-      rdd = next
-      prev.unpersist(blocking = false)
-      active = improvedAcc.value > 0
-      round += 1
-    }
+        })
+    }.head
 
     friction.copy(df = rdd
       .map { case ((c, r), (_, dist, _)) => (c, r, dist.toSeq) }

@@ -1,7 +1,5 @@
 package graft.raster
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.{Fixpoint, LongBlock}
@@ -135,43 +133,41 @@ object Hydrology {
     * silently (the result is still exact; only the bound is coarse),
     * whereas the guarded driver walk below enforces the exact bound.
     * Callers needing the strict contract at scale should pass the
-    * next power of two. Small grids
-    * take a guarded driver walk instead (one collect of the <=
-    * `maxDriverEdges` out-edges beats a job, its stages and a
-    * checkpoint per round; the connectedComponents fast path is the
-    * precedent).
+    * next power of two. Small grids (at most `maxDriverEdges` cells,
+    * which bounds their out-edges) take a guarded driver walk instead:
+    * one collect of the pinned successor blocks beats a job, its
+    * stages and a checkpoint per round, and the walk's counts map back
+    * onto those blocks by broadcast (the connectedComponents fast path
+    * is the precedent).
     */
   def flowAccumulation(cells: DataFrame, gridCols: Long, gridRows: Long,
                        maxSteps: Int = 0,
                        maxDriverEdges: Long = 1L << 22): DataFrame = {
     val spark = cells.sparkSession
-    import spark.implicits._
     // default bound: strict-descent D8 never revisits a cell, so no
     // path exceeds the cell count — real DEMs with long drainage
     // channels must not fail on an arbitrary small default (64 did)
     val maxSteps0 = if (maxSteps > 0) maxSteps
       else math.min(gridCols * gridRows, Int.MaxValue.toLong).toInt
-    val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val edge = d8Edges(dirs, gridCols)
-    if (edge.count() <= maxDriverEdges) {
-      val next = new scala.collection.mutable.HashMap[Long, Long]()
-      edge.as[(Long, Long)].collect().foreach { case (f, t) => next(f) = t }
-      val acc = new scala.collection.mutable.HashMap[Long, Long]()
-      next.keysIterator.foreach { start =>
-        var cur = next.get(start)
+    val (in, nCells) = d8Input(cells, gridCols, gridRows, withStep = false)
+    if (nCells <= maxDriverEdges) {
+      val c = Fixpoint.collect(in)
+      val nxt = successors(c.all)
+      val acc = new Array[Long](nxt.length)
+      var s = 0
+      while (s < nxt.length) {
+        var cur = nxt(s)
         var hops = 0
-        while (cur.isDefined) {
+        while (cur >= 0) {
           require(hops <= maxSteps0, s"flowAccumulation: path longer than " +
             s"$maxSteps0 steps — raise maxSteps")
-          val c = cur.get
-          acc(c) = acc.getOrElse(c, 0L) + 1
-          cur = next.get(c)
+          acc(cur) += 1
+          cur = nxt(cur)
           hops += 1
         }
+        s += 1
       }
-      val lab = broadcast(acc.toSeq.toDF("id", "cnt"))
-      return dirs.join(lab, (col("y") * gridCols + col("x")) === lab("id"), "left")
-        .select(col("x"), col("y"), coalesce(col("cnt"), lit(0L)).cast("long").as("acc"))
+      return cellsOut(spark, c.emit(acc), gridCols, "acc")
     }
     // Binary-lifting ancestor counts (r19 — log-depth, replacing the
     // O(longest-channel) per-hop frontier walk): J_k holds the EXACT
@@ -194,35 +190,33 @@ object Hydrology {
     // column per partition covering every cell, the up-sums are one
     // summed re-key, J_{k+1} is the kernel's pointer jump, and both
     // materialize in the round's one job.
-    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
-    val d8 = d8Blocks(dirs, gridCols, part, withStep = false)
+    val part = Fixpoint.partitioner(spark.sparkContext, nCells)
+    val d8 = Fixpoint.shuffle(in, part)
     val jump0 = Fixpoint.map(d8)(outEdges)
     val kids = Fixpoint.shuffle(Fixpoint.map(jump0)(j => LongBlock(j.v1, Array.fill(j.size)(1L))),
       part, Some(LongBlock.Agg.Sum))
     val cnt0 = Fixpoint.zip(d8, kids)((c, k) => plus(LongBlock(c.keys, new Array[Long](c.size)), k))
     val maxRounds = math.min(64, 32 - Integer.numberOfLeadingZeros(maxSteps0))
-    val state =
-      if (Fixpoint.materialize(Seq(jump0, cnt0))(0) == 0) Seq(jump0, cnt0)
-      else Fixpoint.loop("fa", maxRounds,
-          s"flowAccumulation: paths longer than $maxSteps0 steps — raise maxSteps " +
-          "(or the flow graph has a cycle, which strict-descent D8 cannot produce)")(
-          Seq(jump0, cnt0)) { (s, r) =>
-        val Seq(jump, c) = s
-        val up = Fixpoint.shuffle(Fixpoint.zip(jump, c) { (j, cb) =>
-          val ix = cb.index
-          val out = new LongBlock.Builder(1, j.size)
-          var i = 0
-          while (i < j.size) {
-            val n = cb.v1(ix(j.keys(i)))
-            if (n != 0) out.add(j.v1(i), n)
-            i += 1
-          }
-          out.result()
-        }, part, Some(LongBlock.Agg.Sum))
-        Seq(Fixpoint.pointerJump(jump, part, Some(r.changed)), Fixpoint.zip(c, up)(plus))
-      }
+    val state = Fixpoint.loop("fa", maxRounds,
+        s"flowAccumulation: paths longer than $maxSteps0 steps — raise maxSteps " +
+        "(or the flow graph has a cycle, which strict-descent D8 cannot produce)",
+        release = Seq(in))(Seq(jump0, cnt0)) { (s, r) =>
+      val Seq(jump, c) = s
+      val up = Fixpoint.shuffle(Fixpoint.zip(jump, c) { (j, cb) =>
+        val ix = cb.index
+        val out = new LongBlock.Builder(1, j.size)
+        var i = 0
+        while (i < j.size) {
+          val n = cb.v1(ix(j.keys(i)))
+          if (n != 0) out.add(j.v1(i), n)
+          i += 1
+        }
+        out.result()
+      }, part, Some(LongBlock.Agg.Sum))
+      Seq(Fixpoint.pointerJump(jump, part, Some(r.changed)), Fixpoint.zip(c, up)(plus))
+    }
     state.head.unpersist(blocking = false) // the exhausted jump table
-    cellsOut(spark, state(1), gridCols, "acc")((b, i) => b.v1(i))
+    cellsOut(spark, state(1), gridCols, "acc")
   }
 
   /** D8 out-edge target column — null for pits. */
@@ -231,20 +225,20 @@ object Hydrology {
       when(col("dir") === code, (col("y") + dy) * gridCols + (col("x") + dx))
     }.reduce(coalesce(_, _))
 
-  /** (from, to) linear-id out-edges of the D8 graph — one per non-pit
-    * cell (shared by accumulation / watershed / stream order). */
-  private def d8Edges(dirs: DataFrame, gridCols: Long): DataFrame =
-    dirs.where(col("dir") =!= 0)
-      .select((col("y") * gridCols + col("x")).as("from"), d8Target(gridCols).as("to"))
-
-  /** D8 successor blocks of every cell, keyed by linear id: v1 = the
+  /** The entry of every D8 loop: successor blocks of every present
+    * cell from [[flowDirection]], pinned, with the cell count
+    * ([[graft.Fixpoint.input]], one job). Keyed by linear id: v1 = the
     * out-edge target (the cell itself for pits) and, `withStep`, v2 =
-    * the step's micro-cell length (0 for pits; see [[flowLength]]). */
-  private def d8Blocks(dirs: DataFrame, gridCols: Long, part: org.apache.spark.HashPartitioner,
-                       withStep: Boolean): Fixpoint.Blocks = {
+    * the step's micro-cell length (0 for pits; see [[flowLength]]).
+    * The guards compare `maxDriverEdges` with the cell count: every
+    * cell has at most one out-edge, so it bounds the edges the driver
+    * walks hold from above. */
+  private def d8Input(cells: DataFrame, gridCols: Long, gridRows: Long,
+                      withStep: Boolean): (Fixpoint.Blocks, Long) = {
     val id = col("y") * gridCols + col("x")
-    Fixpoint.fromDF(dirs.select(Seq(id, coalesce(d8Target(gridCols), id)) ++
-      (if (withStep) Seq(coalesce(d8Step, lit(0L))) else Nil): _*), part)
+    Fixpoint.input(flowDirection(cells, gridCols, gridRows)
+      .select(Seq(id, coalesce(d8Target(gridCols), id)) ++
+        (if (withStep) Seq(coalesce(d8Step, lit(0L))) else Nil): _*))
   }
 
   /** D8 step length in micro-cells — 1e6 cardinal, round(sqrt(2) *
@@ -270,11 +264,42 @@ object Hydrology {
     })
   }
 
-  /** (x, y, `name`) of every cell a block keys by linear id. */
-  private def cellsOut(spark: SparkSession, b: Fixpoint.Blocks, gridCols: Long, name: String)(
-      value: (LongBlock, Int) => Long): DataFrame = {
+  /** Driver walks: the row of each collected cell's D8 target, -1 for
+    * a pit (a row whose target is its own key). */
+  private def successors(all: LongBlock): Array[Int] = {
+    val ix = all.index
+    Array.tabulate(all.size)(i => if (all.v1(i) == all.keys(i)) -1 else ix(all.v1(i)))
+  }
+
+  /** Driver walks: f for every collected cell, with f(pit) = `atPit`
+    * and f(c) = `step`(c, f(target of c)) — memoized, and iterative
+    * (recursion could deepen past the JVM stack on long channels):
+    * each walk stacks its unresolved cells, then unwinds them. */
+  private def resolve(nxt: Array[Int])(atPit: Int => Long)(step: (Int, Long) => Long): Array[Long] = {
+    val out = new Array[Long](nxt.length)
+    val done = new Array[Boolean](nxt.length)
+    val path = new Array[Int](nxt.length)
+    var s = 0
+    while (s < nxt.length) {
+      var n = 0
+      var cur = s
+      while (!done(cur) && nxt(cur) >= 0) { path(n) = cur; n += 1; cur = nxt(cur) }
+      if (!done(cur)) { out(cur) = atPit(cur); done(cur) = true }
+      while (n > 0) {
+        n -= 1
+        val c = path(n)
+        out(c) = step(c, out(nxt(c))); done(c) = true
+      }
+      s += 1
+    }
+    out
+  }
+
+  /** (x, y, `name` = v1) of every cell a block keys by linear id. */
+  private def cellsOut(spark: SparkSession, b: Fixpoint.Blocks, gridCols: Long,
+                       name: String): DataFrame = {
     import spark.implicits._
-    Fixpoint.rows(b)((x, i) => (x.keys(i) % gridCols, x.keys(i) / gridCols, value(x, i)))
+    Fixpoint.rows(b)((x, i) => (x.keys(i) % gridCols, x.keys(i) / gridCols, x.v1(i)))
       .toDF("x", "y", name)
   }
 
@@ -290,48 +315,36 @@ object Hydrology {
     * needs the endpoint, which is exactly what doubling shortcuts).
     * Each round is one pointer jump of the [[graft.Fixpoint]] kernel
     * in one job; convergence is the count of moved pointers (a pointer
-    * is final when its target is final). Small graphs take the guarded driver walk with
-    * path memoization (flowAccumulation precedent).
+    * is final when its target is final). Small grids take the guarded
+    * driver walk with path memoization over the collected successor
+    * blocks (flowAccumulation precedent).
     */
   def watershed(cells: DataFrame, gridCols: Long, gridRows: Long,
                 maxDriverEdges: Long = 1L << 22): DataFrame = {
     val spark = cells.sparkSession
-    import spark.implicits._
-    val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val edge = d8Edges(dirs, gridCols)
-    val id = col("y") * gridCols + col("x")
-    if (edge.count() <= maxDriverEdges) {
-      val next = new mutable.HashMap[Long, Long]()
-      edge.as[(Long, Long)].collect().foreach { case (f, t) => next(f) = t }
-      // iterative memoized walk (recursion could deepen past the JVM
-      // stack on long channels): unwind each path onto a list first
-      val term = new mutable.HashMap[Long, Long]()
-      next.keysIterator.foreach { start =>
-        var path = List.empty[Long]
-        var cur = start
-        while (!term.contains(cur) && next.contains(cur)) {
-          path = cur :: path
-          cur = next(cur)
-        }
-        val basin = term.getOrElse(cur, cur)
-        path.foreach(c => term(c) = basin)
-      }
-      val lab = broadcast(term.toSeq.toDF("id", "basin"))
-      return dirs.join(lab, id === lab("id"), "left")
-        .select(col("x"), col("y"),
-          coalesce(col("basin"), id).cast("long").as("basin"))
+    val (in, nCells) = d8Input(cells, gridCols, gridRows, withStep = false)
+    if (nCells <= maxDriverEdges) {
+      val c = Fixpoint.collect(in)
+      val basin = resolve(successors(c.all))(c.all.keys(_))((_, next) => next)
+      return cellsOut(spark, c.emit(basin), gridCols, "basin")
     }
-    // succ(c) = out-edge target, or self for pits — total function, so
-    // doubling composes cleanly. Each round is the Fixpoint kernel's
-    // pointer jump (re-key by pointer, compose, re-key back) in one
-    // job; the changed-pointer count rides that job.
-    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
-    val succ = d8Blocks(dirs, gridCols, part, withStep = false)
-    val basin = Fixpoint.loop("ws", 64, "watershed: pointer doubling exceeded 64 rounds — " +
-        "the flow graph has a cycle, which strict-descent D8 cannot produce")(Seq(succ)) {
+    cellsOut(spark, toPits(spark, in, nCells, "watershed"), gridCols, "basin")
+  }
+
+  /** Pointer doubling over successor blocks until every pointer sits
+    * on its pit, summing v2 along the way when the blocks carry it.
+    * succ(c) = out-edge target, or self for pits — a total function,
+    * so doubling composes cleanly. Each round is the Fixpoint kernel's
+    * pointer jump (re-key by pointer, compose, re-key back) in one
+    * job; the changed-pointer count rides that job. */
+  private def toPits(spark: SparkSession, in: Fixpoint.Blocks, nCells: Long,
+                     what: String): Fixpoint.Blocks = {
+    val part = Fixpoint.partitioner(spark.sparkContext, nCells)
+    Fixpoint.loop(what, 64, s"$what: pointer doubling exceeded 64 rounds — " +
+        "the flow graph has a cycle, which strict-descent D8 cannot produce",
+        release = Seq(in))(Seq(Fixpoint.shuffle(in, part))) {
       (s, r) => Seq(Fixpoint.pointerJump(s.head, part, Some(r.changed)))
     }.head
-    cellsOut(spark, basin, gridCols, "basin")((b, i) => b.v1(i))
   }
 
   /** Downstream flow length (ESRI FlowLength, downstream direction):
@@ -352,39 +365,16 @@ object Hydrology {
   def flowLength(cells: DataFrame, gridCols: Long, gridRows: Long,
                  maxDriverEdges: Long = 1L << 22): DataFrame = {
     val spark = cells.sparkSession
-    import spark.implicits._
-    val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val edge = dirs.where(col("dir") =!= 0)
-      .select((col("y") * gridCols + col("x")).as("from"), d8Target(gridCols).as("to"),
-        d8Step.as("wq"))
-    if (edge.count() <= maxDriverEdges) {
-      val next = new mutable.HashMap[Long, (Long, Long)]() // from -> (to, wq)
-      edge.as[(Long, Long, Long)].collect().foreach { case (f, t, w) => next(f) = (t, w) }
-      val dist = new mutable.HashMap[Long, Long]()
-      next.keysIterator.foreach { start =>
-        var path = List.empty[Long] // head = deepest unresolved node
-        var cur = start
-        while (!dist.contains(cur) && next.contains(cur)) {
-          path = cur :: path
-          cur = next(cur)._1
-        }
-        var d = dist.getOrElse(cur, 0L)
-        path.foreach { c => d += next(c)._2; dist(c) = d }
-      }
-      val id = col("y") * gridCols + col("x")
-      val lab = broadcast(dist.toSeq.toDF("id", "dq"))
-      return dirs.join(lab, id === lab("id"), "left")
-        .select(col("x"), col("y"), coalesce(col("dq"), lit(0L)).cast("long").as("dist_q"))
+    val (in, nCells) = d8Input(cells, gridCols, gridRows, withStep = true)
+    if (nCells <= maxDriverEdges) {
+      val c = Fixpoint.collect(in)
+      val dist = resolve(successors(c.all))(_ => 0L)((cell, next) => next + c.all.v2(cell))
+      return cellsOut(spark, c.emit(dist), gridCols, "dist_q")
     }
     // distance-accumulating pointer doubling: the watershed loop with
     // the step length as the kernel's summed payload
-    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
-    val succ = d8Blocks(dirs, gridCols, part, withStep = true)
-    val dist = Fixpoint.loop("fl", 64, "flowLength: pointer doubling exceeded 64 rounds — " +
-        "the flow graph has a cycle, which strict-descent D8 cannot produce")(Seq(succ)) {
-      (s, r) => Seq(Fixpoint.pointerJump(s.head, part, Some(r.changed)))
-    }.head
-    cellsOut(spark, dist, gridCols, "dist_q")((b, i) => b.v2(i))
+    val dist = toPits(spark, in, nCells, "flowLength")
+    cellsOut(spark, Fixpoint.map(dist)(b => LongBlock(b.keys, b.v2)), gridCols, "dist_q")
   }
 
   /** Strahler stream order over the full D8 drainage forest (Strahler
@@ -397,89 +387,79 @@ object Hydrology {
     * up along the out-edges and rebuilds per-cell (max order, count at
     * max) with one combined re-key. Orders only grow and are bounded
     * by log2(cells), so round count = drainage-tree DEPTH, with
-    * per-round convergence read off the count of changed orders.
+    * per-round convergence read off the count of changed orders; no
+    * path is longer than the cell count, which caps the rounds.
     * The guarded driver fast path computes the same fixpoint in one
-    * topological pass (flowAccumulation precedent).
+    * topological pass over the collected successor blocks
+    * (flowAccumulation precedent).
     */
   def streamOrder(cells: DataFrame, gridCols: Long, gridRows: Long,
-                  maxRounds: Int = 0,
                   maxDriverEdges: Long = 1L << 22): DataFrame = {
     val spark = cells.sparkSession
-    import spark.implicits._
-    val dirs = flowDirection(cells, gridCols, gridRows).localCheckpoint()
-    val edge = d8Edges(dirs, gridCols)
-    val id = col("y") * gridCols + col("x")
-    if (edge.count() <= maxDriverEdges) {
-      val next = new mutable.HashMap[Long, Long]()
-      val indeg = new mutable.HashMap[Long, Int]()
-      edge.as[(Long, Long)].collect().foreach { case (f, t) =>
-        next(f) = t
-        indeg(t) = indeg.getOrElse(t, 0) + 1
-      }
-      val ord = new mutable.HashMap[Long, Int]()
-      val best = new mutable.HashMap[Long, Int]()   // max child order seen
-      val bestK = new mutable.HashMap[Long, Int]()  // children at that max
-      val remaining = new mutable.HashMap[Long, Int]() ++= indeg
+    val (in, nCells) = d8Input(cells, gridCols, gridRows, withStep = false)
+    if (nCells <= maxDriverEdges) {
+      val c = Fixpoint.collect(in)
+      val nxt = successors(c.all)
+      val indeg = new Array[Int](nxt.length)
+      nxt.foreach(t => if (t >= 0) indeg(t) += 1)
+      val ord = new Array[Long](nxt.length)
+      val best = new Array[Long](nxt.length)  // max child order seen
+      val bestK = new Array[Int](nxt.length)  // children at that max
       // Kahn topological pass: leaves first, each settles its target
-      var queue = next.keysIterator.filter(c => !indeg.contains(c)).toList ++
-        dirs.where(col("dir") === 0).select(id.cast("long")).as[Long].collect()
-          .filter(c => !indeg.contains(c)).toList
-      while (queue.nonEmpty) {
-        val c = queue.head; queue = queue.tail
-        val m = best.getOrElse(c, 0)
-        val o = if (m == 0) 1 else if (bestK(c) >= 2) m + 1 else m
-        ord(c) = o
-        next.get(c).foreach { t =>
-          val bm = best.getOrElse(t, 0)
-          if (o > bm) { best(t) = o; bestK(t) = 1 }
-          else if (o == bm) bestK(t) = bestK(t) + 1
-          remaining(t) -= 1
-          if (remaining(t) == 0) queue = t :: queue
+      val stack = new Array[Int](nxt.length)
+      var n = 0
+      indeg.indices.foreach(i => if (indeg(i) == 0) { stack(n) = i; n += 1 })
+      while (n > 0) {
+        n -= 1
+        val c = stack(n)
+        val m = best(c)
+        ord(c) = if (m == 0) 1 else if (bestK(c) >= 2) m + 1 else m
+        val t = nxt(c)
+        if (t >= 0) {
+          if (ord(c) > best(t)) { best(t) = ord(c); bestK(t) = 1 }
+          else if (ord(c) == best(t)) bestK(t) += 1
+          indeg(t) -= 1
+          if (indeg(t) == 0) { stack(n) = t; n += 1 }
         }
       }
-      val lab = broadcast(ord.toSeq.toDF("id", "ord"))
-      return dirs.join(lab, id === lab("id"), "left")
-        .select(col("x"), col("y"),
-          coalesce(col("ord"), lit(1)).cast("long").as("ord"))
+      return cellsOut(spark, c.emit(ord), gridCols, "ord")
     }
-    // depth bound: strict descent never revisits, so cells is safe
-    val maxRounds0 = if (maxRounds > 0) maxRounds
-      else math.min(gridCols * gridRows, Int.MaxValue.toLong).toInt
     // The fixpoint on the Fixpoint kernel: out-edges (keyed by source)
     // and orders (keyed by cell) are co-partitioned blocks, so the
     // upstream lookup is a narrow zip; (max order, contributors at
     // max) per target is ONE MaxCount re-key, combined map-side; the
     // Strahler update is a narrow zip again. One job per round; the
     // changed-order count rides it.
-    val part = Fixpoint.partitioner(spark.sparkContext, gridCols * gridRows)
-    val d8 = d8Blocks(dirs, gridCols, part, withStep = false)
+    val part = Fixpoint.partitioner(spark.sparkContext, nCells)
+    val d8 = Fixpoint.shuffle(in, part)
     val edges = Fixpoint.map(d8)(outEdges).localCheckpoint()
     val ord0 = Fixpoint.map(d8)(b => LongBlock(b.keys, Array.fill(b.size)(1L)))
-    val ord = Fixpoint.loop("so", maxRounds0.toLong + 1L,
-        s"streamOrder: fixpoint not reached in $maxRounds0 rounds — raise maxRounds")(Seq(ord0)) {
-      (s, r) =>
-        val mk = Fixpoint.shuffle(Fixpoint.zip(edges, s.head) { (e, o) =>
-          val ix = o.index
-          val out = new LongBlock.Builder(2, e.size)
-          var i = 0
-          while (i < e.size) { out.add(e.v1(i), o.v1(ix(e.keys(i))), 1L); i += 1 }
-          out.result()
-        }, part, Some(LongBlock.Agg.MaxCount))
-        Seq(Fixpoint.zip(s.head, mk) { (o, m) =>
-          val ix = m.index
-          var changed = 0L
-          val next = Array.tabulate(o.size) { i =>
-            val p = ix(o.keys(i))
-            val n = if (p < 0) 1L else if (m.v2(p) >= 2L) m.v1(p) + 1L else m.v1(p)
-            if (n != o.v1(i)) changed += 1
-            n
-          }
-          r.changed.add(changed)
-          LongBlock(o.keys, next)
-        })
+    val ord = Fixpoint.loop("so", nCells + 1L,
+        s"streamOrder: fixpoint not reached in ${nCells + 1L} rounds — " +
+        "the flow graph has a cycle, which strict-descent D8 cannot produce",
+        release = Seq(in))(Seq(ord0)) { (s, r) =>
+      val mk = Fixpoint.shuffle(Fixpoint.zip(edges, s.head) { (e, o) =>
+        val ix = o.index
+        val out = new LongBlock.Builder(2, e.size)
+        var i = 0
+        while (i < e.size) { out.add(e.v1(i), o.v1(ix(e.keys(i))), 1L); i += 1 }
+        out.result()
+      }, part, Some(LongBlock.Agg.MaxCount))
+      Seq(Fixpoint.zip(s.head, mk) { (o, m) =>
+        val ix = m.index
+        var changed = 0L
+        val next = Array.tabulate(o.size) { i =>
+          val p = ix(o.keys(i))
+          val n = if (p < 0) 1L else if (m.v2(p) >= 2L) m.v1(p) + 1L else m.v1(p)
+          if (n != o.v1(i)) changed += 1
+          n
+        }
+        r.changed.add(changed)
+        LongBlock(o.keys, next)
+      })
     }.head
     edges.unpersist(blocking = false)
-    cellsOut(spark, ord, gridCols, "ord")((b, i) => b.v1(i))
+    cellsOut(spark, ord, gridCols, "ord")
   }
 
   /** ArcGIS SnapPourPoint: move each pour point to the cell with the

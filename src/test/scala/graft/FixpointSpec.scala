@@ -77,6 +77,36 @@ class FixpointSpec extends SparkSpec {
     }
   }
 
+  test("input: one pinned block per input partition and the exact row count in one job") {
+    import spark.implicits._
+    val rs = rows(5, 3000).map { case (k, x, y) =>
+      (k, if (y == 0L) -0.0 else x.toDouble / 7, y.toInt) }
+    val df = spark.sparkContext.parallelize(rs, 3).toDF("k", "d", "n")
+    val ((in, n), jobs, _) = traced(Fixpoint.input(df))
+    assert(n == rs.size)
+    assert(jobs == 1)
+    assert(in.isCheckpointed && in.getStorageLevel != StorageLevel.NONE)
+    // no re-key: the input's partitions, one block each
+    assert(in.partitioner.isEmpty && in.getNumPartitions == 3)
+    assert(in.mapPartitions(it => Iterator(it.size)).collect().forall(_ == 1))
+    // DOUBLE columns keep their raw bits, the others become longs
+    val want = rs.map { case (k, d, y) => (k, java.lang.Double.doubleToRawLongBits(d), y.toLong) }
+    assert(all(in).map(_._2) == want)
+    val c = Fixpoint.collect(in)
+    assert(c.all.keys.toSeq == want.map(_._1) && c.all.v1.toSeq == want.map(_._2) &&
+      c.all.v2.toSeq == want.map(_._3))
+    // emit puts a driver-side column back onto the pinned blocks in row order
+    val emitted = all(c.emit(Array.tabulate(rs.size)(_.toLong))).map(_._2)
+    assert(emitted == want.zipWithIndex.map { case (r, i) => (r._1, i.toLong, 0L) })
+    // and the blocks re-key like any others
+    Seq(1, 4).foreach { p =>
+      val routed = all(Fixpoint.shuffle(in, new HashPartitioner(p)))
+      routed.foreach { case (q, (k, _, _)) => assert(q == Fixpoint.slot(k, p), s"key $k on $q") }
+      assert(routed.map(_._2).sorted == want.sorted)
+    }
+    in.unpersist()
+  }
+
   test("zip refuses blocks that are not partitioned alike") {
     val rs = rows(3, 200)
     val a = Fixpoint.shuffle(blocks(rs), new HashPartitioner(3))
@@ -126,5 +156,16 @@ class FixpointSpec extends SparkSpec {
       }
     }
     assert(e.getMessage.contains("no fixpoint within 3 rounds"))
+    // any element type; `release` goes once the first round is materialized
+    val src = spark.sparkContext.parallelize(1 to 20, 2).cache()
+    src.count()
+    var firstRound = List.empty[StorageLevel]
+    val plain = Fixpoint.loop("plain", 64, "no fixpoint", release = Seq(src))(
+        Seq(src.map(i => (i, i % 3 == 0)))) { (s, r) =>
+      if (r.index == 1) firstRound = src.getStorageLevel :: firstRound
+      Seq(s.head.map { case (i, flag) => if (flag) r.changed.add(1); (i, false) })
+    }.head
+    assert(firstRound == List(StorageLevel.NONE))
+    assert(plain.collect().toSeq == (1 to 20).map((_, false)))
   }
 }

@@ -15,7 +15,7 @@ class CatalogSpec extends SparkSpec {
     RasterLayer.fromCells(cells.toSeq.toDF("x", "y", "v"), layout)
 
   test("write/read roundtrip preserves cells and metadata") {
-    val dir = Files.createTempDirectory("graft_cat").toString
+    val dir = tempDir("graft_cat").toString
     val l = layer((0, 0, 1.0), (7, 7, 2.0))
     Catalog.write(dir, "t", l, zoom = 3)
     val back = Catalog.read(spark, dir, "t", zoom = 3)
@@ -25,14 +25,14 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("extent query prunes to requested tiles") {
-    val dir = Files.createTempDirectory("graft_cat").toString
+    val dir = tempDir("graft_cat").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0), (5, 5, 2.0)), zoom = 0)
     val q = Catalog.query(spark, dir, "t", 0, 4, 4, 8, 8)
     assert(q.toCells.as[(Long, Long, Double)].collect().toSet == Set((5L, 5L, 2.0)))
   }
 
   test("readTile fetches one tile via footer pruning, no full-layer scan") {
-    val dir = Files.createTempDirectory("graft_cat_vr").toString
+    val dir = tempDir("graft_cat_vr").toString
     // 8x8 tiles of 8x8 cells -> plenty of tiles across the (2-partition)
     // range-partitioned write, so zindex footer stats can prove pruning
     val big = LayoutDefinition(Extent(0, 0, 64, 64), TileLayout(8, 8, 8, 8))
@@ -68,7 +68,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("readTile runs entirely JOB-FREE (serving latency, listener-verified)") {
-    val dir = Files.createTempDirectory("graft_cat_nojob").toString
+    val dir = tempDir("graft_cat_nojob").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0), (5, 5, 2.0), (7, 7, 3.0)), zoom = 0)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -111,8 +111,8 @@ class CatalogSpec extends SparkSpec {
     val f64 = RasterLayer.fromCells(cells.toDF("x", "y", "v"), big)
     val u8 = f64.convertCellType("uint8")
 
-    val d64 = Files.createTempDirectory("graft_ct64").toString
-    val d8 = Files.createTempDirectory("graft_ct8").toString
+    val d64 = tempDir("graft_ct64").toString
+    val d8 = tempDir("graft_ct8").toString
     Catalog.write(d64, "t", f64, zoom = 0)
     Catalog.write(d8, "t", u8, zoom = 0)
 
@@ -137,14 +137,14 @@ class CatalogSpec extends SparkSpec {
     val sparse = RasterLayer.fromCells(
       Seq((0L, 0L, 9.0), (63L, 63L, 254.0)).toDF("x", "y", "v"), big)
       .convertCellType("uint8")
-    val ds = Files.createTempDirectory("graft_ct_sparse").toString
+    val ds = tempDir("graft_ct_sparse").toString
     Catalog.write(ds, "t", sparse, zoom = 0)
     assert(Catalog.read(spark, ds, "t", 0).toCells.as[(Long, Long, Double)]
       .collect().toSet == Set((0L, 0L, 9.0), (63L, 63L, 254.0)))
   }
 
   test("catalog query pushes key predicates to the parquet scan (PushedFilters)") {
-    val dir = Files.createTempDirectory("graft_cat_pf").toString
+    val dir = tempDir("graft_cat_pf").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0), (5, 5, 2.0)), zoom = 0)
     val q = Catalog.query(spark, dir, "t", 0, 4, 4, 8, 8)
     val plan = q.df.queryExecution.executedPlan.toString
@@ -156,7 +156,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("update rejects a layer whose cellType differs from the stored encoding") {
-    val dir = Files.createTempDirectory("graft_cat_mix").toString
+    val dir = tempDir("graft_cat_mix").toString
     val big = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
     Catalog.write(dir, "t", layer((0, 0, 1.0)).convertCellType("uint8"), zoom = 0)
     val err = intercept[IllegalArgumentException](
@@ -168,7 +168,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("update appends tiles; merge resolves duplicates") {
-    val dir = Files.createTempDirectory("graft_cat").toString
+    val dir = tempDir("graft_cat").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0)), zoom = 0)
     Catalog.update(dir, "t", layer((0, 0, 5.0), (7, 0, 3.0)), zoom = 0)
     val merged = Catalog.read(spark, dir, "t", zoom = 0).aggregateByCell("Max")
@@ -177,7 +177,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("compact coalesces appended files, preserves content, can merge duplicates") {
-    val dir = Files.createTempDirectory("graft_cat").toString
+    val dir = tempDir("graft_cat").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0)), zoom = 0)
     Catalog.update(dir, "t", layer((0, 0, 5.0), (7, 0, 3.0)), zoom = 0)
     Catalog.update(dir, "t", layer((3, 3, 4.0)), zoom = 0)
@@ -242,7 +242,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("queryGeometry reads only tiles intersecting the geometry") {
-    val dir = Files.createTempDirectory("graft_cat_geom").toString
+    val dir = tempDir("graft_cat_geom").toString
     // layout: 2x2 tiles of 4 -> tiles (0,0),(1,0),(0,1),(1,1)
     val l = layer((0, 0, 1.0), (5, 0, 2.0), (0, 5, 3.0), (5, 5, 4.0))
     Catalog.write(dir, "g", l, zoom = 0)
@@ -259,7 +259,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("attribute-store surface: layers / contains / delete") {
-    val dir = Files.createTempDirectory("graft_cat_store").toString
+    val dir = tempDir("graft_cat_store").toString
     Catalog.write(dir, "b_layer", layer((0, 0, 1.0)), zoom = 0)
     Catalog.write(dir, "a_layer", layer((1, 1, 2.0)), zoom = 0)
     // a stray non-layer directory is not listed
@@ -277,7 +277,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("temporal write/read roundtrip preserves instants; queryTime prunes both dims") {
-    val dir = Files.createTempDirectory("graft_cat").toString
+    val dir = tempDir("graft_cat").toString
     val l = RasterLayer.fromCellsTemporal(
       Seq((0L, 0L, 10L, 1.0), (0L, 0L, 20L, 2.0), (5L, 5L, 10L, 3.0), (5L, 5L, 30L, 4.0))
         .toDF("x", "y", "instant", "v"), layout)
@@ -300,7 +300,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("attribute store roundtrip") {
-    val dir = Files.createTempDirectory("graft_cat").toString
+    val dir = tempDir("graft_cat").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0)), zoom = 0)
     Catalog.writeAttribute(dir, "t", "notes", """{"a":1}""")
     assert(Catalog.readAttribute(dir, "t", "notes") == """{"a":1}""")

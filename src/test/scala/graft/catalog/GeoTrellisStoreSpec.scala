@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 /** GeoTrellis store adapter: layer discovery over the TRIPLE-underscore
@@ -17,7 +15,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
 
   private def writeStore(): String = {
     spark // force the session so Hadoop conf resolution has one
-    val dir = Files.createTempDirectory("gt_store").toFile
+    val dir = tempDir("gt_store").toFile
     val attrs = new java.io.File(dir, "attributes")
     attrs.mkdirs()
     def put(name: String, body: String): Unit = {
@@ -240,7 +238,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
 
   test("writeLayer -> readLayer/readValue roundtrip is cell-exact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("gt_rt").toFile.getAbsolutePath
+    val dir = tempDir("gt_rt").toFile.getAbsolutePath
     val layout = graft.core.LayoutDefinition(
       graft.core.Extent(0, 0, 8, 8), graft.core.TileLayout(2, 2, 4, 4))
     // sparse cells across 3 of the 4 tiles, incl. a NaN-bearing tile
@@ -269,7 +267,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
   test("multiband and space-time payloads read back (r19 walls removed)") {
     import GtAvro.{Rec, UnionVal}
     spark
-    val dir = Files.createTempDirectory("gt_mb").toFile.getAbsolutePath
+    val dir = tempDir("gt_mb").toFile.getAbsolutePath
     new java.io.File(dir, "attributes").mkdirs()
     def put(rel: String, body: Array[Byte]): Unit = {
       val f = new java.io.File(dir, rel)
@@ -388,7 +386,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
 
   test("hilbert-indexed stores: filenames follow the compact index; point reads work (r20)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("gt_hil").toFile.getAbsolutePath
+    val dir = tempDir("gt_hil").toFile.getAbsolutePath
     val layout = graft.core.LayoutDefinition(
       graft.core.Extent(0, 0, 12, 8), graft.core.TileLayout(3, 2, 4, 4))
     // keys up to (2,1): xResolution = 2 bits, yResolution = 1 bit
@@ -422,7 +420,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
 
   test("hadoop (MapFile) layout: export + distributed read + point read (r20)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("gt_hadoop").toFile.getAbsolutePath
+    val dir = tempDir("gt_hadoop").toFile.getAbsolutePath
     val layout = graft.core.LayoutDefinition(
       graft.core.Extent(0, 0, 8, 8), graft.core.TileLayout(2, 2, 4, 4))
     val cells = Seq((0L, 0L, 5.0), (1L, 3L, -2.5), (5L, 1L, 7.0), (2L, 6L, 9.0))
@@ -463,7 +461,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
     // geotrellis writes through).
     import org.apache.hadoop.io.{BytesWritable, LongWritable, MapFile}
     spark
-    val dir = Files.createTempDirectory("gt_packed").toFile.getAbsolutePath
+    val dir = tempDir("gt_packed").toFile.getAbsolutePath
     new java.io.File(dir, "_attributes").mkdirs()
     val meta =
       s"""[{"name":"pk","zoom":0},
@@ -516,7 +514,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
   test("hadoop layout: multiband and temporal exports roundtrip too (r20)") {
     import spark.implicits._
     // multiband through MapFile parts
-    val dir = Files.createTempDirectory("gt_hd_mb").toFile.getAbsolutePath
+    val dir = tempDir("gt_hd_mb").toFile.getAbsolutePath
     val layout = graft.core.LayoutDefinition(
       graft.core.Extent(0, 0, 4, 2), graft.core.TileLayout(2, 1, 2, 1))
     val mbRows = Seq(
@@ -533,7 +531,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
     assert(mbBack.band(1).toCells.as[(Long, Long, Double)].collect().toSet ==
       Set((0L, 0L, 10.0), (1L, 0L, 20.0), (2L, 0L, 30.0), (3L, 0L, 40.0)))
     // temporal through MapFile parts, incl. a readValueTime point read
-    val dirT = Files.createTempDirectory("gt_hd_t").toFile.getAbsolutePath
+    val dirT = tempDir("gt_hd_t").toFile.getAbsolutePath
     val tRows = Seq(
       (0, 0, 1000L, Seq(1.0, 2.0)), (0, 0, 1500L, Seq(5.0, 6.0)),
       (1, 0, 3000L, Seq(3.0, 4.0)))
@@ -556,7 +554,7 @@ class GeoTrellisStoreSpec extends SparkSpec {
 
   test("space-time Z3 export: writeLayerTemporal roundtrips + point reads (r20)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("gt_z3").toFile.getAbsolutePath
+    val dir = tempDir("gt_z3").toFile.getAbsolutePath
     val layout = graft.core.LayoutDefinition(
       graft.core.Extent(0, 0, 4, 2), graft.core.TileLayout(2, 1, 2, 1))
     // two instants in the SAME 1000ms resolution bucket (1000, 1500)

@@ -24,7 +24,7 @@ class GraftDataSourceSpec extends SparkSpec {
       .load()
 
   test("roundtrip: schema and tiles match Catalog.read") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     val l = layer((0, 0, 1.0), (3, 3, 2.0), (5, 6, 4.0))
     Catalog.write(dir, "t", l, zoom = 2)
     val df = readGraft(dir, "t", zoom = 2)
@@ -35,7 +35,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("filter pushdown prunes files before tasks launch") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     // force multiple output files: one tile per shuffle partition
     val cells = for (t <- 0 until 4) yield ((t % 2) * 4L, (t / 2) * 4L, (t + 1).toDouble)
     Catalog.write(dir, "t", layer(cells: _*), zoom = 0)
@@ -59,7 +59,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("column pruning: selecting keys skips tile decode") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0), (5, 5, 2.0)))
     val keys = readGraft(dir, "t").select("col", "row")
       .as[(Int, Int)].collect().toSet
@@ -69,7 +69,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("packed cell types decode through the reader") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     val l = layer((1, 1, 3.0), (6, 2, 250.0)).convertCellType("uint8")
     Catalog.write(dir, "t8", l)
     val back = RasterLayer.tilesToCells(readGraft(dir, "t8"), 4, 4)
@@ -78,7 +78,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("aggregate pushdown: COUNT/MIN/MAX answered footer-only, filters opt out") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     Catalog.write(dir, "t", layer((0, 0, 1.0), (3, 3, 2.0), (5, 6, 4.0)))
     val df = readGraft(dir, "t")
     val agg = df.agg(expr("count(*)").as("n"),
@@ -100,7 +100,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("aggregate pushdown: temporal store answers min/max(instant) footer-only") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     val cells = Seq((0L, 0L, 10L, 1.0), (0L, 0L, 20L, 2.0), (5L, 5L, 20L, 3.0))
       .toDF("x", "y", "instant", "v")
     Catalog.write(dir, "tt", RasterLayer.fromCellsTemporal(cells, layout))
@@ -111,7 +111,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("V2 write: fresh store via format(graft), read back both ways") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     val l = layer((0, 0, 1.0), (3, 3, 2.0), (5, 6, 4.0))
     l.df.write.format("graft")
       .option("path", dir).option("layer", "w").option("zoom", "1")
@@ -128,7 +128,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("V2 write: overwrite truncates the zoom, append adds tiles") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     def save(l: RasterLayer, mode: String): Unit =
       l.df.write.format("graft")
         .option("path", dir).option("layer", "w").option("zoom", "0")
@@ -144,7 +144,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("V2 write: packed cell type rides the sidecar on append") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     // seed the store (and its uint8 sidecar) through Catalog.write
     Catalog.write(dir, "t8", layer((1, 1, 3.0)).convertCellType("uint8"))
     // append a tile through the V2 writer: packs to uint8 in-writer
@@ -157,7 +157,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("V2 write: fresh TEMPORAL store declares instant via option") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     val cells = Seq((0L, 0L, 10L, 1.0), (0L, 0L, 20L, 2.0), (5L, 5L, 20L, 3.0))
       .toDF("x", "y", "instant", "v")
     RasterLayer.fromCellsTemporal(cells, layout).df.write.format("graft")
@@ -176,7 +176,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("V2 write: plan carries the required (col, row) sort") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     val cells = for (x <- 0L until 8L; y <- 0L until 8L) yield (x, y, (x + y).toDouble)
     layer(cells: _*).df.write.format("graft")
       .option("path", dir).option("layer", "w").option("zoom", "0")
@@ -189,7 +189,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("temporal store exposes instant and pushes its range") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     val cells = Seq((0L, 0L, 10L, 1.0), (0L, 0L, 20L, 2.0), (5L, 5L, 20L, 3.0))
       .toDF("x", "y", "instant", "v")
     Catalog.write(dir, "tt", RasterLayer.fromCellsTemporal(cells, layout))
@@ -202,8 +202,8 @@ class GraftDataSourceSpec extends SparkSpec {
 
   test("streaming sink: MemoryStream -> writeStream -> batch read, exactly-once") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_sink").toString
-    val ck = Files.createTempDirectory("graft_sink_ck").toString
+    val dir = tempDir("graft_sink").toString
+    val ck = tempDir("graft_sink_ck").toString
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Int, Int, Seq[Double])]
     val q = mem.toDF().toDF("col", "row", "tile")
@@ -240,7 +240,7 @@ class GraftDataSourceSpec extends SparkSpec {
     // epoch's tasks run TWICE (retry after success, before commit).
     // Epoch-deterministic names + OVERWRITE mode make the second
     // attempt rewrite the same file, so the store holds one copy.
-    val dir = Files.createTempDirectory("graft_sink_replay").toString
+    val dir = tempDir("graft_sink_replay").toString
     val meta = graft.raster.LayerMetadata(layout)
     Catalog.writeMetadata(dir, "rp", meta)
     val f = GraftStreamingWriterFactory(s"$dir/rp/tiles/zoom=0",
@@ -263,7 +263,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("streaming sink: temp-then-rename + epoch-commit reconcile (r15)") {
-    val dir = Files.createTempDirectory("graft_sink_rcn").toString
+    val dir = tempDir("graft_sink_rcn").toString
     val meta = graft.raster.LayerMetadata(layout)
     Catalog.writeMetadata(dir, "rc", meta)
     val zoomDir = s"$dir/rc/tiles/zoom=0"
@@ -314,8 +314,8 @@ class GraftDataSourceSpec extends SparkSpec {
 
   test("streaming sink packs native-width cell types (uint8 epoch files)") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_sink_u8").toString
-    val ck = Files.createTempDirectory("graft_sink_u8_ck").toString
+    val dir = tempDir("graft_sink_u8").toString
+    val ck = tempDir("graft_sink_u8_ck").toString
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Int, Int, Seq[Double])]
     val q = mem.toDF().toDF("col", "row", "tile")
@@ -343,7 +343,7 @@ class GraftDataSourceSpec extends SparkSpec {
 
   test("streaming sink rejects Complete output mode (truncate per epoch)") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_sink_cm").toString
+    val dir = tempDir("graft_sink_cm").toString
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Int, Int, Seq[Double])]
     val e = intercept[Exception] {
@@ -353,7 +353,7 @@ class GraftDataSourceSpec extends SparkSpec {
         .option("path", dir).option("layer", "cm").option("zoom", "0")
         .option("extent", "0,0,8,8").option("layout", "2,2,4,4")
         .option("checkpointLocation",
-          Files.createTempDirectory("graft_sink_cm_ck").toString)
+          tempDir("graft_sink_cm_ck").toString)
         .outputMode("complete")
         .start()
       try { mem.addData(Seq((0, 0, Seq.fill(16)(1.0)))); q.processAllAvailable() }
@@ -366,7 +366,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("streaming read: readStream emits each newly-landed tile file exactly once") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     Catalog.write(dir, "live", layer((0, 0, 1.0)))
     val q = spark.readStream.format("graft")
       .option("path", dir).option("layer", "live").option("zoom", "0")
@@ -396,7 +396,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("compaction guard: refused while a stream reader is attached, allowed after stop") {
-    val dir = Files.createTempDirectory("graft_stream_lock").toString
+    val dir = tempDir("graft_stream_lock").toString
     Catalog.write(dir, "guarded", layer((0, 0, 1.0)))
     assert(!Catalog.hasStreamReaders(dir, "guarded"))
     // compaction is fine with no reader
@@ -426,7 +426,7 @@ class GraftDataSourceSpec extends SparkSpec {
 
   test("streaming read of a live ingestScenes store (ingest -> read loop)") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft_stream_loop").toString
+    val dir = tempDir("graft_stream_loop").toString
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
       (Long, Double, Double, Double, Double, Int, Int, Seq[Double])]
     val ingest = graft.streaming.Events.ingestScenes(
@@ -452,7 +452,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("read of a nonexistent store / typoed layer fails loudly") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     Catalog.write(dir, "real", layer((0, 0, 1.0)))
     val e = intercept[Exception](readGraft(dir, "typo").count())
     assert(e.getMessage.contains("typo"), s"got: ${e.getMessage}")
@@ -462,7 +462,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("pushed COUNT(*) on a sidecar-only (zero-file) store returns 0, not NULL") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     // sidecar without tiles: the shape after a truncating write of an
     // empty frame, or a store mid-ingest
     Catalog.writeMetadata(dir, "empty", graft.raster.LayerMetadata(layout))
@@ -474,7 +474,7 @@ class GraftDataSourceSpec extends SparkSpec {
   }
 
   test("overwrite honors explicit celltype+grid options; partial override fails") {
-    val dir = Files.createTempDirectory("graft_dsv2").toString
+    val dir = tempDir("graft_dsv2").toString
     Catalog.write(dir, "ow", layer((0, 0, 1.0))) // float64 sidecar
     assert(Catalog.readMetadata(dir, "ow").cellType == "float64")
     // full grid + celltype on overwrite: new sidecar wins

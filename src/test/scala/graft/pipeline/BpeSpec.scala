@@ -55,7 +55,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("merges file: GPT-2 format loads, matches the literal model, scales to 1k rules") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe")
+    val dir = tempDir("graft_bpe")
     // (1) the literal table written as a merges.txt loads to an
     // identical model — same tokens on every fixture text
     val lit = dir.resolve("literal.txt")

@@ -1189,7 +1189,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("tfrecord shards: write/read roundtrip, stable shard assignment, deterministic bytes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tfr").toString
+    val dir = tempDir("graft_tfr").toString
     val d = Seq((0L, "alpha"), (1L, "beta"), (2L, "gamma"), (4L, "delta"))
       .toDF("doc_id", "text")
     TFRecord.writeShards(d, dir, n = 2)
@@ -1215,7 +1215,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("webdataset: multi-entry samples roundtrip; system tar reads our shards") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wds").toString
+    val dir = tempDir("graft_wds").toString
     val samples = Seq(
       (0L, Map("txt" -> "caption zero".getBytes("UTF-8"),
                "bin" -> Array[Byte](1, 2, 3, 4, 5))),
@@ -1240,7 +1240,7 @@ class PipelineSpec extends SparkSpec {
     assert(listed.sorted == List("0.bin", "0.txt", "2.json", "2.txt"),
       s"system tar saw: $listed")
     // and system tar extracts byte-identical content
-    val extractDir = java.nio.file.Files.createTempDirectory("graft_wds_x")
+    val extractDir = tempDir("graft_wds_x")
     scala.sys.process.Process(
       Seq("tar", "-xf", shard0.getAbsolutePath, "-C", extractDir.toString)).!
     assert(java.nio.file.Files.readAllBytes(extractDir.resolve("0.txt")).toSeq ==

@@ -28,6 +28,18 @@ class DistanceSpec extends SparkSpec {
     tiled.foreach { case (k, d) => assert(math.abs(d - cellsBF(k)) < 1e-9, s"$k") }
   }
 
+  test("tiled Dijkstra runs a unit-friction corridor of 80 tiles to its end") {
+    // a 1-cell-high corridor in 2-cell tiles: the distance front
+    // crosses one tile border per round, 79 rounds in all
+    val n = 160L
+    val corridor = LayoutDefinition(Extent(0, 0, n.toDouble, 1), TileLayout((n / 2).toInt, 1, 2, 1))
+    val friction = RasterLayer.fromCells((0L until n).map(x => (x, 0L, 1.0)).toDF("x", "y", "v"),
+      corridor)
+    val d = Distance.costDistanceTiled(friction, Seq((0L, 0.5, 0.5)).toDF("pid", "px", "py"))
+      .toCells.as[(Long, Long, Double)].collect().map { case (x, _, v) => x -> v }.toMap
+    assert(d == (0L until n).map(x => x -> x.toDouble).toMap)
+  }
+
   test("pruned tile-gather euclidean equals brute force over all points") {
     val pts = Seq((1L, 1.2, 6.7), (2L, 6.5, 0.4), (3L, 3.1, 3.9)).toDF("pid", "px", "py")
     val got = Distance.euclidean(spark, pts, layout)

@@ -117,7 +117,7 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("save_stitched roundtrip: catalog -> stitched multiband file -> decode") {
-    val dir = Files.createTempDirectory("graft_stitch").toString
+    val dir = tempDir("graft_stitch").toString
     val a = RasterLayer.fromCells(
       Seq((0L, 0L, 1.0), (7L, 7L, 2.0)).toDF("x", "y", "v"), layout)
     val b = RasterLayer.fromCells(
@@ -148,7 +148,7 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("save_stitched crop_bounds / crop_dimensions (reference layer.py:1981)") {
-    val dir = Files.createTempDirectory("graft_crop").toString
+    val dir = tempDir("graft_crop").toString
     val l = RasterLayer.fromCells(
       Seq((0L, 0L, 1.0), (4L, 4L, 5.0), (5L, 5L, 6.0), (7L, 7L, 9.0)).toDF("x", "y", "v"),
       layout)
@@ -184,7 +184,7 @@ class GeoTiffSpec extends SparkSpec {
     // data in tiles (0,0) and (1,1); (1,0)/(0,1) never written
     val cells = Seq((0L, 0L, 1.0), (5L, 10L, 2.0), (20L, 20L, 3.0), (31L, 31L, 4.0))
     val l = RasterLayer.fromCells(cells.toDF("x", "y", "v"), cogLayout)
-    val dir = Files.createTempDirectory("graft_cog").toString
+    val dir = tempDir("graft_cog").toString
     for (deflate <- Seq(true, false)) {
       val path = s"$dir/cog_$deflate.tif"
       GeoTiff.saveCog(l, path, deflate = deflate)
@@ -216,7 +216,7 @@ class GeoTiffSpec extends SparkSpec {
       yield (x, y, ((x * 131 + y * 17) % 251).toDouble)
     val base = RasterLayer.fromCells(cells.toDF("x", "y", "v"), baseLayout)
     val over = Pyramid.levelUp(base, "Average")
-    val dir = Files.createTempDirectory("graft_bigtiff").toString
+    val dir = tempDir("graft_bigtiff").toString
     for (deflate <- Seq(true, false)) {
       val big = s"$dir/big_$deflate.tif"; val classic = s"$dir/classic_$deflate.tif"
       GeoTiff.saveCogPyramid(Seq(base, over), big, deflate = deflate, bigTiff = true)
@@ -257,7 +257,7 @@ class GeoTiffSpec extends SparkSpec {
       yield (x, y, ((x * 131 + y * 17) % 251).toDouble)
     val base = RasterLayer.fromCells(cells.toDF("x", "y", "v"), baseLayout)
     val over = Pyramid.levelUp(base, "Average")
-    val dir = Files.createTempDirectory("graft_cog_rr").toString
+    val dir = tempDir("graft_cog_rr").toString
     val path = s"$dir/pyr.tif"
     GeoTiff.saveCogPyramid(Seq(base, over), path)
     val fileLen = java.nio.file.Files.size(java.nio.file.Paths.get(path))
@@ -295,7 +295,7 @@ class GeoTiffSpec extends SparkSpec {
     val cells = for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y, (x * 64 + y).toDouble)
     val base = RasterLayer.fromCells(cells.toDF("x", "y", "v"), baseLayout)
     val over = Pyramid.levelUp(base, "Average")
-    val dir = Files.createTempDirectory("graft_cog_ovr").toString
+    val dir = tempDir("graft_cog_ovr").toString
     val path = s"$dir/pyr.tif"
     GeoTiff.saveCogPyramid(Seq(base, over), path)
     val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -383,7 +383,7 @@ class GeoTiffSpec extends SparkSpec {
     // our internally-tiled COG decodes whole through the general path
     val cogLayout = LayoutDefinition(Extent(0, 0, 32, 32), TileLayout(2, 2, 16, 16))
     val l = RasterLayer.fromCells(Seq((1L, 1L, 5.0), (20L, 20L, 9.0)).toDF("x", "y", "v"), cogLayout)
-    val dir = Files.createTempDirectory("graft_anytiff").toString
+    val dir = tempDir("graft_anytiff").toString
     GeoTiff.saveCog(l, s"$dir/c.tif")
     val (_, _, _, _, cc, cr, cb) =
       GeoTiff.decodeScene(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/c.tif")))
@@ -394,7 +394,7 @@ class GeoTiffSpec extends SparkSpec {
   test("writeFolder/readFolder roundtrip through per-tile files") {
     val cells = Seq((0L, 0L, 1.5), (3L, 3L, 2.5), (4L, 4L, 3.5), (7L, 7L, 4.5))
     val l = RasterLayer.fromCells(cells.toDF("x", "y", "v"), layout)
-    val dir = Files.createTempDirectory("graft_folder").toString + "/tiffs"
+    val dir = tempDir("graft_folder").toString + "/tiffs"
     GeoTiff.writeFolder(l, dir)
     assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".tif")) > 1)
     val back = GeoTiff.readFolder(spark, dir).tileToLayout(layout, CellOp.Max)
@@ -403,7 +403,7 @@ class GeoTiffSpec extends SparkSpec {
   }
 
   test("pyramid write stores all zoom levels side by side") {
-    val dir = Files.createTempDirectory("graft_pyr").toString
+    val dir = tempDir("graft_pyr").toString
     val base = RasterLayer.fromCells(
       Seq((0L, 0L, 4.0), (1L, 1L, 8.0), (7L, 7L, 2.0)).toDF("x", "y", "v"), layout)
     val levels = Pyramid.build(base, "Average").take(2) // zooms 1, 0

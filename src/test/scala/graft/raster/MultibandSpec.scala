@@ -111,7 +111,7 @@ class MultibandSpec extends SparkSpec {
   }
 
   test("writeMultiband keeps other zoom partitions (dynamic overwrite)") {
-    val uri = java.nio.file.Files.createTempDirectory("graft_mbz").toString
+    val uri = tempDir("graft_mbz").toString
     val mb = MultibandLayer.fromLayers(Seq(b0, b1))
     graft.catalog.Catalog.writeMultiband(uri, "mbz", mb, zoom = 1)
     graft.catalog.Catalog.writeMultiband(uri, "mbz", mb, zoom = 0)
@@ -121,7 +121,7 @@ class MultibandSpec extends SparkSpec {
   }
 
   test("multiband catalog roundtrip preserves bands") {
-    val uri = java.nio.file.Files.createTempDirectory("graft_mb").toString
+    val uri = tempDir("graft_mb").toString
     val mb = MultibandLayer.fromLayers(Seq(b0, b1))
     graft.catalog.Catalog.writeMultiband(uri, "mb", mb, zoom = 2)
     val back = graft.catalog.Catalog.readMultiband(spark, uri, "mb", zoom = 2)
@@ -131,7 +131,7 @@ class MultibandSpec extends SparkSpec {
   }
 
   test("multiband packed store (uint8) roundtrips bands through one binary blob") {
-    val uri = java.nio.file.Files.createTempDirectory("graft_mb8").toString
+    val uri = tempDir("graft_mb8").toString
     val base = MultibandLayer.fromLayers(Seq(b0, b1))
     val mb = new MultibandLayer(base.df, base.meta.copy(cellType = "uint8"), base.bandCount)
     graft.catalog.Catalog.writeMultiband(uri, "mb8", mb, zoom = 0)

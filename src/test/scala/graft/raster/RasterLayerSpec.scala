@@ -1078,7 +1078,7 @@ class RasterLayerSpec extends SparkSpec {
   }
 
   test("catalog diff: per-tile changed-cell counts, one-sided tiles count whole") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_diff").toString
+    val dir = tempDir("graft_diff").toString
     val a = layer((0, 0, 1.0), (1, 0, 2.0), (5, 5, 3.0))
     val b = layer((0, 0, 1.0), (1, 0, 9.0), (5, 5, 3.0))
     graft.catalog.Catalog.write(dir, "da", a)

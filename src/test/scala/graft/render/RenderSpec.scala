@@ -50,7 +50,7 @@ class RenderSpec extends SparkSpec {
   }
 
   test("tms server serves catalog tiles as PNG over HTTP") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tms").toString
+    val dir = tempDir("graft_tms").toString
     val layout = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
     val layer = RasterLayer.fromCells(
       Seq((0L, 0L, 50.0), (5L, 5L, 250.0)).toDF("x", "y", "v"), layout)
@@ -81,7 +81,7 @@ class RenderSpec extends SparkSpec {
   }
 
   test("tms /tiles serves JOB-FREE (listener-verified) and hooks declare their content type") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tms_nojob").toString
+    val dir = tempDir("graft_tms_nojob").toString
     val layout = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
     val layer = RasterLayer.fromCells(
       Seq((0L, 0L, 50.0), (1L, 0L, 250.0)).toDF("x", "y", "v"), layout)
@@ -125,7 +125,7 @@ class RenderSpec extends SparkSpec {
   }
 
   test("tms custom render hook replaces the breaks/ramp path per tile") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tms_hook").toString
+    val dir = tempDir("graft_tms_hook").toString
     val layout = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
     val layer = RasterLayer.fromCells(
       Seq((0L, 0L, 50.0), (1L, 0L, 250.0)).toDF("x", "y", "v"), layout)
@@ -166,7 +166,7 @@ class RenderSpec extends SparkSpec {
     // reference tms.py TileCompositer / TMS.build(list-of-sources):
     // two layers, compositing fn = per-pixel SUM (NaN = 0 contribution)
     // grayscaled — every served pixel re-derived here from the cells
-    val dir = java.nio.file.Files.createTempDirectory("graft_tms_comp").toString
+    val dir = tempDir("graft_tms_comp").toString
     val layout = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
     graft.catalog.Catalog.write(dir, "a", RasterLayer.fromCells(
       Seq((0L, 0L, 10.0), (1L, 0L, 20.0), (5L, 5L, 7.0)).toDF("x", "y", "v"), layout))
@@ -217,7 +217,7 @@ class RenderSpec extends SparkSpec {
   }
 
   test("tms /cog endpoint serves every overview level from one COG file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tms_cog").toString
+    val dir = tempDir("graft_tms_cog").toString
     val layout = LayoutDefinition(Extent(0, 0, 64, 64), TileLayout(4, 4, 16, 16))
     val cells = for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y, (x + y).toDouble)
     val base = RasterLayer.fromCells(cells.toDF("x", "y", "v"), layout)

@@ -295,7 +295,7 @@ class EventsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Extent, LayoutDefinition, TileLayout}
     val layout = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val dir = tempDir("graft_ingest").toString
     val mem = MemoryStream[(Long, Double, Double, Double, Double, Int, Int, Seq[Double])]
     val q = Events.ingestScenes(
       mem.toDF().toDF("scene_id", "xmin", "ymin", "xmax", "ymax", "cols", "rows", "cells"),
@@ -314,7 +314,7 @@ class EventsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Extent, LayoutDefinition, TileLayout}
     val layout = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_t").toString
+    val dir = tempDir("graft_ingest_t").toString
     val mem = MemoryStream[(Long, Double, Double, Double, Double, Int, Int, Seq[Double], Long)]
     val q = Events.ingestScenes(
       mem.toDF().toDF("scene_id", "xmin", "ymin", "xmax", "ymax",
@@ -339,7 +339,7 @@ class EventsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.core.{Extent, LayoutDefinition, TileLayout}
     val layout = LayoutDefinition(Extent(0, 0, 8, 8), TileLayout(2, 2, 4, 4))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest_c").toString
+    val dir = tempDir("graft_ingest_c").toString
     def parquetFiles() = {
       val d = new java.io.File(s"$dir/live/tiles/zoom=0")
       if (d.exists()) d.listFiles().count(_.getName.endsWith(".parquet")) else 0

@@ -46,7 +46,7 @@ class ShapefileSpec extends SparkSpec {
   }
 
   test("distributed read yields one WKT row per record") {
-    val dir = Files.createTempDirectory("graft_shp").toString
+    val dir = tempDir("graft_shp").toString
     Files.write(Paths.get(s"$dir/pts.shp"), Shapefile.writePoints(Seq(Pt(1, 2), Pt(3, 4))))
     Files.write(Paths.get(s"$dir/poly.shp"), Shapefile.writePolygons(
       Seq(Polygon(IndexedSeq(Pt(0, 0), Pt(8, 0), Pt(8, 8), Pt(0, 8))))))
@@ -77,7 +77,7 @@ class ShapefileSpec extends SparkSpec {
   }
 
   test("readFeatures alignment survives deleted dbf records and null shapes") {
-    val dir = Files.createTempDirectory("graft_shp_del").toString
+    val dir = tempDir("graft_shp_del").toString
     Files.write(Paths.get(s"$dir/t.shp"),
       Shapefile.writePoints(Seq(Pt(1, 1), Pt(2, 2), Pt(3, 3))))
     val dbfBytes = Dbf.write(
@@ -124,7 +124,7 @@ class ShapefileSpec extends SparkSpec {
   }
 
   test("readFeatures pairs geometry records with their dbf attributes") {
-    val dir = Files.createTempDirectory("graft_shp_dbf").toString
+    val dir = tempDir("graft_shp_dbf").toString
     Files.write(Paths.get(s"$dir/cities.shp"),
       Shapefile.writePoints(Seq(Pt(1, 2), Pt(3, 4), Pt(5, 6))))
     Files.write(Paths.get(s"$dir/cities.dbf"), Dbf.write(
