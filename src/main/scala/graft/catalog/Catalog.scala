@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CellType, Extent, LayoutDefinition, TileLayout, ZIndex}
@@ -37,23 +37,26 @@ object Catalog {
   // active session's hadoopConfiguration so fs.s3a.* etc. credentials
   // configured on the session apply to sidecars too.
 
-  private def hadoopConf: Configuration =
+  private[catalog] def hadoopConf: Configuration =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
-  private def fsPath(p: String): (FileSystem, Path) = {
+  private[catalog] def fsPath(p: String): (FileSystem, Path) = {
     val path = new Path(p)
     (path.getFileSystem(hadoopConf), path)
   }
 
-  private def writeString(p: String, content: String): Unit = {
+  private[catalog] def writeString(p: String, content: String): Unit = {
     val (fs, path) = fsPath(p)
     val out = fs.create(path, true)
     try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  private def readString(p: String): String = {
+  private[catalog] def readString(p: String): String =
+    new String(readBytes(p), StandardCharsets.UTF_8)
+
+  private[catalog] def readBytes(p: String): Array[Byte] = {
     val (fs, path) = fsPath(p)
     val in = fs.open(path)
     try {
@@ -61,7 +64,7 @@ object Catalog {
       val chunk = new Array[Byte](8192)
       var n = in.read(chunk)
       while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, StandardCharsets.UTF_8)
+      buf.toByteArray
     } finally in.close()
   }
 
@@ -75,49 +78,64 @@ object Catalog {
     * (legacy-compatible), everything else stores LE-packed BINARY with
     * the [[CellType]] NoData sentinel. A uint8 layer's tile bytes (and
     * the shuffle feeding the z-ordered write) shrink 8x. */
-  private def packCol(cellType: String): org.apache.spark.sql.Column =
+  private def packCol(cellType: String): Column =
     org.apache.spark.sql.graft.TilePackExpr.packCol(col("tile"), cellType)
-  private def unpackCol(cellType: String): org.apache.spark.sql.Column =
+  private def unpackCol(cellType: String): Column =
     org.apache.spark.sql.graft.TileUnpackExpr.unpackCol(col("tile"), cellType)
   private def packed(cellType: String): Boolean = cellType != "float64"
 
-  def write(uri: String, name: String, layer: RasterLayer, zoom: Int = 0,
-            index: String = "zorder"): Unit = {
-    val tl = layer.meta.layout.tileLayout
-    val idxCol = index match {
-      case "zorder"   => ZIndex.zorderCol(col("col").cast("long"), col("row").cast("long"))
-      case "rowmajor" => ZIndex.rowMajorCol(col("col").cast("long"), col("row").cast("long"), tl.layoutCols)
-      case s          => throw new IllegalArgumentException(s)
-    }
-    // temporal layers range-partition by (instant, zindex) — the
-    // reference's time-major space-time index (__init__.py:645
-    // time-resolution partitioners; catalog.py:117 temporal query):
-    // a time-interval query then prunes whole files via parquet
-    // min/max stats on `instant` before the zindex stats cut in
-    // pack BEFORE the repartition so the write shuffle itself carries
-    // native-width bytes, not 8-byte doubles
-    val src =
-      if (packed(layer.meta.cellType))
-        layer.df.withColumn("tile", packCol(layer.meta.cellType))
-      else layer.df
-    val ordered =
-      if (layer.meta.temporal)
-        src.withColumn("zoom", lit(zoom)).withColumn("zindex", idxCol)
-          .repartitionByRange(col("instant"), col("zindex"))
-          .sortWithinPartitions("instant", "zindex")
-      else
-        src.withColumn("zoom", lit(zoom)).withColumn("zindex", idxCol)
-          .repartitionByRange(col("zindex"))
-          .sortWithinPartitions("zindex")
-    ordered
-      .write.mode("overwrite")
-      // dynamic: overwrite only this zoom's partition (multi-zoom
-      // stores are written one level at a time — Pyramid.write)
+  /** A layer's tiles as the store keeps them: the keys, the tile packed
+    * at the layer's width (BEFORE the writer's range exchange, so the
+    * write shuffle carries native-width bytes) and the `zoom` column. */
+  private def packedTiles(layer: RasterLayer, zoom: Int): DataFrame = {
+    val ct = layer.meta.cellType
+    val keys = if (layer.meta.temporal) Seq("col", "row", "instant") else Seq("col", "row")
+    val tile = if (packed(ct)) packCol(ct).as("tile") else col("tile")
+    layer.df.select(keys.map(col) :+ tile :+ lit(zoom).as("zoom"): _*)
+  }
+
+  /** The one tile-store writer: every store path's on-disk layout is
+    * decided here. `tiles` are already packed and carry a `zoom`
+    * column; the writer adds the z-order `zindex` of (col, row),
+    * range-partitions and sorts on (zoom, [instant,] zindex) and writes
+    * one parquet partition per zoom. `zoom` leads the key so each
+    * zoom's files stay zindex-sorted when several levels are written
+    * at once (a single level's layout is the plain zindex one).
+    * Temporal tiles (an `instant` column) sort time-major — the
+    * reference's space-time index (__init__.py:645 time-resolution
+    * partitioners; catalog.py:117 temporal query): a time-interval
+    * query prunes whole files via parquet min/max stats on `instant`
+    * before the zindex stats cut in. Overwrite is DYNAMIC: only the
+    * zooms present in `tiles` are replaced — static mode would wipe
+    * every other zoom already in the store. */
+  private def writeTiles(uri: String, name: String, tiles: DataFrame, mode: SaveMode): Unit = {
+    val key = (if (tiles.columns.contains("instant")) Seq("zoom", "instant", "zindex")
+               else Seq("zoom", "zindex")).map(col)
+    tiles.withColumn("zindex", ZIndex.zorderCol(col("col").cast("long"), col("row").cast("long")))
+      .repartitionByRange(key: _*)
+      .sortWithinPartitions(key: _*)
+      .write.mode(mode)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("zoom")
       .parquet(s"$uri/$name/tiles")
+  }
 
-    writeMetadata(uri, name, layer.meta, zoom)
+  def write(uri: String, name: String, layer: RasterLayer, zoom: Int = 0): Unit =
+    writeLevels(uri, name, Seq(zoom -> layer))
+
+  /** Write several zoom levels under one name in ONE writer call: the
+    * union of the packed levels crosses one range exchange into one
+    * write ([[graft.raster.Pyramid.write]]). The sidecars follow in
+    * the given order, so the shared `_graft_meta.json` describes the
+    * last level. The union refuses levels whose tile columns differ
+    * (float64 and packed, temporal and spatial): one store directory
+    * holds one tile schema. */
+  private[graft] def writeLevels(uri: String, name: String, levels: Seq[(Int, RasterLayer)]): Unit = {
+    require(levels.nonEmpty && levels.map(_._1).distinct.size == levels.size,
+      s"write('$name') needs distinct zooms, got ${levels.map(_._1).mkString(", ")}")
+    writeTiles(uri, name, levels.map { case (z, l) => packedTiles(l, z) }.reduce(_ union _),
+      SaveMode.Overwrite)
+    levels.foreach { case (z, l) => writeMetadata(uri, name, l.meta, z) }
   }
 
   /** Write just the attribute-store metadata sidecar (used by
@@ -158,14 +176,28 @@ object Catalog {
       temporal = s.contains("\"temporal\":true"))
   }
 
-  def read(spark: SparkSession, uri: String, name: String, zoom: Int = 0): RasterLayer = {
-    val meta = readMetadata(uri, name, zoom)
+  def read(spark: SparkSession, uri: String, name: String, zoom: Int = 0): RasterLayer =
+    readResolved(spark, uri, name, zoom, readMetadata(uri, name, zoom))
+
+  /** [[read]] with the zoom's sidecar already resolved: each query
+    * resolves it once (an exists plus an open) and reads through this. */
+  private def readResolved(spark: SparkSession, uri: String, name: String, zoom: Int,
+                           meta: LayerMetadata): RasterLayer = {
     val keys = if (meta.temporal) Seq("col", "row", "instant") else Seq("col", "row")
     val raw = spark.read.parquet(s"$uri/$name/tiles")
       .where(col("zoom") === zoom)
       .select((keys :+ "tile").map(col): _*)
     val df = if (packed(meta.cellType)) raw.withColumn("tile", unpackCol(meta.cellType)) else raw
     new RasterLayer(df, meta)
+  }
+
+  /** The tiles covering the grid-coordinate extent [gxMin, gxMax) x
+    * [gyMin, gyMax): tile-key range predicates that push to the parquet
+    * scan. */
+  private def keyBox(meta: LayerMetadata, gxMin: Long, gyMin: Long, gxMax: Long, gyMax: Long): Column = {
+    val tl = meta.layout.tileLayout
+    col("col") >= (gxMin / tl.tileCols).toInt && col("col") <= ((gxMax - 1) / tl.tileCols).toInt &&
+    col("row") >= (gyMin / tl.tileRows).toInt && col("row") <= ((gyMax - 1) / tl.tileRows).toInt
   }
 
   /** Temporal catalog query (catalog.py:117 query with a time
@@ -176,14 +208,11 @@ object Catalog {
   def queryTime(spark: SparkSession, uri: String, name: String, zoom: Int,
                 gxMin: Long, gyMin: Long, gxMax: Long, gyMax: Long,
                 tMin: Long, tMax: Long): RasterLayer = {
-    val full = read(spark, uri, name, zoom)
-    require(full.meta.temporal, s"layer $name is not temporal")
-    val tl = full.meta.layout.tileLayout
-    val pruned = full.df.where(
-      col("instant") >= tMin && col("instant") <= tMax &&
-      col("col") >= (gxMin / tl.tileCols).toInt && col("col") <= ((gxMax - 1) / tl.tileCols).toInt &&
-      col("row") >= (gyMin / tl.tileRows).toInt && col("row") <= ((gyMax - 1) / tl.tileRows).toInt)
-    new RasterLayer(pruned, full.meta)
+    val meta = readMetadata(uri, name, zoom)
+    require(meta.temporal, s"layer $name is not temporal")
+    val full = readResolved(spark, uri, name, zoom, meta)
+    new RasterLayer(full.df.where(col("instant") >= tMin && col("instant") <= tMax &&
+      keyBox(meta, gxMin, gyMin, gxMax, gyMax)), meta)
   }
 
   /** Multiband layer store: same z-ordered parquet layout with the
@@ -192,23 +221,13 @@ object Catalog {
     * into ONE binary column (bands contiguous, LE, native width) —
     * the same up-to-8x byte saving as single-band stores. */
   def writeMultiband(uri: String, name: String, layer: MultibandLayer, zoom: Int = 0): Unit = {
-    val idxCol = ZIndex.zorderCol(col("col").cast("long"), col("row").cast("long"))
-    val src =
-      if (packed(layer.meta.cellType))
-        layer.df.withColumn("bands",
-          org.apache.spark.sql.graft.BandsPackExpr.packCol(col("bands"), layer.meta.cellType))
-      else layer.df
-    src
-      .withColumn("zoom", lit(zoom))
-      .withColumn("zindex", idxCol)
-      .repartitionByRange(col("zindex"))
-      .sortWithinPartitions("zindex")
-      .write.mode("overwrite")
-      // dynamic: overwrite only this zoom's partition — static mode
-      // would wipe every other zoom already in the store
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("zoom")
-      .parquet(s"$uri/$name/tiles")
+    val ct = layer.meta.cellType
+    val bands =
+      if (packed(ct)) org.apache.spark.sql.graft.BandsPackExpr.packCol(col("bands"), ct)
+      else col("bands")
+    writeTiles(uri, name,
+      layer.df.select(col("col"), col("row"), bands.as("bands"), lit(zoom).as("zoom")),
+      SaveMode.Overwrite)
     writeMetadata(uri, name, layer.meta, zoom)
     writeAttribute(uri, name, "bands", layer.bandCount.toString)
   }
@@ -232,12 +251,8 @@ object Catalog {
   def query(spark: SparkSession, uri: String, name: String, zoom: Int,
             gxMin: Long, gyMin: Long, gxMax: Long, gyMax: Long): RasterLayer = {
     val meta = readMetadata(uri, name, zoom)
-    val tl = meta.layout.tileLayout
-    val full = read(spark, uri, name, zoom)
-    val pruned = full.df.where(
-      col("col") >= (gxMin / tl.tileCols).toInt && col("col") <= ((gxMax - 1) / tl.tileCols).toInt &&
-      col("row") >= (gyMin / tl.tileRows).toInt && col("row") <= ((gyMax - 1) / tl.tileRows).toInt)
-    new RasterLayer(pruned, meta)
+    val full = readResolved(spark, uri, name, zoom, meta)
+    new RasterLayer(full.df.where(keyBox(meta, gxMin, gyMin, gxMax, gyMax)), meta)
   }
 
   /** Geometry-scoped read — reference catalog.py query with a
@@ -251,7 +266,7 @@ object Catalog {
                     wkt: String): RasterLayer = {
     val meta = readMetadata(uri, name, zoom)
     val keys = graft.raster.Rasterize.geometryToKeys(meta.layout, graft.vector.Wkt.parse(wkt))
-    val full = read(spark, uri, name, zoom)
+    val full = readResolved(spark, uri, name, zoom, meta)
     if (keys.isEmpty) return new RasterLayer(full.df.where(lit(false)), meta)
     // pack on the ROW stride so distinct (col,row) never collide
     val lr = meta.layout.tileLayout.layoutRows.toLong
@@ -265,12 +280,11 @@ object Catalog {
 
   /** Append tiles of `layer` to an existing stored layer — reference
     * update_layer (catalog.py:287). Readers resolve duplicate keys via
-    * aggregateByCell/merge on read. Mirrors write's ordering so the
-    * appended files keep the same parquet min/max pruning properties:
-    * temporal layers range-partition + sort on (instant, zindex), so
+    * aggregateByCell/merge on read. Appends through write's own writer,
+    * so the appended files keep the same parquet min/max pruning
+    * properties: temporal layers sort on (instant, zindex), so
     * queryTime's file-skipping promise holds for appended instants. */
   def update(uri: String, name: String, layer: RasterLayer, zoom: Int = 0): Unit = {
-    val idxCol = ZIndex.zorderCol(col("col").cast("long"), col("row").cast("long"))
     // appended tiles must match the STORED encoding, not whatever the
     // incoming layer claims — mixing array<double> and binary files in
     // one parquet directory corrupts the store with no error until the
@@ -281,23 +295,7 @@ object Catalog {
     require(storedType == layer.meta.cellType,
       s"update('$name') cellType mismatch: store is $storedType, layer is " +
       s"${layer.meta.cellType} — convertCellType the layer first")
-    val src =
-      if (packed(storedType))
-        layer.df.withColumn("tile", packCol(storedType))
-      else layer.df
-    val ordered =
-      if (layer.meta.temporal)
-        src.withColumn("zoom", lit(zoom)).withColumn("zindex", idxCol)
-          .repartitionByRange(col("instant"), col("zindex"))
-          .sortWithinPartitions("instant", "zindex")
-      else
-        src.withColumn("zoom", lit(zoom)).withColumn("zindex", idxCol)
-          .repartitionByRange(col("zindex"))
-          .sortWithinPartitions("zindex")
-    ordered
-      .write.mode("append")
-      .partitionBy("zoom")
-      .parquet(s"$uri/$name/tiles")
+    writeTiles(uri, name, packedTiles(layer, zoom), SaveMode.Append)
   }
 
   /** Compact one zoom partition: incremental appends (update /

@@ -1,9 +1,7 @@
 package graft.catalog
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{BytesWritable, LongWritable, MapFile, SequenceFile}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col => fcol}
@@ -89,36 +87,7 @@ object GeoTrellisStore {
                               crs: String,
                               keyBounds: ((Long, Long), (Long, Long)))
 
-  private def hadoopConf: Configuration =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new Configuration())
-
-  private def fsPath(p: String): (FileSystem, Path) = {
-    val path = new Path(p)
-    (path.getFileSystem(hadoopConf), path)
-  }
-
-  private def readString(p: String): String =
-    new String(readBytes(p), StandardCharsets.UTF_8)
-
-  private def readBytes(p: String): Array[Byte] = {
-    val (fs, path) = fsPath(p)
-    val in = fs.open(path)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      buf.toByteArray
-    } finally in.close()
-  }
-
-  private def writeString(p: String, content: String): Unit = {
-    val (fs, path) = fsPath(p)
-    val out = fs.create(path, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
+  import Catalog.{fsPath, hadoopConf, readBytes, readString, writeString}
 
   /** geotrellis `FileAttributeStore.SEP` — THREE underscores. */
   private val Sep = "___"

@@ -12,7 +12,6 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -103,11 +102,8 @@ private[catalog] object GraftTable {
   }
 
   /** The session Hadoop conf flattened to serializable properties. */
-  def confProps(): Map[String, String] = {
-    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())
-    conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-  }
+  def confProps(): Map[String, String] =
+    Catalog.hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
 
   def confFrom(props: Map[String, String]): Configuration = {
     val c = new Configuration(false)

@@ -68,8 +68,4 @@ object ZIndex {
     }
     d
   }
-
-  /** Row-major index given layout width. */
-  def rowMajorCol(col: Column, row: Column, layoutCols: Int): Column =
-    row * lit(layoutCols.toLong) + col
 }

@@ -112,14 +112,16 @@ object Pyramid {
   }
 
   /** Write every level of a pyramid to the catalog under one name —
-    * reference Pyramid.write (layer.py:2654). Every level goes through
-    * Catalog.write: dynamic partitionOverwriteMode replaces only that
-    * zoom's partition, so a re-run is idempotent (an append here would
-    * double every non-base zoom). Each level writes its OWN metadata
-    * sidecar (_graft_meta_$zoom.json) — Catalog.read resolves by zoom,
-    * so reading any level back pairs tiles with that level's layout. */
+    * reference Pyramid.write (layer.py:2654) — in ONE catalog write:
+    * the union of the levels crosses one range exchange and lands as
+    * one parquet partition per zoom. Dynamic partitionOverwriteMode
+    * replaces only the zooms written, so a re-run is idempotent and
+    * zooms written earlier under the same name survive. Each level
+    * writes its OWN metadata sidecar (_graft_meta_$zoom.json), in
+    * level order — Catalog.read resolves by zoom, so reading any level
+    * back pairs tiles with that level's layout. */
   def write(uri: String, name: String, levels: Seq[(Int, RasterLayer)]): Unit =
-    levels.foreach { case (zoom, l) => graft.catalog.Catalog.write(uri, name, l, zoom) }
+    graft.catalog.Catalog.writeLevels(uri, name, levels)
 
   /** Full pyramid down to a single tile: zoom -> layer map, highest
     * zoom first (reference Pyramid class layer.py:2617). */

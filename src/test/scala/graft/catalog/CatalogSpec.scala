@@ -2,9 +2,11 @@ package graft.catalog
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.SparkSpec
 import graft.core.{Extent, LayoutDefinition, TileLayout}
-import graft.raster.RasterLayer
+import graft.raster.{MultibandLayer, Pyramid, RasterLayer}
 
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
@@ -13,6 +15,32 @@ class CatalogSpec extends SparkSpec {
 
   def layer(cells: (Long, Long, Double)*): RasterLayer =
     RasterLayer.fromCells(cells.toSeq.toDF("x", "y", "v"), layout)
+
+  /** 8x8 tiles of 8x8 cells, every cell set: enough tiles that each
+    * written file holds many rows. */
+  val bigLayout = LayoutDefinition(Extent(0, 0, 64, 64), TileLayout(8, 8, 8, 8))
+  def bigLayer(scale: Double): RasterLayer = {
+    val cells = for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y, scale * (x * 100 + y))
+    RasterLayer.fromCells(cells.toDF("x", "y", "v"), bigLayout)
+  }
+
+  /** Each tile file of the store must hold its rows in ([instant,]
+    * zindex) order — the layout the zindex footer pruning relies on. */
+  def assertZSorted(dir: String, name: String): Unit = {
+    val files = new java.io.File(s"$dir/$name/tiles").listFiles().toSeq
+      .filter(_.getName.startsWith("zoom="))
+      .flatMap(_.listFiles().toSeq.filter(_.getName.endsWith(".parquet")))
+    val keys = files.map { f =>
+      val df = spark.read.parquet(f.getPath)
+      val instant = if (df.columns.contains("instant")) col("instant") else lit(0L)
+      f -> df.select(instant, col("zindex")).as[(Long, Long)].collect().toSeq
+    }
+    assert(keys.exists(_._2.size > 1), s"no tile file under $dir/$name holds an order")
+    keys.foreach { case (f, ks) => assert(ks == ks.sorted, s"$f is not sorted by ([instant,] zindex)") }
+  }
+
+  def cellsOf(l: RasterLayer): Seq[(Long, Long, Double)] =
+    l.toCells.as[(Long, Long, Double)].collect().toSeq.sorted
 
   test("write/read roundtrip preserves cells and metadata") {
     val dir = tempDir("graft_cat").toString
@@ -304,5 +332,65 @@ class CatalogSpec extends SparkSpec {
     Catalog.write(dir, "t", layer((0, 0, 1.0)), zoom = 0)
     Catalog.writeAttribute(dir, "t", "notes", """{"a":1}""")
     assert(Catalog.readAttribute(dir, "t", "notes") == """{"a":1}""")
+  }
+
+  test("every store path leaves each tile file sorted by ([instant,] zindex)") {
+    val dir = tempDir("graft_cat_layout").toString
+    Catalog.write(dir, "w", bigLayer(1.0), zoom = 0)
+    assertZSorted(dir, "w")
+    Catalog.update(dir, "w", bigLayer(2.0), zoom = 0)
+    assertZSorted(dir, "w")
+    Catalog.compact(spark, dir, "w", zoom = 0)
+    assertZSorted(dir, "w")
+
+    val temporal = (instants: Seq[Long]) => RasterLayer.fromCellsTemporal(
+      (for (t <- instants; x <- 0L until 64L by 3; y <- 0L until 64L by 3)
+        yield (x, y, t, (x + y + t).toDouble)).toDF("x", "y", "instant", "v"), bigLayout)
+    Catalog.write(dir, "t", temporal(Seq(30L, 10L)), zoom = 0)
+    assertZSorted(dir, "t")
+    Catalog.update(dir, "t", temporal(Seq(20L, 40L)), zoom = 0)
+    assertZSorted(dir, "t")
+
+    Catalog.writeMultiband(dir, "mb", MultibandLayer.fromLayers(Seq(bigLayer(1.0), bigLayer(2.0))), zoom = 1)
+    assertZSorted(dir, "mb")
+
+    val levels = Pyramid.build(bigLayer(1.0)).take(3)
+    assert(levels.map(_._1) == Seq(3, 2, 1))
+    Pyramid.write(dir, "pyr", levels)
+    assertZSorted(dir, "pyr")
+  }
+
+  test("Pyramid.write twice leaves every level equal to its source, no doubled rows") {
+    val dir = tempDir("graft_cat_pyr").toString
+    val levels = Pyramid.build(bigLayer(1.0)).take(3)
+    Pyramid.write(dir, "pyr", levels)
+    Pyramid.write(dir, "pyr", levels)
+    levels.foreach { case (z, l) =>
+      val back = Catalog.read(spark, dir, "pyr", z)
+      assert(back.meta == l.meta, s"zoom $z metadata")
+      assert(back.df.count() == l.df.count(), s"zoom $z tile count")
+      assert(cellsOf(back) == cellsOf(l), s"zoom $z cells")
+    }
+  }
+
+  test("Pyramid.write keeps zooms written earlier; each level's sidecar gives its layout") {
+    val dir = tempDir("graft_cat_pyr").toString
+    val earlier = layer((0, 0, 1.0), (7, 7, 2.0))
+    Catalog.write(dir, "pyr", earlier, zoom = 7)
+    val levels = Pyramid.build(bigLayer(1.0)).take(3)
+    Pyramid.write(dir, "pyr", levels)
+    val kept = Catalog.read(spark, dir, "pyr", 7)
+    assert(kept.meta.layout == layout)
+    assert(cellsOf(kept) == cellsOf(earlier))
+    levels.foreach { case (z, l) =>
+      assert(Catalog.readMetadata(dir, "pyr", z).layout == l.meta.layout, s"zoom $z sidecar")
+      assert(cellsOf(Catalog.read(spark, dir, "pyr", z)) == cellsOf(l), s"zoom $z cells")
+    }
+    // the shared sidecar is the last level's, as with one write per level
+    assert(Catalog.readMetadata(dir, "pyr", 5).layout == levels.last._2.meta.layout)
+    // levels whose stored tile columns differ are refused before any write
+    intercept[org.apache.spark.sql.AnalysisException](Pyramid.write(dir, "pyr",
+      Seq(3 -> levels.head._2, 9 -> levels.head._2.convertCellType("uint8"))))
+    assert(!new java.io.File(s"$dir/pyr/tiles/zoom=9").exists())
   }
 }
