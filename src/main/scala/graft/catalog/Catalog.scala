@@ -2,6 +2,8 @@ package graft.catalog
 
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
@@ -41,6 +43,21 @@ object Catalog {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
+
+  /** A Hadoop conf (the session's by default) flattened to serializable
+    * properties: executor-side reads and writes must see the session's
+    * spark.hadoop.* settings (s3a credentials, defaultFS, …) — a bare
+    * `new Configuration()` on the executor would silently drop them and
+    * half-write a store (attributes from the driver conf, no tiles).
+    * [[confFrom]] rebuilds the conf from them. */
+  private[graft] def confProps(conf: Configuration = hadoopConf): Map[String, String] =
+    conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+
+  private[graft] def confFrom(props: Map[String, String]): Configuration = {
+    val c = new Configuration(false)
+    props.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
 
   private[catalog] def fsPath(p: String): (FileSystem, Path) = {
     val path = new Path(p)

@@ -385,10 +385,10 @@ object GeoTrellisStore {
     if (format == "hdfs") {
       val parts = partDirs(dir).map(p => s"$p/data")
       require(parts.nonEmpty, s"hadoop-layout layer at $dir has no part-* MapFiles")
-      val entries = confEntries()
+      val props = Catalog.confProps()
       spark.createDataset(parts).repartition(parts.length)
         .mapPartitions { it =>
-          val conf = confOf(entries)
+          val conf = Catalog.confFrom(props)
           it.flatMap { f =>
             val rd = new SequenceFile.Reader(conf, SequenceFile.Reader.file(new Path(f)))
             val key = new LongWritable()
@@ -847,14 +847,14 @@ object GeoTrellisStore {
     * shape HadoopRDDWriter uses. */
   private def writeDatums(datums: DataFrame, dir: String, width: Int,
                           layout: String): Unit = {
-    val entries = confEntries()
+    val props = Catalog.confProps()
     if (layout == "hadoop") {
       val parts = math.max(1, datums.sparkSession.sparkContext.defaultParallelism)
       datums.repartitionByRange(parts, fcol("idx"))
         .sortWithinPartitions("idx")
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
           if (it.hasNext) {
-            val conf = confOf(entries)
+            val conf = Catalog.confFrom(props)
             val pid = org.apache.spark.TaskContext.getPartitionId()
             var writer: MapFile.Writer = null
             try {
@@ -873,7 +873,7 @@ object GeoTrellisStore {
         }
     } else
       datums.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        val conf = confOf(entries)
+        val conf = Catalog.confFrom(props)
         it.foreach(r =>
           writeTileFile(dir, width, conf, r.getAs[Array[Byte]](1), r.getLong(0)))
       }
@@ -1086,24 +1086,6 @@ object GeoTrellisStore {
     val p = new Path(s"$dir/${zeroPad(idx, width)}")
     val out = p.getFileSystem(conf).create(p, true)
     try out.write(bytes) finally out.close()
-  }
-
-  /** The driver's Hadoop conf as serializable entries: executor-side
-    * tile writes must see the session's spark.hadoop.* settings
-    * (s3a credentials, defaultFS, …) — a bare `new Configuration()`
-    * on the executor would silently drop them and half-write the
-    * store (attributes from the driver conf, no tiles). */
-  private def confEntries(): Array[(String, String)] = {
-    val it = hadoopConf.iterator()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    while (it.hasNext) { val e = it.next(); buf += (e.getKey -> e.getValue) }
-    buf.toArray
-  }
-
-  private def confOf(entries: Array[(String, String)]): Configuration = {
-    val c = new Configuration(false)
-    entries.foreach { case (k, v) => c.set(k, v) }
-    c
   }
 
   /** Minimal JSON re-serializer for the parsed attribute trees (the

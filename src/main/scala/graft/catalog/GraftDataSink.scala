@@ -158,10 +158,10 @@ private[catalog] final class GraftBatchWrite(
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftWriterFactory(zoomDir, schema, meta.cellType,
-      meta.temporal, UUID.randomUUID().toString, GraftTable.confProps())
+      meta.temporal, UUID.randomUUID().toString, Catalog.confProps())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = GraftTable.confFrom(GraftTable.confProps())
+    val conf = Catalog.confFrom(Catalog.confProps())
     val dir = new Path(zoomDir)
     val fs = dir.getFileSystem(conf)
     if (truncate && fs.exists(dir)) {
@@ -176,7 +176,7 @@ private[catalog] final class GraftBatchWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = GraftTable.confFrom(GraftTable.confProps())
+    val conf = Catalog.confFrom(Catalog.confProps())
     messages.filter(_ != null).foreach { m =>
       val p = new Path(m.asInstanceOf[GraftCommit].file)
       val fs = p.getFileSystem(conf)
@@ -213,10 +213,10 @@ private[catalog] final class GraftStreamingWrite(
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     GraftStreamingWriterFactory(zoomDir, schema, meta.cellType,
-      meta.temporal, GraftTable.confProps())
+      meta.temporal, Catalog.confProps())
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = GraftTable.confFrom(GraftTable.confProps())
+    val conf = Catalog.confFrom(Catalog.confProps())
     val dir = new Path(zoomDir)
     val fs = dir.getFileSystem(conf)
     val committed = messages.filter(_ != null)
@@ -233,7 +233,7 @@ private[catalog] final class GraftStreamingWrite(
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = GraftTable.confFrom(GraftTable.confProps())
+    val conf = Catalog.confFrom(Catalog.confProps())
     messages.filter(_ != null).foreach { m =>
       val p = new Path(m.asInstanceOf[GraftCommit].file)
       val fs = p.getFileSystem(conf)
@@ -274,7 +274,7 @@ private[catalog] final class GraftDataWriter(
     confProps: Map[String, String],
     renameTo: Option[String] = None) extends DataWriter[InternalRow] {
 
-  private val conf = GraftTable.confFrom(confProps)
+  private val conf = Catalog.confFrom(confProps)
   private val ct = CellType.fromName(cellType)
   private val isPacked = cellType != "float64"
   private val msgType = MessageTypeParser.parseMessageType(

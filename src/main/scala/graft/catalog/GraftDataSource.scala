@@ -4,7 +4,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
@@ -99,16 +98,6 @@ private[catalog] object GraftTable {
     val keys = Seq(StructField("col", IntegerType), StructField("row", IntegerType)) ++
       (if (temporal) Seq(StructField("instant", LongType)) else Nil)
     StructType(keys :+ StructField("tile", ArrayType(DoubleType)))
-  }
-
-  /** The session Hadoop conf flattened to serializable properties. */
-  def confProps(): Map[String, String] =
-    Catalog.hadoopConf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-
-  def confFrom(props: Map[String, String]): Configuration = {
-    val c = new Configuration(false)
-    props.foreach { case (k, v) => c.set(k, v) }
-    c
   }
 }
 
@@ -259,7 +248,7 @@ private[catalog] final class GraftScanBuilder(opts: GraftTable.Opts, full: Struc
     * the zoom directory carries min/max statistics for all of `cols`.
     * Metadata-only (same footers the agg scan reads at execution). */
   private def footerStatsCover(cols: Set[String]): Boolean = {
-    val conf = GraftTable.confFrom(GraftTable.confProps())
+    val conf = Catalog.confFrom(Catalog.confProps())
     val dir = new Path(s"${opts.uri}/${opts.layer}/tiles/zoom=${opts.zoom}")
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return true // empty store: count-only row is fine
@@ -309,7 +298,7 @@ private[catalog] final class GraftAggScan(opts: GraftTable.Opts, aggs: Seq[Graft
     Array(GraftInputPartition("footers"))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    GraftAggReaderFactory(opts, aggs, GraftTable.confProps())
+    GraftAggReaderFactory(opts, aggs, Catalog.confProps())
 }
 
 private[catalog] final case class GraftAggReaderFactory(
@@ -338,7 +327,7 @@ private[catalog] final case class GraftAggReaderFactory(
         * final aggregate ignores NULL partials, matching the row-scan
         * plan instead of failing at execution. */
       private def compute(): InternalRow = {
-        val conf = GraftTable.confFrom(confProps)
+        val conf = Catalog.confFrom(confProps)
         val dir = new Path(s"${opts.uri}/${opts.layer}/tiles/zoom=${opts.zoom}")
         val fs = dir.getFileSystem(conf)
         var count = 0L
@@ -395,7 +384,7 @@ private[catalog] final class GraftScan(opts: GraftTable.Opts, required: StructTy
   /** One partition per parquet file surviving footer min/max pruning
     * on the key box. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = GraftTable.confFrom(GraftTable.confProps())
+    val conf = Catalog.confFrom(Catalog.confProps())
     val dir = new Path(s"${opts.uri}/${opts.layer}/tiles/zoom=${opts.zoom}")
     val fs = dir.getFileSystem(conf)
     if (!fs.exists(dir)) return Array.empty
@@ -429,7 +418,7 @@ private[catalog] final class GraftScan(opts: GraftTable.Opts, required: StructTy
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val meta = Catalog.readMetadata(opts.uri, opts.layer, opts.zoom)
-    GraftReaderFactory(required, meta.cellType, box, GraftTable.confProps())
+    GraftReaderFactory(required, meta.cellType, box, Catalog.confProps())
   }
 }
 
@@ -450,7 +439,7 @@ private[catalog] final class GraftPartitionReader(
     file: String, required: StructType, cellType: String, box: KeyBox,
     confProps: Map[String, String]) extends PartitionReader[InternalRow] {
 
-  private val conf = GraftTable.confFrom(confProps)
+  private val conf = Catalog.confFrom(confProps)
   private val ct = CellType.fromName(cellType)
   private val isPacked = cellType != "float64"
 
@@ -565,7 +554,7 @@ private[catalog] final class GraftMicroBatchStream(
   private def dir = new Path(s"${opts.uri}/${opts.layer}/tiles/zoom=${opts.zoom}")
 
   private def listFiles(): Set[String] = {
-    val fs = dir.getFileSystem(GraftTable.confFrom(GraftTable.confProps()))
+    val fs = dir.getFileSystem(Catalog.confFrom(Catalog.confProps()))
     if (!fs.exists(dir)) Set.empty
     else fs.listStatus(dir).map(_.getPath.getName)
       .filter(_.endsWith(".parquet")).toSet
@@ -579,7 +568,7 @@ private[catalog] final class GraftMicroBatchStream(
   private val lockPath = new Path(
     s"${opts.uri}/${opts.layer}/_stream_reader_${java.util.UUID.randomUUID()}.lock")
   locally {
-    val fs = lockPath.getFileSystem(GraftTable.confFrom(GraftTable.confProps()))
+    val fs = lockPath.getFileSystem(Catalog.confFrom(Catalog.confProps()))
     val out = fs.create(lockPath, true)
     out.write(s"started=${java.time.Instant.now()}\n".getBytes("UTF-8"))
     out.close()
@@ -590,7 +579,7 @@ private[catalog] final class GraftMicroBatchStream(
   override def deserializeOffset(json: String): Offset = GraftOffset.fromJson(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = {
-    val fs = lockPath.getFileSystem(GraftTable.confFrom(GraftTable.confProps()))
+    val fs = lockPath.getFileSystem(Catalog.confFrom(Catalog.confProps()))
     if (fs.exists(lockPath)) fs.delete(lockPath, false)
   }
 
@@ -603,6 +592,6 @@ private[catalog] final class GraftMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val meta = Catalog.readMetadata(opts.uri, opts.layer, opts.zoom)
-    GraftReaderFactory(required, meta.cellType, box, GraftTable.confProps())
+    GraftReaderFactory(required, meta.cellType, box, Catalog.confProps())
   }
 }

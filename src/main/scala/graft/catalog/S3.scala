@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * graft IO path (catalog store, DSv2 scan/sink, GeoTiff scenes,
   * TFRecord/WebDataset shards) already resolves its FileSystem from,
   * so credentials set here reach executors through the same
-  * `GraftTable.confProps()` snapshot the writers ship.
+  * `Catalog.confProps()` snapshot the writers ship.
   */
 object S3 {
 

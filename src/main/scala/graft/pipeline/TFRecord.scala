@@ -7,6 +7,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.Catalog
+
 /** TFRecord interchange — the shard format TensorFlow/JAX input
   * pipelines consume, written and read from the PUBLIC specs with no
   * TF dependency:
@@ -33,20 +35,6 @@ import org.apache.spark.sql.functions._
 object TFRecord {
 
   private val MaskDelta = 0xa282ead8
-
-  /** Session Hadoop conf flattened to serializable props (the catalog
-    * sink discipline — executors rebuild it with [[confOf]]). */
-  private def hadoopProps(spark: SparkSession): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-  }
-
-  private def confOf(props: Map[String, String]): org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration(false)
-    props.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
 
   /** Masked CRC32C per the TFRecord spec (uint32 arithmetic). */
   def maskedCrc32c(bytes: Array[Byte], off: Int, len: Int): Int = {
@@ -200,12 +188,12 @@ object TFRecord {
     require(n >= 1 && n <= 100000, "1..100000 shards")
     val spark = docs.sparkSession
     import spark.implicits._
-    val confProps = hadoopProps(spark)
+    val confProps = Catalog.confProps(spark.sparkContext.hadoopConfiguration)
     docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .groupByKey(d => Math.floorMod(d._1, n.toLong).toInt)
       .flatMapGroups { (shard: Int, it: Iterator[(Long, String)]) =>
-        val conf = confOf(confProps)
+        val conf = Catalog.confFrom(confProps)
         val p = new Path(f"$dir/part-$shard%05d.tfrecord")
         val fs = p.getFileSystem(conf)
         val out = fs.create(p, true)
@@ -227,15 +215,15 @@ object TFRecord {
     * shard file; CRCs verified on every record. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val confProps = hadoopProps(spark)
-    val conf = confOf(confProps)
+    val confProps = Catalog.confProps(spark.sparkContext.hadoopConfiguration)
+    val conf = Catalog.confFrom(confProps)
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     val files = fs.listStatus(d).map(_.getPath.toString)
       .filter(_.endsWith(".tfrecord")).sorted.toSeq
     spark.createDataset(files).repartition(math.max(1, files.size))
       .flatMap { file =>
-        val c = confOf(confProps)
+        val c = Catalog.confFrom(confProps)
         val p = new Path(file)
         val shard = p.getName.stripPrefix("part-").stripSuffix(".tfrecord").toInt
         val in = p.getFileSystem(c).open(p)

@@ -1212,62 +1212,55 @@ object TextAnalysis {
     * pattern), so outputs are order-free integers:
     * (doc_id, n_scored, score_q).
     *
-    * Scale: each doc is tokenized once, on its side of the parity
-    * split, and every token row takes its two successors from the
-    * doc's own token array (no window sort). The three count tables
-    * are ONE map-side-combined aggregate keyed (a, b, c) — the
-    * count-collection step Brants et al. distribute exactly this way
-    * — probed by one lookup join. */
+    * Scale: each doc is tokenized on its side of the parity split,
+    * and every token row takes its two successors from the doc's own
+    * token array (no window sort). The three count tables are ONE
+    * map-side-combined aggregate keyed by a packed string `"a b c"` —
+    * the count-collection step Brants et al. distribute exactly this
+    * way. "" pads the unused arity slots: a unigram is
+    * `"a  "`, a bigram `"a b "`, a trigram `"a b c"`. Tokens are
+    * nonempty [a-z0-9]+ runs, so the separator cannot occur inside a
+    * token and the two separators pin every split: two different
+    * grams never pack to the same key. Each scored trigram stays ONE
+    * row end to end: it carries its five probe keys and takes each
+    * count by a left equi-join on the table (a probe matches at most
+    * one key), then scores, quantizes and sums per doc map-side.
+    * Catalyst picks each join's strategy: a table under the broadcast
+    * threshold is broadcast once and its exchange reused by the other
+    * four lookups; a larger one sort-merge joins. N, the train token
+    * count, is one global sum of the train docs' token counts (every
+    * train token emits exactly one unigram key), so it needs no second
+    * aggregate over the table. */
   def stupidBackoff(docs: DataFrame, alpha: Double = 0.5): DataFrame = {
-    // (doc_id, pos, w, w2, w3) of one parity side: w2/w3 are the next
-    // two tokens of the same doc, null past its end
-    def grams(parity: Int): DataFrame = docs
-      .where(pmod(col("doc_id"), lit(2)) === parity)
-      .select(col("doc_id"),
-        org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text")).as("t"))
+    val tokens = org.apache.spark.sql.graft.TokenizeExpr.tokenizeLower(col("text"))
+    def side(parity: Int): DataFrame = docs.where(pmod(col("doc_id"), lit(2)) === parity)
+    // (doc_id, w, w2, w3) of one parity side: w2/w3 are the next two
+    // tokens of the same doc, null past its end
+    def grams(parity: Int): DataFrame = side(parity)
+      .select(col("doc_id"), tokens.as("t"))
       .select(col("doc_id"), col("t"), posexplode(col("t")).as(Seq("pos", "w")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"), col("w"),
+      .select(col("doc_id"), col("w"),
         get(col("t"), col("pos") + 1).as("w2"), get(col("t"), col("pos") + 2).as("w3"))
-    // r21 (guide §2.4/§3): the count tables share ONE lookup table
-    // keyed (a, b, c) — "" pads unused arity slots, and since tokens
-    // are nonempty [a-z0-9]+ runs, the padding alone tells a unigram
-    // (a, "", "") from a bigram (a, b, "") from a trigram — and each
-    // scored trigram explodes into its five probe keys, numbered by
-    // the slot they fill. A probe matches at most one lookup row (the
-    // counts are keyed aggregates), so the per-(doc, pos) pivot below
-    // is value-identical to five separate left joins, nulls included
-    // (left join miss == absent probe hit == null slot). Every train
-    // token emits its unigram, bigram and trigram keys; a key running
-    // past the doc's end is null and drops.
+    // concat is null when any part is: a key running past the doc's
+    // end drops
     val e = lit("")
-    def key(a: Column, b: Column, c: Column): Column =
-      struct(a.as("a"), b.as("b"), c.as("c"))
-    val lut = grams(0)
+    def key(a: Column, b: Column, c: Column): Column = concat(a, lit(" "), b, lit(" "), c)
+    val counts = grams(0)
       .select(explode(array(key(col("w"), e, e), key(col("w"), col("w2"), e),
-        key(col("w"), col("w2"), col("w3")))).as("g"))
-      .where(col("g.b").isNotNull && col("g.c").isNotNull)
-      .groupBy(col("g.a").as("a"), col("g.b").as("b"), col("g.c").as("c"))
-      .agg(count(lit(1)).as("cnt"))
-    // N = train tokens = the unigram counts' sum; the same aggregate
-    // subtree, so its exchange is reused, not recomputed
-    val n = lut.where(col("b") === "")
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("ntr"))
-    // slots: 0 = c3(w w2 w3), 1 = c2(w w2), 2 = c2(w2 w3), 3 = c1(w2),
-    // 4 = c1(w3)
+        key(col("w"), col("w2"), col("w3")))).as("k"))
+      .where(col("k").isNotNull)
+      .groupBy("k").agg(count(lit(1)).as("cnt"))
+    val n = side(0).agg(coalesce(sum(array_size(tokens)), lit(0L)).as("ntr"))
     val probes = grams(1)
       .where(col("w3").isNotNull) // w3 defined => w2 is too
-      .select(col("doc_id"), col("pos"), posexplode(array(
-        key(col("w"), col("w2"), col("w3")), key(col("w"), col("w2"), e),
-        key(col("w2"), col("w3"), e), key(col("w2"), e, e),
-        key(col("w3"), e, e))).as(Seq("slot", "p")))
-      .select(col("doc_id"), col("pos"), col("slot"),
-        col("p.a").as("a"), col("p.b").as("b"), col("p.c").as("c"))
-    def slot(i: Int) = max(when(col("slot") === i, col("cnt")))
-    val scored = probes.join(lut, Seq("a", "b", "c"), "left")
-      .groupBy("doc_id", "pos")
-      .agg(slot(0).as("c3"), slot(1).as("c2ctx"), slot(2).as("c2bo"),
-        slot(3).as("c1w2"), slot(4).as("c1w3"))
-      .crossJoin(broadcast(n))
+      .select(col("doc_id"),
+        key(col("w"), col("w2"), col("w3")).as("k_c3"), key(col("w"), col("w2"), e).as("k_c2ctx"),
+        key(col("w2"), col("w3"), e).as("k_c2bo"), key(col("w2"), e, e).as("k_c1w2"),
+        key(col("w3"), e, e).as("k_c1w3"))
+    // probe key k_x looks up count x (null on a miss)
+    val looked = Seq("c3", "c2ctx", "c2bo", "c1w2", "c1w3").foldLeft(probes) { (df, c) =>
+      df.join(counts.toDF(s"k_$c", c), Seq(s"k_$c"), "left")
+    }
     val s = when(col("c3").isNotNull,
         col("c3").cast("double") / col("c2ctx").cast("double"))
       .when(col("c2bo").isNotNull,
@@ -1275,7 +1268,7 @@ object TextAnalysis {
       .when(col("c1w3").isNotNull,
         lit(alpha) * lit(alpha) * (col("c1w3").cast("double") / col("ntr").cast("double")))
       .otherwise(lit(0.0))
-    scored
+    looked.crossJoin(broadcast(n))
       .select(col("doc_id"), round(s * lit(1000000.0)).cast("long").as("q"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_scored"), sum("q").as("score_q"))

@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.Catalog
+
 /** WebDataset interchange — the tar-shard convention multimodal
   * training pipelines (img2dataset / OpenCLIP-style loaders) consume:
   * each shard is a POSIX ustar archive whose entries are named
@@ -25,18 +27,6 @@ import org.apache.spark.sql.functions._
   * task.
   */
 object WebDataset {
-
-  private def hadoopProps(spark: SparkSession): Map[String, String] = {
-    import scala.jdk.CollectionConverters._
-    spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-  }
-
-  private def confOf(props: Map[String, String]): org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration(false)
-    props.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
 
   /** One ustar header block (512 bytes) for a regular file. */
   def tarHeader(name: String, size: Long): Array[Byte] = {
@@ -78,12 +68,12 @@ object WebDataset {
     require(n >= 1 && n <= 100000, "1..100000 shards")
     val spark = samples.sparkSession
     import spark.implicits._
-    val props = hadoopProps(spark)
+    val props = Catalog.confProps(spark.sparkContext.hadoopConfiguration)
     samples.select(col("key").cast("long"), col("entries"))
       .as[(Long, Map[String, Array[Byte]])]
       .groupByKey(s => Math.floorMod(s._1, n.toLong).toInt)
       .flatMapGroups { (shard: Int, it: Iterator[(Long, Map[String, Array[Byte]])]) =>
-        val conf = confOf(props)
+        val conf = Catalog.confFrom(props)
         val p = new Path(f"$dir/shard-$shard%05d.tar")
         val out = p.getFileSystem(conf).create(p, true)
         var count = 0L
@@ -109,15 +99,15 @@ object WebDataset {
     * per shard; header checksums verified. */
   def read(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val props = hadoopProps(spark)
+    val props = Catalog.confProps(spark.sparkContext.hadoopConfiguration)
     val d = new Path(dir)
-    val files = d.getFileSystem(confOf(props)).listStatus(d)
+    val files = d.getFileSystem(Catalog.confFrom(props)).listStatus(d)
       .map(_.getPath.toString).filter(_.endsWith(".tar")).sorted.toSeq
     spark.createDataset(files).repartition(math.max(1, files.size))
       .flatMap { file =>
         val p = new Path(file)
         val shard = p.getName.stripPrefix("shard-").stripSuffix(".tar").toInt
-        val in = p.getFileSystem(confOf(props)).open(p)
+        val in = p.getFileSystem(Catalog.confFrom(props)).open(p)
         val bytes = try {
           val bos = new ByteArrayOutputStream()
           val buf = new Array[Byte](64 * 1024)

@@ -6,7 +6,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,6 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(2)
 }
+
+/** Walks adaptive plans into their query stages. */
+private[graft] object AdaptivePlans extends AdaptiveSparkPlanHelper
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
@@ -65,6 +71,23 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (out, jobs.get(), accs.asScala.toSet)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The exchanges of `df`'s final adaptive plan, in tree order:
+    * shuffle and broadcast exchanges, and a `ReusedExchangeExec` for
+    * each reuse (its `child` is the exchange it reuses). The final plan
+    * exists once an action has run on `df` itself. */
+  protected def finalExchanges(df: DataFrame): Seq[SparkPlan] = {
+    val plan = df.queryExecution.executedPlan
+    plan match {
+      case a: AdaptiveSparkPlanExec => assert(a.isFinalPlan, "no action has run on this DataFrame")
+      case _ =>
+    }
+    exchanges(plan)
+  }
+
+  /** The exchanges under `plan`, itself included, across query stages. */
+  protected def exchanges(plan: SparkPlan): Seq[SparkPlan] =
+    AdaptivePlans.collect(plan) { case e @ (_: Exchange | _: ReusedExchangeExec) => e }
 
   override protected def afterAll(): Unit =
     try tempDirs.foreach { d =>

@@ -246,7 +246,7 @@ class GraftDataSourceSpec extends SparkSpec {
     val f = GraftStreamingWriterFactory(s"$dir/rp/tiles/zoom=0",
       org.apache.spark.sql.types.StructType.fromDDL(
         "col INT, row INT, tile ARRAY<DOUBLE>"),
-      "float64", temporal = false, GraftTable.confProps())
+      "float64", temporal = false, Catalog.confProps())
     val row = org.apache.spark.sql.catalyst.InternalRow(
       0, 0, org.apache.spark.sql.catalyst.util.ArrayData
         .toArrayData(Array.tabulate(16)(_.toDouble)))
@@ -270,7 +270,7 @@ class GraftDataSourceSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "col INT, row INT, tile ARRAY<DOUBLE>")
     val f = GraftStreamingWriterFactory(zoomDir, schema,
-      "float64", temporal = false, GraftTable.confProps())
+      "float64", temporal = false, Catalog.confProps())
     def row(c: Int) = org.apache.spark.sql.catalyst.InternalRow(
       c, 0, org.apache.spark.sql.catalyst.util.ArrayData
         .toArrayData(Array.tabulate(16)(_.toDouble)))

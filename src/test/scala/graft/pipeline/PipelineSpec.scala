@@ -85,11 +85,12 @@ class PipelineSpec extends SparkSpec {
     assert(ac.scan("").toSeq == Seq(0L, 0L, 0L, 0L))
   }
 
+  private val backoffChain = Seq(
+    (2L, "a b c a b d"),          // train (even id): N=6
+    (1L, "a b c x y z a b"))      // scored (odd id)
+
   test("stupidBackoff: trigram hit, bigram miss chain, unigram backoff") {
-    val d = Seq(
-      (2L, "a b c a b d"),          // train (even id): N=6
-      (1L, "a b c x y z a b")       // scored (odd id)
-    ).toDF("doc_id", "text")
+    val d = backoffChain.toDF("doc_id", "text")
     val out = TextAnalysis.stupidBackoff(d)
       .as[(Long, Long, Long)].head()
     // (a,b,c)=c3/c2=1/2; (b,c,x),(c,x,y),(x,y,z)=0 (x,y,z unseen);
@@ -176,18 +177,76 @@ class PipelineSpec extends SparkSpec {
     }.toSet
   }
 
+  private val backoffCorpora = Seq(
+    Seq((2L, "a a a a"), (4L, "a b"), (6L, "b"), (8L, "a b a b c"),
+      (1L, "a"), (3L, "a b"), (5L, "a b c"), (7L, "a a a a b"), (9L, "c c c b a")),
+    // odd ids only: nothing to train on, every trigram scores 0
+    Seq((1L, "a b c d"), (3L, "x y z"), (5L, "x y")))
+
+  private def backoff(c: Seq[(Long, String)]): Set[(Long, Long, Long)] =
+    TextAnalysis.stupidBackoff(c.toDF("doc_id", "text")).as[(Long, Long, Long)].collect().toSet
+
+  /** `body` with broadcast joins off: the sort-merge plan every lookup
+    * takes once the count table outgrows the broadcast threshold. */
+  private def sortMerge[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("stupidBackoff: short docs, repeated tokens and an empty train side match by hand") {
-    val corpora = Seq(
-      Seq((2L, "a a a a"), (4L, "a b"), (6L, "b"), (8L, "a b a b c"),
-        (1L, "a"), (3L, "a b"), (5L, "a b c"), (7L, "a a a a b"), (9L, "c c c b a")),
-      // odd ids only: nothing to train on, every trigram scores 0
-      Seq((1L, "a b c d"), (3L, "x y z"), (5L, "x y")))
-    for (c <- corpora) {
-      val got = TextAnalysis.stupidBackoff(c.toDF("doc_id", "text"))
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == backoffRef(c), c.toString)
+    for (c <- backoffCorpora) assert(backoff(c) == backoffRef(c), c.toString)
+    assert(backoffRef(backoffCorpora(1)) == Set((1L, 2L, 0L), (3L, 1L, 0L)))
+  }
+
+  test("stupidBackoff: the sort-merge lookup plan matches by hand") {
+    for (c <- backoffChain +: backoffCorpora)
+      assert(sortMerge(backoff(c)) == backoffRef(c), c.toString)
+    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1")
+  }
+
+  test("stupidBackoff: packed count keys never match across different token splits") {
+    // "a bc" / "ab c" / "abc" and "a b" / "ab" are different grams
+    // whose tokens concatenate alike
+    val c = Seq((2L, "a bc d"), (4L, "ab c e"), (6L, "abc"), (8L, "a b"),
+      (1L, "ab c d"), (3L, "a b c"), (5L, "x a bc"), (7L, "abc ab c"), (9L, "x y ab"))
+    val grams = c.flatMap { case (_, t) =>
+      val ts = t.split(" ").toSeq
+      (1 to 3).flatMap(n => ts.sliding(n).filter(_.size == n))
+    }.distinct
+    assert(grams.groupBy(_.mkString).values.exists(_.size > 1), "the corpus has no look-alike grams")
+    assert(backoff(c) == backoffRef(c))
+    assert(sortMerge(backoff(c)) == backoffRef(c))
+  }
+
+  test("stupidBackoff plan: one count-table shuffle and broadcast, reused by four lookups, no (doc_id, pos) exchange") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    val c = backoffCorpora.head
+    val out = TextAnalysis.stupidBackoff(c.toDF("doc_id", "text"))
+    val (rows, jobs, _) = traced(out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+    assert(rows == backoffRef(c))
+    assert(jobs <= 6, s"$jobs jobs")
+    val ex = finalExchanges(out)
+    // the count table is the one keyed (hashed) broadcast; N rides an
+    // identity broadcast
+    val tables = ex.collect {
+      case b: BroadcastExchangeExec if b.mode.isInstanceOf[HashedRelationBroadcastMode] => b
     }
-    assert(backoffRef(corpora(1)) == Set((1L, 2L, 0L), (3L, 1L, 0L)))
+    assert(tables.size == 1, ex.mkString("\n"))
+    assert(exchanges(tables.head).count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+      tables.head.treeString)
+    assert(ex.count {
+      case r: ReusedExchangeExec => r.child eq tables.head
+      case _ => false
+    } == 4, ex.mkString("\n"))
+    val plan = out.queryExecution.executedPlan
+    val keys = graft.AdaptivePlans.collect(plan) {
+      case a: BaseAggregateExec => a.groupingExpressions.flatMap(_.references.map(_.name)).toSet
+    }
+    assert(!keys.exists(_.contains("pos")), plan.toString)
   }
 
   test("pipelineReport: staged funnel counts by hand (gopher, quality, dedup)") {
