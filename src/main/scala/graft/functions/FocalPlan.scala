@@ -17,8 +17,8 @@ import graft.raster.{Focal, FocalOp, LayerMetadata, Neighborhood, RasterLayer}
   *   layer.focal(A).focal(B)
   *     analyzed:  FocalPlan(B, FocalPlan(A, child))
   *     optimized: FocalPlan(A then B, child)      (FuseFocalRule)
-  *     lowered:   ONE flatMap + groupByKey + mapGroups gather over
-  *                radius rA+rB                    (LowerFocalRule)
+  *     lowered:   ONE halo gather over radius rA+rB through the
+  *                one TileExchange shuffle        (LowerFocalRule)
   *
   * This generalizes the explicit focalChain API (SURVEY §8 candidate
   * 2): users compose focal ops naturally and still ship one halo

@@ -1,7 +1,5 @@
 package graft.raster
 
-import org.apache.spark.sql.functions.col
-
 /** Focal neighborhoods — reference geopyspark/geotrellis/neighborhood.py
   * (Square:42, Circle:69, Nesw:99, Wedge:126, Annulus:159). A
   * neighborhood is its set of (dx, dy) cell offsets (center included
@@ -178,28 +176,19 @@ object FocalOp {
   }
 }
 
-/** A clipped contribution of a source tile to a destination tile's
-  * padded window: covers dst-relative rect [x0, x0+w) x [y0, y0+h)
-  * (coords may be negative = halo). */
-private[raster] final case class TileContrib(
-    col: Int, row: Int, x0: Int, y0: Int, w: Int, h: Int, cells: Array[Double])
-
-private[raster] final case class TileRowOut(col: Int, row: Int, tile: Seq[Double])
-private[raster] final case class TileContribT(
-  col: Int, row: Int, instant: Long, x0: Int, y0: Int, w: Int, h: Int, cells: Array[Double])
-private[raster] final case class TileRowOutT(col: Int, row: Int, instant: Long, tile: Seq[Double])
-
 /** Distributed stencil via halo exchange (SURVEY.md §4): each tile
   * ships only the border strips its neighbors need (O(perimeter*r)
-  * bytes), one keyed shuffle assembles padded windows, the kernel runs
-  * per tile in a single pass. Reference semantics: layer.py focal()
-  * :1866 — with the documented deviation that output cells are exactly
-  * the input data cells (NoData centers stay NoData).
+  * bytes) through the one [[TileExchange]] shuffle, which assembles
+  * padded windows; the kernel runs per tile in a single pass.
+  * Reference semantics: layer.py focal() :1866 — with the documented
+  * deviation that output cells are exactly the input data cells
+  * (NoData centers stay NoData). Spacetime layers run per instant.
   */
-// Serializable: the gather closures call the shared clipContribs/
-// paintPadded helpers, so executor lambdas capture this (stateless)
-// singleton
+// Serializable: the exchange closures call the shared halo helper, so
+// executor lambdas capture this (stateless) singleton
 object Focal extends Serializable {
+  import TileExchange.Piece
+
   /** Halo gather emitting arbitrary PER-TILE PARTIAL rows instead of a
     * transformed tile: `fn(col, row, padded, paddedWidth)` sees the
     * same radius-`r` padded window [[gather]] builds (NaN beyond the
@@ -213,41 +202,25 @@ object Focal extends Serializable {
     * single-task row scan per 10^6-cell grid line at scale). */
   def gatherPartials[T: org.apache.spark.sql.Encoder](layer: RasterLayer, r: Int)(
       fn: (Int, Int, Array[Double], Int) => Iterator[T]): org.apache.spark.sql.Dataset[T] = {
-    val meta = layer.meta
-    require(!meta.temporal, "gatherPartials is spatial-only (temporal layers: filter/aggregate first)")
-    val tl = meta.layout.tileLayout
-    val (tc, tr) = (tl.tileCols, tl.tileRows)
-    val W = tc + 2 * r
-    val spark = layer.df.sparkSession
-    import spark.implicits._
-    layer.df.select(col("col"), col("row"), col("tile"))
-      .as[(Int, Int, Seq[Double])]
-      .flatMap { case (c0, r0, tileSeq) =>
-        clipContribs(tl, r, c0, r0, tileSeq).map {
-          case (dc, dr, x0, y0, w, h, cells) => TileContrib(dc, dr, x0, y0, w, h, cells)
-        }
-      }
-      .groupByKey(cb => (cb.col, cb.row))
-      .flatMapGroups { (key: (Int, Int), group: Iterator[TileContrib]) =>
-        val padded = paintPadded(tc, tr, r,
-          group.map(cb => (cb.x0, cb.y0, cb.w, cb.h, cb.cells)))
-        fn(key._1, key._2, padded, W)
-      }
+    require(!layer.meta.temporal, "gatherPartials is spatial-only (temporal layers: filter/aggregate first)")
+    val tl = layer.meta.layout.tileLayout
+    val (w, h) = (tl.tileCols + 2 * r, tl.tileRows + 2 * r)
+    TileExchange.exchange(layer)(halo(tl, r)) { case ((c, row, _), pieces) =>
+      fn(c, row, TileExchange.paint(w, h, pieces), w)
+    }
   }
 
-  /** Per-source-tile clipped contributions to each neighbor's padded
-    * window: (dstCol, dstRow, x0, y0, w, h, cells) — shared by
-    * [[gather]] and [[gatherPartials]]. */
-  private def clipContribs(tl: graft.core.TileLayout, r: Int,
-                           c0: Int, r0: Int, tileSeq: Seq[Double])
-      : Seq[(Int, Int, Int, Int, Int, Int, Array[Double])] = {
+  /** Halo ship: the clipped strips of tile (c0, r0) that each
+    * neighbor's radius-`r` padded window needs, as pieces in that
+    * window's frame (the tile's own cells start at (r, r)). */
+  private def halo(tl: graft.core.TileLayout, r: Int)(
+      c0: Int, r0: Int, tile: Array[Double]): Iterator[(Int, Int, Piece)] = {
     val (tc, tr) = (tl.tileCols, tl.tileRows)
     val (lc, lr) = (tl.layoutCols, tl.layoutRows)
     val ringC = (r + tc - 1) / tc
     val ringR = (r + tr - 1) / tr
-    val tile = tileSeq.toArray
     for {
-      dc <- -ringC to ringC
+      dc <- (-ringC to ringC).iterator
       dr <- -ringR to ringR
       dst = (c0 + dc, r0 + dr)
       if dst._1 >= 0 && dst._1 < lc && dst._2 >= 0 && dst._2 < lr
@@ -263,35 +236,11 @@ object Focal extends Serializable {
       val cells = new Array[Double](w * h)
       var j = 0
       while (j < h) {
-        var i = 0
-        while (i < w) {
-          cells(j * w + i) = tile((jMin + j) * tc + (iMin + i))
-          i += 1
-        }
+        System.arraycopy(tile, (jMin + j) * tc + iMin, cells, j * w, w)
         j += 1
       }
-      (dst._1, dst._2, sx + iMin, sy + jMin, w, h, cells)
+      (dst._1, dst._2, Piece(sx + iMin + r, sy + jMin + r, w, cells))
     }
-  }
-
-  /** Assemble a destination tile's padded window from its clipped
-    * contributions (NaN everywhere nothing painted). */
-  private def paintPadded(tc: Int, tr: Int, r: Int,
-                          cbs: Iterator[(Int, Int, Int, Int, Array[Double])]): Array[Double] = {
-    val W = tc + 2 * r; val H = tr + 2 * r
-    val padded = Array.fill(W * H)(Double.NaN)
-    cbs.foreach { case (x0, y0, w, h, cells) =>
-      var j = 0
-      while (j < h) {
-        var i = 0
-        while (i < w) {
-          padded((y0 + j + r) * W + (x0 + i + r)) = cells(j * w + i)
-          i += 1
-        }
-        j += 1
-      }
-    }
-    padded
   }
 
   /** Shared halo gather: ships the strips each neighbor needs, then
@@ -299,50 +248,10 @@ object Focal extends Serializable {
     * radius may exceed the tile size (multi-ring halo). */
   def gather(layer: RasterLayer, r: Int)(
       kernelFn: (Array[Double], Int) => Array[Double]): RasterLayer = {
-    val meta = layer.meta
-    val tl = meta.layout.tileLayout
-    val (tc, tr) = (tl.tileCols, tl.tileRows)
-
-    val spark = layer.df.sparkSession
-    import spark.implicits._
-
-    def contribsOf(c0: Int, r0: Int, tileSeq: Seq[Double]) =
-      clipContribs(tl, r, c0, r0, tileSeq)
-    def paint(cbs: Iterator[(Int, Int, Int, Int, Array[Double])]): Array[Double] =
-      paintPadded(tc, tr, r, cbs)
-
-    val W = tc + 2 * r
-    if (meta.temporal) {
-      // space-time focal (reference TemporalTiledRasterLayer focal):
-      // instants never mix — the halo exchange keys on
-      // (instant, col, row), one shuffle exactly as the spatial path
-      val out = layer.df.select(col("col"), col("row"), col("instant"), col("tile"))
-        .as[(Int, Int, Long, Seq[Double])]
-        .flatMap { case (c0, r0, t, tileSeq) =>
-          contribsOf(c0, r0, tileSeq).map { case (dc, dr, x0, y0, w, h, cells) =>
-            TileContribT(dc, dr, t, x0, y0, w, h, cells)
-          }
-        }
-        .groupByKey(cb => (cb.instant, cb.col, cb.row))
-        .mapGroups { (key: (Long, Int, Int), group: Iterator[TileContribT]) =>
-          val padded = paint(group.map(cb => (cb.x0, cb.y0, cb.w, cb.h, cb.cells)))
-          TileRowOutT(key._2, key._3, key._1, kernelFn(padded, W).toSeq)
-        }
-      layer.copy(df = out.toDF())
-    } else {
-      val out = layer.df.select(col("col"), col("row"), col("tile"))
-        .as[(Int, Int, Seq[Double])]
-        .flatMap { case (c0, r0, tileSeq) =>
-          contribsOf(c0, r0, tileSeq).map { case (dc, dr, x0, y0, w, h, cells) =>
-            TileContrib(dc, dr, x0, y0, w, h, cells)
-          }
-        }
-        .groupByKey(cb => (cb.col, cb.row))
-        .mapGroups { (key: (Int, Int), group: Iterator[TileContrib]) =>
-          val padded = paint(group.map(cb => (cb.x0, cb.y0, cb.w, cb.h, cb.cells)))
-          TileRowOut(key._1, key._2, kernelFn(padded, W).toSeq)
-        }
-      layer.copy(df = out.toDF())
+    val tl = layer.meta.layout.tileLayout
+    val (w, h) = (tl.tileCols + 2 * r, tl.tileRows + 2 * r)
+    TileExchange.regrid(layer, layer.meta)(halo(tl, r)) { (_, _, pieces) =>
+      kernelFn(TileExchange.paint(w, h, pieces), w)
     }
   }
 
@@ -519,44 +428,15 @@ object Focal extends Serializable {
     val meta = layer.meta
     val tl = meta.layout.tileLayout
     val (tc, tr) = (tl.tileCols, tl.tileRows)
-    val (lc, lr) = (tl.layoutCols, tl.layoutRows)
     val cw = meta.layout.cellWidth; val ch = meta.layout.cellHeight
-    val r = 1
-    val spark = layer.df.sparkSession
-    import spark.implicits._
-
-    val tiles = layer.df.select(col("col"), col("row"), col("tile"))
-      .as[(Int, Int, Seq[Double])]
-    val contribs = tiles.flatMap { case (c0, r0, tileSeq) =>
-      val tile = tileSeq.toArray
-      for {
-        dc <- -1 to 1; dr <- -1 to 1
-        dst = (c0 + dc, r0 + dr)
-        if dst._1 >= 0 && dst._1 < lc && dst._2 >= 0 && dst._2 < lr
-      } yield {
-        val sx = -dc * tc; val sy = -dr * tr
-        val iMin = math.max(0, -r - sx); val iMax = math.min(tc, tc + r - sx)
-        val jMin = math.max(0, -r - sy); val jMax = math.min(tr, tr + r - sy)
-        val w = iMax - iMin; val h = jMax - jMin
-        val cells = new Array[Double](math.max(0, w * h))
-        var j = 0
-        while (j < h) { var i = 0; while (i < w) { cells(j * w + i) = tile((jMin + j) * tc + (iMin + i)); i += 1 }; j += 1 }
-        TileContrib(dst._1, dst._2, sx + iMin, sy + jMin, w, h, cells)
-      }
-    }
+    val W = tc + 2; val H = tr + 2
     // tile-row -> center latitude inputs for the per-tile z-factor
     // (world ymax and tile world height are plain doubles so the
     // closure ships no layout object)
     val ymax = meta.layout.extent.ymax
     val tileWorldH = ch * tr
-    val out = contribs.groupByKey(t => (t.col, t.row)).mapGroups { (key: (Int, Int), group: Iterator[TileContrib]) =>
-      val (c0, r0) = key
-      val W = tc + 2; val H = tr + 2
-      val padded = Array.fill(W * H)(Double.NaN)
-      group.foreach { cb =>
-        var j = 0
-        while (j < cb.h) { var i = 0; while (i < cb.w) { padded((cb.y0 + j + 1) * W + (cb.x0 + i + 1)) = cb.cells(j * cb.w + i); i += 1 }; j += 1 }
-      }
+    TileExchange.regrid(layer, meta)(halo(tl, 1)) { (_, r0, pieces) =>
+      val padded = TileExchange.paint(W, H, pieces)
       // reference contract: ONE z-factor per tile, from the tile
       // extent's CENTER latitude (ZFactorCalculator.deriveZFactor);
       // heat_load reads the same center latitude directly
@@ -775,8 +655,7 @@ object Focal extends Serializable {
         }
         cy += 1
       }
-      TileRowOut(c0, r0, outTile.toSeq)
+      outTile
     }
-    layer.copy(df = out.toDF())
   }
 }

@@ -381,25 +381,16 @@ object HistogramOps {
 
   /** Apply a broadcast value->value table per tile — the shared tail
     * of [[equalize]] and [[matchHistogram]]. Temporal layers keep
-    * their instant column: silently projecting it away would produce
-    * a corrupt layer whose metadata still claims temporal=true. */
+    * their instant column (the [[TileExchange]] instant rule):
+    * projecting it away would produce a corrupt layer whose metadata
+    * still claims temporal=true. */
   private def remapTiles(layer: RasterLayer, table: Map[Double, Double]): RasterLayer = {
     val spark = layer.spark
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(table)
-    def f(t: Seq[Double]): Seq[Double] = t.map(v => if (v.isNaN) v else bc.value(v))
-    val out =
-      if (layer.meta.temporal)
-        layer.df.select(col("col"), col("row"), col("instant"), col("tile"))
-          .as[(Int, Int, Long, Seq[Double])]
-          .map { case (c, r, i, t) => (c, r, i, f(t)) }
-          .toDF("col", "row", "instant", "tile")
-      else
-        layer.df.select(col("col"), col("row"), col("tile"))
-          .as[(Int, Int, Seq[Double])]
-          .map { case (c, r, t) => (c, r, f(t)) }
-          .toDF("col", "row", "tile")
-    layer.copy(df = out)
+    TileExchange.layerOf(TileExchange.keyed(layer).map { case (c, r, t, tile) =>
+      (c, r, t, tile.map(v => if (v.isNaN) v else bc.value(v)))
+    }, layer.meta)
   }
 
   /** Histogram median — reference Histogram.median (histogram.py:96;

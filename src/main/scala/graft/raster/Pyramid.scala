@@ -1,15 +1,14 @@
 package graft.raster
 
-import org.apache.spark.sql.functions.col
-
 import graft.core.{LayoutDefinition, TileLayout}
 
 /** Pyramiding: zoom z -> z-1 by 2x2 block resample, tile-aligned.
   *
   * Reference: layer.py pyramid() (:1832) with ResampleMethod
   * (constants.py:123). Each child tile downsamples locally (narrow),
-  * then 4 children shuffle-assemble into their parent tile — one keyed
-  * shuffle per level, O(tiles) rows, the standard tile-pyramid shape.
+  * then 4 children assemble into their parent tile in the one
+  * [[TileExchange]] shuffle per level, O(tiles) rows, the standard
+  * tile-pyramid shape. Spacetime layers pyramid per instant.
   */
 object Pyramid {
   /** NaN-skipping 2x2 block resample of one tile (tc x tr -> tc/2 x tr/2). */
@@ -51,64 +50,25 @@ object Pyramid {
     out
   }
 
-  /** One pyramid level up: halves the layout, keeps tile size. */
+  /** One pyramid level up: halves the layout, keeps tile size. Each
+    * child tile downsamples to a quadrant of its parent and ships
+    * there through the one [[TileExchange]] shuffle. */
   def levelUp(layer: RasterLayer, method: String = "Average"): RasterLayer = {
     val meta = layer.meta
     val tl = meta.layout.tileLayout
     val (tc, tr) = (tl.tileCols, tl.tileRows)
-    require(tc % 2 == 0 && tr % 2 == 0)
-    val spark = layer.df.sparkSession
-    import spark.implicits._
-
+    val (lc, lr) = (tl.layoutCols, tl.layoutRows)
+    require(tc % 2 == 0 && tr % 2 == 0,
+      s"levelUp splits each tile into 2x2 blocks: tile size ${tc}x$tr is not even")
+    require(lc % 2 == 0 && lr % 2 == 0,
+      s"levelUp halves the layout: ${lc}x$lr tiles cannot halve (the parent cell " +
+        "size must be twice the child's over the same extent)")
     val (hc, hr) = (tc / 2, tr / 2)
-    def assemble(group: Iterator[(Int, Int, Seq[Double])]): Seq[Double] = {
-      val parent = Array.fill(tc * tr)(Double.NaN)
-      group.foreach { case (qx, qy, half) =>
-        // iterator in row order, not apply: the deserialized Seq is a
-        // List (O(n) apply)
-        val it = half.iterator
-        var j = 0
-        while (j < hr && it.hasNext) {
-          var i = 0
-          while (i < hc && it.hasNext) {
-            parent((qy * hr + j) * tc + (qx * hc + i)) = it.next()
-            i += 1
-          }
-          j += 1
-        }
-      }
-      parent.toSeq
-    }
-
-    val newLayout = LayoutDefinition(meta.layout.extent,
-      TileLayout(math.max(1, tl.layoutCols / 2), math.max(1, tl.layoutRows / 2), tc, tr))
-
-    if (meta.temporal) {
-      // temporal pyramid (reference Pyramid over TemporalTiledRaster-
-      // Layer): each instant downsamples independently
-      val out = layer.df.select(col("col"), col("row"), col("instant"), col("tile"))
-        .as[(Int, Int, Long, Seq[Double])]
-        .map { case (c, r, t, tile) =>
-          (c / 2, r / 2, t, c % 2, r % 2, downsample(tile.toArray, tc, tr, method).toSeq)
-        }
-        .groupByKey(q => (q._1, q._2, q._3))
-        .mapGroups { (key: (Int, Int, Long), group: Iterator[(Int, Int, Long, Int, Int, Seq[Double])]) =>
-          TileRowOutT(key._1, key._2, key._3,
-            assemble(group.map(q => (q._4, q._5, q._6))))
-        }
-      new RasterLayer(out.toDF(), meta.copy(layout = newLayout))
-    } else {
-      val out = layer.df.select(col("col"), col("row"), col("tile"))
-        .as[(Int, Int, Seq[Double])]
-        .map { case (c, r, tile) =>
-          (c / 2, r / 2, c % 2, r % 2, downsample(tile.toArray, tc, tr, method).toSeq)
-        }
-        .groupByKey(q => (q._1, q._2))
-        .mapGroups { (key: (Int, Int), group: Iterator[(Int, Int, Int, Int, Seq[Double])]) =>
-          TileRowOut(key._1, key._2, assemble(group.map(q => (q._3, q._4, q._5))))
-        }
-      new RasterLayer(out.toDF(), meta.copy(layout = newLayout))
-    }
+    val newLayout = LayoutDefinition(meta.layout.extent, TileLayout(lc / 2, lr / 2, tc, tr))
+    TileExchange.regrid(layer, meta.copy(layout = newLayout)) { (c, r, tile) =>
+      Iterator((c / 2, r / 2,
+        TileExchange.Piece(c % 2 * hc, r % 2 * hr, hc, downsample(tile, tc, tr, method))))
+    } { (_, _, quadrants) => TileExchange.paint(tc, tr, quadrants) }
   }
 
   /** Write every level of a pyramid to the catalog under one name —

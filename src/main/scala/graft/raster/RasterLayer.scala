@@ -671,16 +671,13 @@ final class RasterLayer(val df: DataFrame, val meta: LayerMetadata) {
       "retile keeps the cell size (use resample to change it)")
     val ntc = newLayout.tileLayout.tileCols
     val ntr = newLayout.tileLayout.tileRows
-    val sess = spark
-    import sess.implicits._
     val outMeta = meta.copy(layout = newLayout)
+    val (oldTc, oldTr) = (tc, tr)
     if (tc == ntc && tr == ntr) this
     else if (tc % ntc == 0 && tr % ntr == 0) {
       // split: every input tile yields kx*ky smaller tiles, narrow
       val kx = tc / ntc; val ky = tr / ntr
-      val (oldTc, oldTr) = (tc, tr)
-      def split(c: Int, r: Int, tileSeq: Seq[Double]): Seq[(Int, Int, Seq[Double])] = {
-        val tile = tileSeq.toArray
+      def split(c: Int, r: Int, t: Long, tile: Array[Double]): Seq[(Int, Int, Long, Array[Double])] =
         for { sr <- 0 until ky; sc <- 0 until kx
               sub = {
                 val a = new Array[Double](ntc * ntr)
@@ -696,57 +693,20 @@ final class RasterLayer(val df: DataFrame, val meta: LayerMetadata) {
                 a
               }
               if sub.exists(v => !v.isNaN) } yield
-          (c * kx + sc, r * ky + sr, sub.toSeq)
-      }
-      val out =
-        if (meta.temporal)
-          df.select(col("col"), col("row"), col("instant"), col("tile"))
-            .as[(Int, Int, Long, Seq[Double])]
-            .flatMap { case (c, r, t, tile) => split(c, r, tile).map(s => (s._1, s._2, t, s._3)) }
-            .toDF("col", "row", "instant", "tile")
-        else
-          df.select(col("col"), col("row"), col("tile")).as[(Int, Int, Seq[Double])]
-            .flatMap { case (c, r, tile) => split(c, r, tile) }
-            .toDF("col", "row", "tile")
-      copy(df = out, meta = outMeta)
+          (c * kx + sc, r * ky + sr, t, sub)
+      val sess = spark
+      import sess.implicits._
+      TileExchange.layerOf(TileExchange.keyed(this).flatMap { case (c, r, t, tile) =>
+        split(c, r, t, tile)
+      }, outMeta)
     } else if (ntc % tc == 0 && ntr % tr == 0) {
-      // assemble: kx*ky input tiles build one output tile; the shuffle
-      // carries whole tiles keyed by the new (col, row)
+      // assemble: kx*ky input tiles build one output tile in the one
+      // TileExchange shuffle, which carries whole tiles keyed by the
+      // new (col, row)
       val kx = ntc / tc; val ky = ntr / tr
-      val (oldTc, oldTr) = (tc, tr)
-      def place(dst: Array[Double], sc: Int, sr: Int, tileSeq: Seq[Double]): Unit = {
-        val tile = tileSeq.toArray
-        var j = 0
-        while (j < oldTr) {
-          var i = 0
-          while (i < oldTc) {
-            dst((sr * oldTr + j) * ntc + (sc * oldTc + i)) = tile(j * oldTc + i)
-            i += 1
-          }
-          j += 1
-        }
-      }
-      val out =
-        if (meta.temporal)
-          df.select(col("col"), col("row"), col("instant"), col("tile"))
-            .as[(Int, Int, Long, Seq[Double])]
-            .groupByKey { case (c, r, t, _) => (c / kx, r / ky, t) }
-            .mapGroups { (key: (Int, Int, Long), it: Iterator[(Int, Int, Long, Seq[Double])]) =>
-              val dst = Array.fill(ntc * ntr)(Double.NaN)
-              it.foreach { case (c, r, _, tile) => place(dst, c % kx, r % ky, tile) }
-              (key._1, key._2, key._3, dst.toSeq)
-            }
-            .toDF("col", "row", "instant", "tile")
-        else
-          df.select(col("col"), col("row"), col("tile")).as[(Int, Int, Seq[Double])]
-            .groupByKey { case (c, r, _) => (c / kx, r / ky) }
-            .mapGroups { (key: (Int, Int), it: Iterator[(Int, Int, Seq[Double])]) =>
-              val dst = Array.fill(ntc * ntr)(Double.NaN)
-              it.foreach { case (c, r, tile) => place(dst, c % kx, r % ky, tile) }
-              (key._1, key._2, dst.toSeq)
-            }
-            .toDF("col", "row", "tile")
-      copy(df = out, meta = outMeta)
+      TileExchange.regrid(this, outMeta) { (c, r, tile) =>
+        Iterator((c / kx, r / ky, TileExchange.Piece(c % kx * oldTc, r % ky * oldTr, oldTc, tile)))
+      } { (_, _, pieces) => TileExchange.paint(ntc, ntr, pieces) }
     } else if (meta.temporal)
       RasterLayer.fromCellsTemporal(toCells, newLayout, CellOp.Last)
     else

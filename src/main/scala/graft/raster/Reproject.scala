@@ -14,7 +14,9 @@ import graft.core.{CRS, Extent, LayoutDefinition}
   * transform is pure codegen'd column math, and sampling is ONE keyed
   * join against the source cells. At production scale the join becomes
   * a tile-wise gather (each target tile maps to a bounded source-tile
-  * rect); same math, same single shuffle.
+  * rect) through the one [[TileExchange]] shuffle that also carries
+  * the focal halos and the tiled resamples; same math, same single
+  * shuffle, each instant of a spacetime layer on its own.
   */
 object Reproject {
 
@@ -53,9 +55,10 @@ object Reproject {
   /** Tile-wise variant of [[latLngGridToWebMercator]] — the scale
     * path: each source tile forward-projects its corner window to find
     * the bounded set of target tiles it can feed (CRS transforms are
-    * monotone per axis), ships itself there in ONE keyed shuffle, and
-    * each target tile inverse-samples locally. Cell math identical to
-    * the join variant, so the same oracle covers both.
+    * monotone per axis), ships itself there in the ONE keyed
+    * [[TileExchange]] shuffle, and each target tile inverse-samples
+    * locally. Cell math identical to the join variant, so the same
+    * oracle covers both.
     *
     * `method` selects the warp resampling kernel — the reference's
     * ResampleMethod family (layer.py:876; constants.py:123-135):
@@ -82,8 +85,6 @@ object Reproject {
     require(m == "NearestNeighbor" || m == "Bilinear" ||
       m == "CubicConvolution" || m == "CubicSpline" || Footprint(m),
       s"unsupported resample method '$m'")
-    val spark = layer.spark
-    import spark.implicits._
     val tl = layer.meta.layout.tileLayout
     val (tc, tr) = (tl.tileCols, tl.tileRows)
     val n = tl.totalCols.toInt
@@ -127,12 +128,8 @@ object Reproject {
       for (dc <- txLo to txHi; dr <- tyLo to tyHi) yield (dc, dr)
     }
 
-    def compute(dc: Int, dr: Int, src: Map[(Int, Int), Array[Double]]): Seq[Double] = {
+    def compute(dc: Int, dr: Int, sv: TileExchange.Cells): Array[Double] = {
       val outTile = Array.fill(dstTile * dstTile)(Double.NaN)
-      def sv(xx: Long, yy: Long): Double =
-        src.get(((xx / tc).toInt, (yy / tr).toInt))
-          .map(t => t(((yy % tr) * tc + (xx % tc)).toInt))
-          .getOrElse(Double.NaN)
       var j = 0
       while (j < dstTile) {
         var i = 0
@@ -252,41 +249,15 @@ object Reproject {
         }
         j += 1
       }
-      outTile.toSeq
+      outTile
     }
 
     val outMeta = LayerMetadata(LayoutDefinition(Extent(mxMin, myMin, mxMax, myMax),
       TileLayout(dstLc, dstLc, dstTile, dstTile)), temporal = layer.meta.temporal)
 
-    if (layer.meta.temporal) {
-      // spacetime reproject (TemporalTiledRasterLayer.reproject): each
-      // instant reprojects independently — instant rides the shuffle key
-      val out = layer.df.select(col("col"), col("row"), col("instant"), col("tile"))
-        .as[(Int, Int, Long, Seq[Double])]
-        .flatMap { case (c, r, t, tile) =>
-          dstRect(c, r).map { case (dc, dr) => (dc, dr, t, c, r, tile) }
-        }
-        .groupByKey(q => (q._1, q._2, q._3))
-        .mapGroups { (key: (Int, Int, Long), group: Iterator[(Int, Int, Long, Int, Int, Seq[Double])]) =>
-          // tiles to Array ONCE per group: the deserialized Seq has
-          // O(n) apply, which would turn every sample into a linear scan
-          TileRowOutT(key._1, key._2, key._3,
-            compute(key._1, key._2, group.map(q => (q._4, q._5) -> q._6.toArray).toMap))
-        }
-      new RasterLayer(out.toDF(), outMeta)
-    } else {
-      val out = layer.df.select(col("col"), col("row"), col("tile"))
-        .as[(Int, Int, Seq[Double])]
-        .flatMap { case (c, r, tile) =>
-          dstRect(c, r).map { case (dc, dr) => (dc, dr, c, r, tile) }
-        }
-        .groupByKey(q => (q._1, q._2))
-        .mapGroups { (key: (Int, Int), group: Iterator[(Int, Int, Int, Int, Seq[Double])]) =>
-          TileRowOut(key._1, key._2,
-            compute(key._1, key._2, group.map(q => (q._3, q._4) -> q._5.toArray).toMap))
-        }
-      new RasterLayer(out.toDF(), outMeta)
-    }
+    // spacetime reproject (TemporalTiledRasterLayer.reproject): each
+    // instant reprojects independently in the one exchange
+    TileExchange.sample(layer, outMeta, n, n)((c, r) => dstRect(c, r).iterator)(compute)
   }
 
   /** General tiled reproject between ARBITRARY CRSs (reference
@@ -315,8 +286,6 @@ object Reproject {
       s"reprojectTiled supports NearestNeighbor/Bilinear (got '$method'); " +
         "the full kernel family rides the web-mercator warp")
     val bilinear = method == "Bilinear"
-    val spark = layer.spark
-    import spark.implicits._
     val sl = layer.meta.layout; val stl = sl.tileLayout
     val (tc, tr) = (stl.tileCols, stl.tileRows)
     val dtl = dstLayout.tileLayout
@@ -347,12 +316,8 @@ object Reproject {
       for (dc <- txLo to txHi; dr <- tyLo to tyHi) yield (dc, dr)
     }
 
-    def compute(dc: Int, dr: Int, src: Map[(Int, Int), Array[Double]]): Seq[Double] = {
+    def compute(dc: Int, dr: Int, sv: TileExchange.Cells): Array[Double] = {
       val outTile = Array.fill(dtc * dtr)(Double.NaN)
-      def sv(xx: Long, yy: Long): Double =
-        src.get(((xx / tc).toInt, (yy / tr).toInt))
-          .map(t => t(((yy % tr) * tc + (xx % tc)).toInt))
-          .getOrElse(Double.NaN)
       var j = 0
       while (j < dtr) {
         var i = 0
@@ -390,35 +355,12 @@ object Reproject {
         }
         j += 1
       }
-      outTile.toSeq
+      outTile
     }
 
     val outMeta = LayerMetadata(dstLayout, temporal = layer.meta.temporal)
-    if (layer.meta.temporal) {
-      val out = layer.df.select(col("col"), col("row"), col("instant"), col("tile"))
-        .as[(Int, Int, Long, Seq[Double])]
-        .flatMap { case (c, r, t, tile) =>
-          dstRect(c, r).map { case (dc, dr) => (dc, dr, t, c, r, tile) }
-        }
-        .groupByKey(q => (q._1, q._2, q._3))
-        .mapGroups { (key: (Int, Int, Long), group: Iterator[(Int, Int, Long, Int, Int, Seq[Double])]) =>
-          TileRowOutT(key._1, key._2, key._3,
-            compute(key._1, key._2, group.map(q => (q._4, q._5) -> q._6.toArray).toMap))
-        }
-      new RasterLayer(out.toDF(), outMeta)
-    } else {
-      val out = layer.df.select(col("col"), col("row"), col("tile"))
-        .as[(Int, Int, Seq[Double])]
-        .flatMap { case (c, r, tile) =>
-          dstRect(c, r).map { case (dc, dr) => (dc, dr, c, r, tile) }
-        }
-        .groupByKey(q => (q._1, q._2))
-        .mapGroups { (key: (Int, Int), group: Iterator[(Int, Int, Int, Int, Seq[Double])]) =>
-          TileRowOut(key._1, key._2,
-            compute(key._1, key._2, group.map(q => (q._3, q._4) -> q._5.toArray).toMap))
-        }
-      new RasterLayer(out.toDF(), outMeta)
-    }
+    TileExchange.sample(layer, outMeta, stl.totalCols, stl.totalRows)(
+      (c, r) => dstRect(c, r).iterator)(compute)
   }
 
   /** Name-based variant — the reference's `reproject(target_crs)`

@@ -14,8 +14,9 @@ import graft.core.{Extent, LayoutDefinition, TileLayout}
   * Verification-scale shape: the 4 corner gathers are cell-level joins
   * (exact, oracle-matching). At production scale the same gather runs
   * tile-wise: a target tile maps to a bounded source-tile rect
-  * (ceil(scale)+1 tiles square), shipped with the focal-style halo
-  * machinery — same math, one keyed shuffle.
+  * (ceil(scale)+1 tiles square), shipped through the one
+  * [[TileExchange]] shuffle that also carries the focal halos — same
+  * math, one keyed shuffle.
   */
 object Resample {
 
@@ -98,8 +99,6 @@ object Resample {
     * NoData unless every tap in the (2*support)^2 window exists. */
   def kernelTiled(layer: RasterLayer, srcN: Int, dstN: Int, kernel: Kernel,
                   dstTile: Int = 64): RasterLayer = {
-    val tl = layer.meta.layout.tileLayout
-    val (tc, tr) = (tl.tileCols, tl.tileRows)
     require(dstN % dstTile == 0, "dst grid must tile evenly")
     val dstLc = dstN / dstTile
     val sup = kernel.support
@@ -113,14 +112,7 @@ object Resample {
       val dMax = math.min(dstLc - 1, hi / dstTile)
       dMin to dMax
     }
-    def compute(dc: Int, dr: Int, src: Map[(Int, Int), Array[Double]]): Seq[Double] = {
-      def cell(x: Long, y: Long): Double = {
-        if (x < 0 || y < 0 || x >= srcN || y >= srcN) Double.NaN
-        else src.get(((x / tc).toInt, (y / tr).toInt)) match {
-          case Some(t) => t(((y % tr) * tc + (x % tc)).toInt)
-          case None    => Double.NaN
-        }
-      }
+    def compute(dc: Int, dr: Int, cell: TileExchange.Cells): Array[Double] = {
       val outTile = new Array[Double](dstTile * dstTile)
       var j = 0
       while (j < dstTile) {
@@ -152,12 +144,10 @@ object Resample {
         }
         j += 1
       }
-      outTile.toSeq
+      outTile
     }
 
-    gatherResample(layer, tc, tr, dstRange, compute,
-      LayerMetadata(LayoutDefinition(Extent(0, 0, dstN, dstN),
-        TileLayout(dstLc, dstLc, dstTile, dstTile)), temporal = layer.meta.temporal))
+    tiled(layer, srcN, dstN, dstTile, dstRange)(compute)
   }
 
   /** Area-weighted average resample for FRACTIONAL ratios (gdalwarp
@@ -172,12 +162,10 @@ object Resample {
     * rule); a target cell covering only NoData emits NoData.
     *
     * Scale shape: the same single-shuffle tile gather as the kernel
-    * resamples ([[gatherResample]]); each source tile ships to the
+    * resamples ([[tiled]]); each source tile ships to the
     * bounded set of target tiles its span overlaps. */
   def areaAverageTiled(layer: RasterLayer, srcN: Int, dstN: Int,
                        dstTile: Int = 64): RasterLayer = {
-    val tl = layer.meta.layout.tileLayout
-    val (tc, tr) = (tl.tileCols, tl.tileRows)
     require(dstN % dstTile == 0, "dst grid must tile evenly")
     val dstLc = dstN / dstTile
 
@@ -189,13 +177,7 @@ object Resample {
       math.max(0, txLo / dstTile) to math.min(dstLc - 1, txHi / dstTile)
     }
 
-    def compute(dc: Int, dr: Int, src: Map[(Int, Int), Array[Double]]): Seq[Double] = {
-      def cell(x: Long, y: Long): Double =
-        if (x < 0 || y < 0 || x >= srcN || y >= srcN) Double.NaN
-        else src.get(((x / tc).toInt, (y / tr).toInt)) match {
-          case Some(t) => t(((y % tr) * tc + (x % tc)).toInt)
-          case None    => Double.NaN
-        }
+    def compute(dc: Int, dr: Int, cell: TileExchange.Cells): Array[Double] = {
       val outTile = Array.fill(dstTile * dstTile)(Double.NaN)
       var j = 0
       while (j < dstTile) {
@@ -227,56 +209,27 @@ object Resample {
         }
         j += 1
       }
-      outTile.toSeq
+      outTile
     }
 
-    gatherResample(layer, tc, tr, dstRange, compute,
-      LayerMetadata(LayoutDefinition(Extent(0, 0, dstN, dstN),
-        TileLayout(dstLc, dstLc, dstTile, dstTile)), temporal = layer.meta.temporal))
+    tiled(layer, srcN, dstN, dstTile, dstRange)(compute)
   }
 
-  /** Shared gather harness for the tile-wise resample family: source
-    * tiles flatMap to the bounded target-tile sets `dstRange` gives,
-    * ONE groupByKey assembles each target tile's source map, `compute`
-    * runs locally. Temporal layers thread `instant` through the
-    * shuffle key — same pattern as Focal's spacetime halo — so
-    * instants never mix and each (tile, instant) is an independent
-    * unit of work. */
-  private def gatherResample(layer: RasterLayer, tc: Int, tr: Int,
-                             dstRange: (Int, Int) => Range,
-                             compute: (Int, Int, Map[(Int, Int), Array[Double]]) => Seq[Double],
-                             outMeta: LayerMetadata): RasterLayer = {
-    val spark = layer.spark
-    import spark.implicits._
-    if (layer.meta.temporal) {
-      val out = layer.df.select(col("col"), col("row"), col("instant"), col("tile"))
-        .as[(Int, Int, Long, Seq[Double])]
-        .flatMap { case (c, r, t, tile) =>
-          for (dc <- dstRange(c, tc); dr <- dstRange(r, tr))
-            yield (dc, dr, t, c, r, tile)
-        }
-        .groupByKey(q => (q._1, q._2, q._3))
-        .mapGroups { (key: (Int, Int, Long), group: Iterator[(Int, Int, Long, Int, Int, Seq[Double])]) =>
-          // tiles to Array ONCE per group: the deserialized Seq has
-          // O(n) apply, which would turn every tap into a linear scan
-          TileRowOutT(key._1, key._2, key._3,
-            compute(key._1, key._2, group.map(q => (q._4, q._5) -> q._6.toArray).toMap))
-        }
-      new RasterLayer(out.toDF(), outMeta)
-    } else {
-      val out = layer.df.select(col("col"), col("row"), col("tile"))
-        .as[(Int, Int, Seq[Double])]
-        .flatMap { case (c, r, tile) =>
-          for (dc <- dstRange(c, tc); dr <- dstRange(r, tr))
-            yield (dc, dr, c, r, tile)
-        }
-        .groupByKey(q => (q._1, q._2))
-        .mapGroups { (key: (Int, Int), group: Iterator[(Int, Int, Int, Int, Seq[Double])]) =>
-          TileRowOut(key._1, key._2,
-            compute(key._1, key._2, group.map(q => (q._3, q._4) -> q._5.toArray).toMap))
-        }
-      new RasterLayer(out.toDF(), outMeta)
-    }
+  /** The tile-wise resample family's regrid: each source tile ships
+    * whole to the bounded target-tile set `dstRange` gives, through
+    * the one [[TileExchange]] shuffle (keyed by instant too, so
+    * instants never mix), and `compute` samples the received
+    * srcN x srcN source grid locally. */
+  private def tiled(layer: RasterLayer, srcN: Int, dstN: Int, dstTile: Int,
+                    dstRange: (Int, Int) => Range)(
+                    compute: (Int, Int, TileExchange.Cells) => Array[Double]): RasterLayer = {
+    val tl = layer.meta.layout.tileLayout
+    val dstLc = dstN / dstTile
+    val outMeta = LayerMetadata(LayoutDefinition(Extent(0, 0, dstN, dstN),
+      TileLayout(dstLc, dstLc, dstTile, dstTile)), temporal = layer.meta.temporal)
+    TileExchange.sample(layer, outMeta, srcN, srcN) { (c, r) =>
+      for (dc <- dstRange(c, tl.tileCols).iterator; dr <- dstRange(r, tl.tileRows)) yield (dc, dr)
+    }(compute)
   }
 
   /** Aggregate (downsampling) resample — reference ResampleMethod
@@ -321,8 +274,6 @@ object Resample {
     * place of the linear map. */
   def bilinearTiled(layer: RasterLayer, srcN: Int, dstN: Int,
                     dstTile: Int = 64): RasterLayer = {
-    val tl = layer.meta.layout.tileLayout
-    val (tc, tr) = (tl.tileCols, tl.tileRows)
     require(dstN % dstTile == 0, "dst grid must tile evenly")
     val dstLc = dstN / dstTile
 
@@ -335,14 +286,7 @@ object Resample {
       val dMax = math.min(dstLc - 1, hi / dstTile)
       dMin to dMax
     }
-    def compute(dc: Int, dr: Int, src: Map[(Int, Int), Array[Double]]): Seq[Double] = {
-      def cell(x: Long, y: Long): Double = {
-        if (x < 0 || y < 0 || x >= srcN || y >= srcN) Double.NaN
-        else src.get(((x / tc).toInt, (y / tr).toInt)) match {
-          case Some(t) => t(((y % tr) * tc + (x % tc)).toInt)
-          case None    => Double.NaN
-        }
-      }
+    def compute(dc: Int, dr: Int, cell: TileExchange.Cells): Array[Double] = {
       val outTile = new Array[Double](dstTile * dstTile)
       var j = 0
       while (j < dstTile) {
@@ -365,11 +309,9 @@ object Resample {
         }
         j += 1
       }
-      outTile.toSeq
+      outTile
     }
 
-    gatherResample(layer, tc, tr, dstRange, compute,
-      LayerMetadata(LayoutDefinition(Extent(0, 0, dstN, dstN),
-        TileLayout(dstLc, dstLc, dstTile, dstTile)), temporal = layer.meta.temporal))
+    tiled(layer, srcN, dstN, dstTile, dstRange)(compute)
   }
 }

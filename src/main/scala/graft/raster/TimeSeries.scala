@@ -2,6 +2,9 @@ package graft.raster
 
 import org.apache.spark.sql.functions._
 
+private[raster] final case class TileRowOut(col: Int, row: Int, tile: Seq[Double])
+private[raster] final case class TileRowOutT(col: Int, row: Int, instant: Long, tile: Seq[Double])
+
 /** Per-cell time-series repair and smoothing over SPACETIME layers —
   * the gap-filled / smoothed composite steps of optical time-series
   * pipelines (cloud-gap interpolation, temporal denoise; the
@@ -170,7 +173,7 @@ object TimeSeries {
             else (vs(vs.length / 2 - 1) + vs(vs.length / 2)) / 2.0
           }
         }
-        graft.raster.TileRowOut(key._1, key._2, tile.toSeq)
+        TileRowOut(key._1, key._2, tile.toSeq)
       }
     new RasterLayer(out.toDF(), layer.meta.copy(temporal = false))
   }
@@ -207,7 +210,7 @@ object TimeSeries {
             else vs(lo) + (h - lo) * (vs(lo + 1) - vs(lo))
           }
         }
-        graft.raster.TileRowOut(key._1, key._2, tile.toSeq)
+        TileRowOut(key._1, key._2, tile.toSeq)
       }
     new RasterLayer(out.toDF(), layer.meta.copy(temporal = false))
   }
